@@ -386,7 +386,7 @@ def test_bounded_input_guard_rejects_large_frames(spark):
 
 
 def _per_task_output_rows(pairs):
-    """Exact pair-output rows per join task: chunked_self_pairs /
+    """Exact pair-output rows per join task: bucket_pairs /
     simhash_near_pairs end in a select over the pinned chunk-pair
     join with no further exchange, so spark_partition_id() on the
     result IS the generating task."""
@@ -409,13 +409,13 @@ def test_chunk_subsplit_bounds_hot_bucket_task_width(spark):
     expected chunk-pairs-per-task packing); the no-split control
     exceeds that bound by an order of magnitude because the whole
     clique's pairs erupt from single tasks."""
-    from welearn_datastack_spark.operators.dedup import chunked_self_pairs
+    from welearn_datastack_spark.operators.dedup import bucket_pairs
 
     n, chunk_target = 2000, 100
     df = spark.range(n).selectExpr(
         "CAST(0 AS INT) AS bucket", "id AS doc_id", "id % 7 AS payload"
     )
-    split = chunked_self_pairs(
+    split = bucket_pairs(
         df, ["bucket"], "doc_id", ["payload"], chunk_target=chunk_target
     )
     widths = _per_task_output_rows(split)
@@ -435,7 +435,7 @@ def test_chunk_subsplit_bounds_hot_bucket_task_width(spark):
     # no-split control: chunk_target >= bucket size -> s=1, the whole
     # clique's pair generation lands on single tasks and blows the
     # same bound
-    control = chunked_self_pairs(
+    control = bucket_pairs(
         df, ["bucket"], "doc_id", ["payload"], chunk_target=n
     )
     ctrl_widths = _per_task_output_rows(control)

@@ -77,7 +77,7 @@ def test_jaccard_guard_sample_branch_bounds_and_subsets(spark):
 
 
 def test_jaccard_passthrough_and_chunk_invariance(spark):
-    """Under budget the guard is a no-op (same pairs as guard=False),
+    """Under budget the guard is a no-op (same pairs as mode 'off'),
     and the chunk sub-split never changes the pair set — the rewrite
     off the collect_list idiom is output-invariant."""
     docs = spark.createDataFrame(
@@ -92,7 +92,7 @@ def test_jaccard_passthrough_and_chunk_invariance(spark):
             for r in jaccard_pairs(sh, "doc_id", threshold=0.05, **kw).collect()
         )
 
-    base = pairs(guard=False)
+    base = pairs(guard_mode="off")
     assert base
     assert pairs() == base
     assert pairs(chunk_target=2) == base  # forced multi-chunk splits

@@ -37,8 +37,8 @@ def _chunk_split_markers(plan: str) -> bool:
 
 def test_jaccard_adaptive_takes_direct_plan_when_buckets_small(spark):
     """30 docs, every shingle bucket well under chunk_target → the
-    probe's max-bucket certificate selects direct_self_pairs (no
-    chunk-split scaffolding in the plan), while a chunk_target BELOW
+    probe's max-bucket certificate selects bucket_pairs' un-split
+    join (no chunk-split scaffolding in the plan), while a chunk_target BELOW
     the max bucket re-engages the sub-split — with identical pairs."""
     docs = spark.createDataFrame(
         [(i, f"w{i % 5} common tail tokens here {i % 3}") for i in range(30)],
@@ -56,7 +56,7 @@ def test_jaccard_adaptive_takes_direct_plan_when_buckets_small(spark):
     assert _chunk_split_markers(splan)
 
     # unguarded calls have no certificate → always the safe sub-split
-    unguarded = jaccard_pairs(sh, "doc_id", threshold=0.05, guard=False)
+    unguarded = jaccard_pairs(sh, "doc_id", threshold=0.05, guard_mode="off")
     uplan = unguarded._jdf.queryExecution().executedPlan().toString()
     assert _chunk_split_markers(uplan)
 
@@ -282,22 +282,20 @@ def test_sampled_variant_still_samples_under_its_own_mode(spark, sf_dir):
         spark.conf.unset("spark.welearn.pairGuard.mode")
 
 
-# --- direct vs chunked pair-join equivalence, property-tested --------
+# --- un-split vs chunk-split pair-join equivalence, property-tested --
 
 
 def test_direct_and_chunked_self_pairs_equivalent_property(spark):
-    """For ANY bucket assignment and payload, direct_self_pairs and
-    chunked_self_pairs (at several chunk targets, including 1 — every
-    member its own chunk) must emit the identical unordered pair set
-    with identically aligned payloads. Deterministic pseudo-random
-    fixtures spanning the shapes that matter: singleton buckets, one
-    mega bucket, many mid buckets."""
+    """For ANY bucket assignment and payload, bucket_pairs' un-split
+    join (a max_bucket certificate that fits the chunk target) and its
+    chunk split (no certificate, at several chunk targets, including 1
+    — every member its own chunk) must emit the identical unordered
+    pair set with identically aligned payloads. Deterministic
+    pseudo-random fixtures spanning the shapes that matter: singleton
+    buckets, one mega bucket, many mid buckets."""
     import random as _r
 
-    from welearn_datastack_spark.operators.dedup import (
-        chunked_self_pairs,
-        direct_self_pairs,
-    )
+    from welearn_datastack_spark.operators.dedup import bucket_pairs
 
     rng = _r.Random(1407)
     for trial in range(3):
@@ -314,8 +312,8 @@ def test_direct_and_chunked_self_pairs_equivalent_property(spark):
                 for r in out.collect()
             )
 
-        base = canon(direct_self_pairs(df, ["bk"], "id", ["pl"]))
+        base = canon(bucket_pairs(df, ["bk"], "id", ["pl"], max_bucket=n))
         assert base and all(a < b for _, a, b, _, _ in base)
         for ct in (1, 3, 256):
-            got = canon(chunked_self_pairs(df, ["bk"], "id", ["pl"], chunk_target=ct))
+            got = canon(bucket_pairs(df, ["bk"], "id", ["pl"], chunk_target=ct))
             assert got == base, f"trial {trial}, chunk_target {ct}"

@@ -326,33 +326,3 @@ def test_memo_count_invalidates_on_rewrite(spark, tmp_path):
     spark.range(11).write.mode("overwrite").parquet(p)
     assert memo_count(spark.read.parquet(p)) == 11
     assert clear_count_memo() >= 1 and not _COUNT_MEMO
-
-
-def test_jaccard_pairs_pin_is_result_invariant(spark):
-    """r15 opt: jaccard_pairs(pin=True) localCheckpoints the sized
-    shingle frame before the pair join (one pipeline evaluation per
-    sink instead of one per join side). The pin is a pure lineage cut
-    — pair set, counts and similarities must be identical to the
-    un-pinned plan, on both the with_counts and threshold paths."""
-    from welearn_datastack_spark.operators.dedup import jaccard_pairs
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "the quick brown fox jumps over the lazy cat again and again"),
-        (3, "entirely different words compose this third document body here"),
-        (4, "the quick brown fox jumps over the lazy dog again and again"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    from welearn_datastack_spark.operators.dedup import word_shingles
-
-    sh = word_shingles(docs, "doc_id", "text", n=3)
-
-    def got(**kw):
-        return sorted(
-            tuple(r) for r in jaccard_pairs(sh, "doc_id", **kw).collect()
-        )
-
-    assert got(threshold=0.1, pin=True) == got(threshold=0.1, pin=False)
-    assert got(threshold=0.0, with_counts=True, pin=True) == got(
-        threshold=0.0, with_counts=True, pin=False
-    )

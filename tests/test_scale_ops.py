@@ -256,10 +256,11 @@ def test_strip_shared_spans_within_doc_tiebreak(spark):
 
 
 def test_chunked_self_pairs_exact_and_payload_aligned(spark):
-    """The generic sub-split pair generator must emit every unordered
-    within-bucket pair exactly once with a_id < b_id, payloads swapped
-    together with the ids, and split a hot bucket across chunk pairs."""
-    from welearn_datastack_spark.operators.dedup import chunked_self_pairs
+    """bucket_pairs' sub-split plan (no max_bucket certificate) must
+    emit every unordered within-bucket pair exactly once with
+    a_id < b_id, payloads swapped together with the ids, and split a
+    hot bucket across chunk pairs."""
+    from welearn_datastack_spark.operators.dedup import bucket_pairs
 
     n, ct = 120, 16
     df = spark.range(n).select(
@@ -267,7 +268,7 @@ def test_chunked_self_pairs_exact_and_payload_aligned(spark):
         (F.col("id") % 3).alias("bkt"),          # 3 buckets of 40
         (F.col("id") * 10).alias("payload"),     # payload derivable from id
     )
-    rows = chunked_self_pairs(df, ["bkt"], "vid", ["payload"], chunk_target=ct).collect()
+    rows = bucket_pairs(df, ["bkt"], "vid", ["payload"], chunk_target=ct).collect()
     per_bucket = n // 3
     assert len(rows) == 3 * per_bucket * (per_bucket - 1) // 2
     seen = set()
@@ -284,7 +285,7 @@ def test_chunked_self_pairs_exact_and_payload_aligned(spark):
     small = spark.range(10).select(
         F.col("id").alias("vid"), F.lit(0).alias("bkt"), F.col("id").alias("payload")
     )
-    srows = chunked_self_pairs(small, ["bkt"], "vid", ["payload"], chunk_target=256).collect()
+    srows = bucket_pairs(small, ["bkt"], "vid", ["payload"], chunk_target=256).collect()
     assert len(srows) == 45
 
 

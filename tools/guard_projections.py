@@ -89,7 +89,7 @@ def main() -> None:
     rows = []
 
     # 1. minhash candidates (quadratic pair model): worst case =
-    #    n_bands * C(n, 2) pairs (the hint minhash_lsh_hashed_q passes)
+    #    n_bands * C(n, 2) pairs (the hint the full-set minhash queries pass)
     bands = minhash_band_frame(docs, n_bands=4, rows_per_band=2)
     pairs, mh_max = _probe(bands, ["band", "band_key"], PAIRS())
     rows.append((

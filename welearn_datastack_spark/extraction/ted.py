@@ -99,7 +99,8 @@ def extract_ted(
     inline the CreateNamedStruct and the full expressions (notably
     ``predict_readability``'s three regex passes over the transcript)
     would be evaluated and discarded. Default ``None`` computes every
-    field (the plugin contract)."""
+    field (the plugin contract). An unknown field name raises
+    ``ValueError`` rather than silently leaving every field NULL."""
     parsed = responses.select(
         F.from_json(F.col(payload_col), TED_RESPONSE_SCHEMA).alias("_p")
     )
@@ -153,12 +154,25 @@ def extract_ted(
         "readability": lambda: predict_readability(
             F.col("_content"), v["internalLanguageCode"]
         ),
-        "authors": lambda: F.array(
-            F.struct(v["presenterDisplayName"].alias("name"), F.lit("").alias("misc"))
+        # the declared (nullable) type, as the typed-NULL branch has it,
+        # so the details schema does not depend on details_fields; v is
+        # non-null wherever details is read (see `ok` below)
+        "authors": lambda: F.when(
+            v.isNotNull(),
+            F.array(
+                F.struct(v["presenterDisplayName"].alias("name"), F.lit("").alias("misc"))
+            ).cast(authors_type),
         ),
         "publication_date": lambda: pub_ts,
         "type": lambda: v["type"]["name"],
     }
+    if details_fields is not None:
+        unknown = sorted(set(details_fields) - set(field_exprs))
+        if unknown:
+            raise ValueError(
+                f"extract_ted: unknown details_fields {unknown}; "
+                f"known fields are {sorted(field_exprs)}"
+            )
     null_types = {
         "duration": T.StringType(),
         "readability": T.StringType(),

@@ -127,14 +127,9 @@ def jaccard_pairs(
     shingles: DataFrame,
     id_col: str,
     threshold: float,
-    round_digits: int = 6,
-    size_col: str | None = None,
     with_counts: bool = False,
     chunk_target: int = 256,
-    worst_case_pairs: int | None = None,
-    guard: bool = True,
     guard_mode: str | None = None,
-    pin: bool = False,
 ) -> DataFrame:
     """All document pairs sharing ≥1 shingle, with Jaccard similarity
     ≥ threshold. Output (a_id, b_id, jaccard), a_id < b_id.
@@ -145,27 +140,25 @@ def jaccard_pairs(
     arithmetic (the recall harness divides 10·common by union_sz with
     integer div, which no floating representation can perturb).
 
-    Threshold semantics: the similarity is ROUNDED to
-    ``round_digits`` first and the ``>=`` filter applies to the
-    rounded value, so a pair up to 5·10^-(round_digits+1) below the
-    threshold can be admitted. Deliberate: the rounded column is the
-    driver-hashed output, and filtering on the unrounded value would
-    let Spark and the SQL oracle disagree on pairs sitting exactly at
-    the rounding boundary.
+    Threshold semantics: the similarity is ROUNDED to 6 digits first
+    and the ``>=`` filter applies to the rounded value, so a pair up
+    to 5·10^-7 below the threshold can be admitted. Deliberate: the
+    rounded column is the hash-gated output, and filtering on the
+    unrounded value would let Spark and the SQL oracle disagree on
+    pairs sitting exactly at the rounding boundary.
 
     Pairs are generated per shingle bucket — shuffle on shingle, never
-    a cross product — via :func:`chunked_self_pairs` (the hot-bucket
-    sub-split; round 13, off the collect_list + array-combinations
-    idiom for the same reason :func:`lsh_candidates` moved in round
-    10: a boilerplate mega-bucket's |bucket|²/2 pair array inside ONE
-    task row buffer is an OOM bomb no disk budget catches). Compared
-    to the textbook 3-way self-join (a ⋈ b on shingle, then two joins
-    back to per-doc sizes) this evaluates the shingle pipeline once
-    (ReuseExchange dedups the two chunk sides' identical scans) and
-    replaces the two size joins with a carried payload column; pass
-    ``size_col`` if the size is already present, else it's recovered
-    with one per-doc window (exchange-free when the shingles are
-    clustered on the id, as word_shingles leaves them).
+    a cross product — by :func:`bucket_pairs` (round 13, off the
+    collect_list + array-combinations idiom for the same reason
+    :func:`lsh_candidates` moved in round 10: a boilerplate
+    mega-bucket's |bucket|²/2 pair array inside ONE task row buffer is
+    an OOM bomb no disk budget catches). Compared to the textbook
+    3-way self-join (a ⋈ b on shingle, then two joins back to per-doc
+    sizes) this evaluates the shingle pipeline once (ReuseExchange
+    dedups the two join sides' identical scans) and replaces the two
+    size joins with a carried payload column, recovered with one
+    per-doc window (exchange-free when the shingles are clustered on
+    the id, as word_shingles leaves them).
 
     GUARDED (round 13): the pair stream here IS shuffled (the
     pair-count groupBy), so disk exposure is the quadratic
@@ -175,76 +168,51 @@ def jaccard_pairs(
     (plans/q_dedup.py), which bounds the probe's own cost at roughly
     sf0.1 forever — that, not a worst-case formula, is their skip
     argument — and the probe-verdict memo (_PROBE_MEMO) makes repeat
-    builds of the same plan (bench warm passes) probe-free; library
-    callers on unbudgeted corpora get the full fail/sample doctrine
-    (pass ``worst_case_pairs`` when a free bound exists,
-    ``guard=False`` only when an outer guard already covers the same
-    buckets). ``guard_mode`` pins the guard's mode regardless of the
-    session conf — registered queries pass 'fail' because their DuckDB
-    oracles do not model member sampling (a global mode=sample would
-    silently break their hash parity; round-13 ADVICE).
+    builds of the same plan (bench warm passes) probe-free.
+    ``guard_mode`` pins the guard's mode regardless of the session
+    conf — registered queries pass 'fail' because their DuckDB oracles
+    do not model member sampling (a global mode=sample would silently
+    break their hash parity; round-13 ADVICE); 'off' skips the probe.
 
-    ADAPTIVE CHUNKING (round 14): the guard's probe measures every
-    bucket's count anyway, so its ``max_bucket`` is a free certificate
-    — when no shingle bucket exceeds ``chunk_target`` (and the sample
-    branch didn't engage), the pair join takes
-    :func:`direct_self_pairs` (the un-split plan: no count window, no
-    chunk explodes, no chunk-pair repartitions), because the
-    chunk-split would degenerate to s=1 everywhere and only pay its
-    scaffolding. One bucket over the target → the full
-    :func:`chunked_self_pairs` sub-split, exactly as round 13 shipped
-    it — the mega-bucket OOM-bomb path stays retired. Unguarded or
-    probe-skipped calls have no certificate and always chunk-split.
+    ADAPTIVE CHUNKING (round 14): the probe measures every bucket's
+    count anyway, so its ``max_bucket`` is a free certificate that
+    :func:`bucket_pairs` turns into the un-split join when no shingle
+    bucket exceeds ``chunk_target``. A skipped probe or the sample
+    branch leaves no certificate, and the pair join chunk-splits.
 
-    ``pin=True`` (r15 opt) localCheckpoints the sized shingle frame
-    before the pair join: the join's two sides diverge at their
-    projections, and when the planner broadcasts one side exchange
-    reuse cannot unify them — the measured sink plan carried the
-    caller's whole scan→shingle-explode→size-window pipeline TWICE
-    (once under the BroadcastExchange). Callers should pass it only
-    when the shingle frame is bounded (the registered queries are
-    row-budget-sampled to ≤ _JACCARD_DOC_BUDGET docs, so the pin is
-    a few MB at any corpus size); the guard still probes the
-    ORIGINAL frame first, so a parquet-backed caller's verdict memo
-    keeps working across warm passes."""
-    max_bucket = None
-    if guard:
-        # guard BEFORE the size window (bucket counts don't need sizes,
-        # so the probe plan is the bare shingle pipeline — measured
-        # ~0.55 s vs ~1.1 s for the window-carrying plan at sf0.1; the
-        # sample branch keeps whole documents either way, so per-doc
-        # sizes computed after the filter are the kept docs' true
-        # sizes).
-        shingles, gstats = pair_volume_guard(
-            shingles,
-            ["shingle"],
-            id_col,
-            bytes_per_pair=JACCARD_GUARD_BYTES_PER_PAIR,
-            worst_case_pairs=worst_case_pairs,
-            mode=guard_mode,
-            with_stats=True,
-        )
-        # the certificate only describes the probed (pre-sample) frame
-        if not gstats.sampled:
-            max_bucket = gstats.max_bucket
-    if size_col is None:
-        shingles = shingles.withColumn(
-            "__sz", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-        )
-        size_col = "__sz"
-    if pin:
-        shingles = shingles.localCheckpoint(eager=True)
-    if max_bucket is not None and max_bucket <= chunk_target:
-        paired = direct_self_pairs(shingles, ["shingle"], id_col, [size_col])
-    else:
-        paired = chunked_self_pairs(
-            shingles, ["shingle"], id_col, [size_col], chunk_target=chunk_target
-        )
+    NOT pinned (r15, measured): localCheckpointing the sized shingle
+    frame halves the sink's compute, but the checkpoint job lost on
+    wall to the plan whose duplicated subtrees run concurrently on
+    idle cores (control 1.15×)."""
+    # guard BEFORE the size window (bucket counts don't need sizes, so
+    # the probe plan is the bare shingle pipeline — measured ~0.55 s vs
+    # ~1.1 s for the window-carrying plan at sf0.1; the sample branch
+    # keeps whole documents either way, so per-doc sizes computed
+    # after the filter are the kept docs' true sizes)
+    shingles, gstats = pair_volume_guard(
+        shingles,
+        ["shingle"],
+        id_col,
+        bytes_per_pair=JACCARD_GUARD_BYTES_PER_PAIR,
+        mode=guard_mode,
+        with_stats=True,
+    )
+    sized = shingles.withColumn(
+        "__sz", F.count(F.lit(1)).over(Window.partitionBy(id_col))
+    )
+    paired = bucket_pairs(
+        sized,
+        ["shingle"],
+        id_col,
+        ["__sz"],
+        max_bucket=gstats.certified_max_bucket,
+        chunk_target=chunk_target,
+    )
     pairs = paired.select(
         "a_id",
         "b_id",
-        F.col(f"a_{size_col}").alias("sa"),
-        F.col(f"b_{size_col}").alias("sb"),
+        F.col("a___sz").alias("sa"),
+        F.col("b___sz").alias("sb"),
     )
     counted = pairs.groupBy("a_id", "b_id", "sa", "sb").agg(
         F.count(F.lit(1)).alias("common")
@@ -261,7 +229,7 @@ def jaccard_pairs(
             "a_id",
             "b_id",
             F.round(
-                F.col("common") / (F.col("sa") + F.col("sb") - F.col("common")), round_digits
+                F.col("common") / (F.col("sa") + F.col("sb") - F.col("common")), 6
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -378,16 +346,11 @@ class PairVolumeExceeded(RuntimeError):
 
 
 def _pair_guard_mode(spark, mode: str | None) -> str:
-    """fail | sample | off — explicit arg, else session conf, else env,
-    else 'fail' (a diagnostic either produces the exact pair set or
-    says precisely why it will not)."""
-    import os
-
+    """fail | sample | off — explicit arg, else session conf, else
+    'fail' (a diagnostic either produces the exact pair set or says
+    precisely why it will not)."""
     if mode is None:
-        mode = spark.conf.get(
-            "spark.welearn.pairGuard.mode",
-            os.environ.get("SPARK_GRAFT_PAIR_GUARD", "fail"),
-        )
+        mode = spark.conf.get("spark.welearn.pairGuard.mode", "fail")
     mode = (mode or "fail").lower()
     if mode not in ("fail", "sample", "off"):
         raise ValueError(f"pair_volume_guard: unknown mode {mode!r}")
@@ -396,20 +359,16 @@ def _pair_guard_mode(spark, mode: str | None) -> str:
 
 def _pair_guard_budget(spark, budget_bytes: int | None) -> int:
     """Disk budget for materialized pair output: explicit arg, else
-    session conf / env (size strings: '40g'), else HALF the free space
-    on the shuffle-spill volume (spark.local.dir) — the shuffle write
-    is what actually fills the disk."""
-    import os
+    session conf (size strings: '40g'), else HALF the free space on
+    the shuffle-spill volume (spark.local.dir) — the shuffle write is
+    what actually fills the disk."""
     import shutil
 
     from ..sources.tables import _size_to_bytes
 
     if budget_bytes is not None:
         return int(budget_bytes)
-    conf = spark.conf.get(
-        "spark.welearn.pairGuard.budget",
-        os.environ.get("SPARK_GRAFT_PAIR_BUDGET", ""),
-    )
+    conf = spark.conf.get("spark.welearn.pairGuard.budget", "")
     if conf:
         return _size_to_bytes(conf)
     local_dir = spark.sparkContext.getConf().get("spark.local.dir", "/tmp")
@@ -521,8 +480,8 @@ def release_guard_caches() -> int:
 class GuardStats:
     """What one volume-guard evaluation measured and decided — returned
     alongside the frame with ``with_stats=True`` so callers can make
-    plan choices on the probe's evidence (e.g. :func:`jaccard_pairs`
-    takes the un-split pair join when ``max_bucket`` certifies no
+    plan choices on the probe's evidence (e.g. :func:`bucket_pairs`
+    takes the un-split pair join when ``certified_max_bucket`` shows no
     bucket exceeds its chunk target). ``max_bucket``/``units`` are
     None when the probe never ran (mode='off', or the worst-case hint
     fit the budget); ``sampled`` marks the member-sampling branch, in
@@ -543,6 +502,14 @@ class GuardStats:
         self.sampled = sampled
         self.keep = keep
         self.memo_hit = memo_hit
+
+    @property
+    def certified_max_bucket(self) -> int | None:
+        """``max_bucket`` when it describes the frame the guard
+        returned — the certificate :func:`bucket_pairs` takes — else
+        None (probe skipped, or the sample branch filtered the frame
+        after measuring it)."""
+        return None if self.sampled else self.max_bucket
 
 
 def _volume_guard(
@@ -814,11 +781,12 @@ def replicated_volume_guard(
     payloads must override: semantic dedup passes 320 for its
     64-float embedding column.)
 
-    `chunked_self_pairs`/`simhash_near_pairs` generate each bucket's
-    pairs IN-TASK after the shuffle and either dedup them by
-    construction (first-band emission) or stream them straight into a
-    selective filter, so Σ C(c,2)·12 B — the right projection for ops
-    whose candidate stream IS shuffled (the minhash dropDuplicates,
+    The chunk-split :func:`bucket_pairs` callers (simhash, semantic
+    and embedding-LSH dedup) generate each bucket's pairs IN-TASK after
+    the shuffle and either dedup them by construction (first-band
+    emission) or stream them straight into a selective ``keep``, so
+    Σ C(c,2)·12 B — the right projection for ops whose candidate
+    stream IS shuffled (the minhash dropDuplicates,
     jaccard's pair-count groupBy) — overstates their disk exposure by
     the chunk factor (measured round 12: the sf3 simhash probe
     projected 182.5 GB of "pairs" while the real run writes ~3 GB and
@@ -868,41 +836,44 @@ def replicated_volume_guard(
     return out if with_stats else out[0]
 
 
+def _pin_unless_cached(df: DataFrame) -> DataFrame:
+    """localCheckpoint ``df`` unless it is already persisted — the r15
+    pin in front of the chunk-split pair join. The split's two sides
+    diverge at their explodes, so exchange reuse cannot unify them,
+    and when the planner broadcasts one side the measured sink plan
+    carried the caller's whole upstream pipeline (shingle→minhash→band,
+    tokenize→per-bit agg→fingerprint→band) TWICE. The pin is linear in
+    the bucketed rows at any scale. An input a guard already persisted
+    (persist_on_probe — CacheManager matches the plan even on a
+    sibling query's fresh build) is NOT re-pinned: both sides read the
+    InMemoryRelation directly, which already dedups the upstream
+    compute and keeps the round-13 sibling-cache-hit plan shape
+    (test_sampled_cache_feeds_sibling_plan) intact. Jaccard does not
+    pin (see :func:`jaccard_pairs`)."""
+    sl = df.storageLevel
+    if sl.useMemory or sl.useDisk:
+        return df
+    return df.localCheckpoint(eager=True)
+
+
 def lsh_candidates(band_keys: DataFrame, id_col: str) -> DataFrame:
     """Distinct candidate pairs sharing any band key. Output
     (a_id, b_id), a_id < b_id.
 
-    Built on :func:`chunked_self_pairs` (the hot-bucket sub-split),
-    NOT the collect_list + array-combinations idiom this function
-    used through round 9: that idiom materializes a bucket's full
-    |bucket|²/2 pair array inside ONE task row buffer, which is an
+    Built on :func:`bucket_pairs` (chunk-split — no guard certificate
+    here), NOT the collect_list + array-combinations idiom this
+    function used through round 9: that idiom materializes a bucket's
+    full |bucket|²/2 pair array inside ONE task row buffer, which is an
     OOM bomb on a boilerplate mega-bucket — the sf10→sf30 audit
     measured the minhash pair stage at 22× wall for 3× data as hot
-    buckets crossed the single-task threshold (SCALE.md §20). With
-    the sub-split, per-task pair generation is ≤ ~chunk_target²
-    regardless of bucket size, the same bound the simhash band path
-    has carried since round 7; pairs sharing several bands are
-    deduplicated exactly as before. The pair SET is identical — the
+    buckets crossed the single-task threshold (SCALE.md §20). With the
+    sub-split, per-task pair generation is ≤ ~chunk_target² regardless
+    of bucket size; pairs sharing several bands are deduplicated. The
     oracle gates (`minhash_lsh_candidates(_hashed)`,
-    `lsh_dedup_recall`) verify the rewrite unchanged.
-
-    The band frame is PINNED first (r15 opt): the chunk-split's two
-    sides diverge at their explodes, so exchange reuse cannot unify
-    them and the caller's whole shingle→minhash→band pipeline was
-    evaluated TWICE per sink (the measured plan carried two complete
-    copies, one under the chunk join's BroadcastExchange). The pin is
-    linear — |D|·n_bands narrow rows at any scale. An input a guard
-    already persisted (persist_on_probe — CacheManager matches the
-    plan even on a sibling query's fresh build) is NOT re-pinned:
-    both chunk-split sides read the InMemoryRelation directly, which
-    already dedups the upstream compute and keeps the round-13
-    sibling-cache-hit plan shape (test_sampled_cache_feeds_sibling_
-    plan) intact."""
-    sl = band_keys.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        band_keys = band_keys.localCheckpoint(eager=True)
-    pairs = chunked_self_pairs(
-        band_keys, ["band", "band_key"], id_col, payload_cols=[]
+    `lsh_dedup_recall`) verify the pair set. The band frame is pinned
+    first (:func:`_pin_unless_cached`)."""
+    pairs = bucket_pairs(
+        _pin_unless_cached(band_keys), ["band", "band_key"], id_col, []
     )
     return pairs.select("a_id", "b_id").dropDuplicates(["a_id", "b_id"])
 
@@ -1042,115 +1013,131 @@ def incremental_near_dup_ids(
 def chunk_assignment(id_col, n_chunks) -> Column:
     """The sub-split chunk id for a bucket member: a deterministic
     hash of the id modulo the bucket's chunk count. Shared by
-    :func:`simhash_near_pairs` and its width-bound test so the test
-    keeps describing the real plan if the split formula changes."""
+    :func:`bucket_pairs` and its width-bound test so the test keeps
+    describing the real plan if the split formula changes."""
     ident = F.col(id_col) if isinstance(id_col, str) else id_col
     n = F.lit(n_chunks) if isinstance(n_chunks, int) else n_chunks
     return F.pmod(F.xxhash64(ident), n).cast("int")
 
 
-def direct_self_pairs(
-    df: DataFrame,
+def bucket_pairs(
+    bucketed: DataFrame,
     bucket_cols: list[str],
     id_col: str,
     payload_cols: list[str],
-) -> DataFrame:
-    """All unordered within-bucket pairs via the plain (un-split)
-    bucket self-join — the cheap plan, safe ONLY when something has
-    certified that no bucket is large enough to matter (the volume
-    guard's probe measures exactly that as ``GuardStats.max_bucket``).
-    Same output contract as :func:`chunked_self_pairs` — one row per
-    unordered pair, ``a_id < b_id``, payloads as ``a_p``/``b_p``, the
-    bucket columns carried — and pair orientation is by id on every
-    pair, so payload alignment is trivial.
-
-    vs the chunk-split plan this drops the per-bucket count window,
-    the two chunk-id explodes, and the two chunk-pair repartitions
-    (round-14: the round-13 jaccard rewrite's +19–43% toy-SF cost,
-    reclaimed whenever the probe proves the corpus has no hot
-    bucket). The bucket distribution is still pinned with an explicit
-    repartition — the join INPUT is small but its OUTPUT is the pair
-    stream, the shape AQE's size-based coalescing mis-reads — and
-    both join sides project off the SAME repartitioned frame, so
-    ReuseExchange feeds the join from one shuffle."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(par, *bucket_cols)
-    a = df.select(
-        *bucket_cols,
-        F.col(id_col).alias("a_id"),
-        *[F.col(p).alias(f"a_{p}") for p in payload_cols],
-    )
-    b = df.select(
-        *bucket_cols,
-        F.col(id_col).alias("b_id"),
-        *[F.col(p).alias(f"b_{p}") for p in payload_cols],
-    )
-    return a.join(b, on=list(bucket_cols)).filter(F.col("a_id") < F.col("b_id"))
-
-
-def chunked_self_pairs(
-    df: DataFrame,
-    bucket_cols: list[str],
-    id_col: str,
-    payload_cols: list[str],
+    *,
+    keep=None,
+    max_bucket: int | None = None,
     chunk_target: int = 256,
 ) -> DataFrame:
-    """All unordered within-bucket pairs, generated with the
-    hot-bucket sub-split so no single task ever materializes a
-    mega-bucket's |bucket|² pairs — the generalization of
-    :func:`simhash_near_pairs`' chunk-pair join for ANY bucketed
-    self-pairing (LSH embedding buckets, semantic-dedup clusters).
+    """All unordered within-bucket pairs that pass ``keep`` — the one
+    bucket self-pair kernel under the near-dup family (n-gram Jaccard,
+    MinHash-LSH candidates, SimHash, semantic and embedding-LSH dedup).
 
-    Each bucket of size bs splits into ``s = ceil(bs/chunk_target)``
-    chunks by :func:`chunk_assignment`; the join runs per chunk pair
-    (ci ≤ cj) so every unordered pair meets exactly once and per-task
-    pair generation is ≤ ~chunk_target² regardless of bucket size.
-    Replication is s+1 rows per member. Buckets at or under
-    chunk_target get s=1 — exactly the un-split single-join plan.
+    Output: one row per unordered pair with ``a_id < b_id``, the bucket
+    columns, and for every payload column p ``a_p`` / ``b_p`` aligned
+    to that orientation.
+
+    Two plans, one contract:
+
+    - ``max_bucket`` ≤ ``chunk_target`` — a volume guard's certificate
+      (:attr:`GuardStats.certified_max_bucket`) that no bucket is large
+      enough to matter: the plain bucket self-join. No count window,
+      no chunk explodes, no chunk-pair repartitions (round 14: the
+      chunk split's +19–43% toy-SF cost, reclaimed whenever the probe
+      proves the corpus has no hot bucket).
+    - otherwise (no certificate, or a bucket over the target): the
+      hot-bucket sub-split. Each bucket of size bs splits into
+      ``s = ceil(bs/chunk_target)`` chunks by :func:`chunk_assignment`;
+      a member of chunk c enters the left side for every partner chunk
+      cj ≥ c and the right side for every ci ≤ c, so every unordered
+      cross-chunk pair meets exactly once and the diagonal keeps the
+      id-order cut. Per-task pair generation is ≤ ~chunk_target²
+      regardless of bucket size; replication is s+1 rows per member
+      (≈ bs²/chunk_target per bucket — what
+      :func:`replicated_volume_guard` gates). Buckets at or under the
+      target get s=1.
+
+    ``keep(x, y)`` is an optional SYMMETRIC verify predicate over the
+    two raw join sides: ``x(p)`` / ``y(p)`` return side x's / y's
+    column for payload p, and the bucket columns are in scope by name.
+    It runs BEFORE the pair is oriented — on plain column references,
+    not on the swapped a_/b_ projections — so a selective verify
+    (hamming cut, cosine threshold) is evaluated once per candidate and
+    only survivors pay the orientation (measured at sf0.1 on 4 vCPUs:
+    verifying SimHash after orientation cost +18% wall, before it
+    nothing measurable).
+    Symmetric means keep(x, y) == keep(y, x): a pair may meet in
+    either order.
+
     Both the bucket and the chunk-pair distributions are pinned with
     explicit repartitions: the join INPUT is small in bytes but its
     OUTPUT is the near-quadratic pair stream, the shape AQE's
-    size-based coalescing mis-reads onto one core.
-
-    Output: one row per unordered pair with ``a_id < b_id`` and, for
-    every payload column p, ``a_p`` / ``b_p`` aligned to that
-    orientation (cross-chunk pairs are produced in chunk order, so
-    ids AND payloads are swapped together where needed), plus the
-    bucket columns."""
+    size-based coalescing mis-reads onto one core (measured 5x on the
+    bench corpus; a user repartition is exempt from coalescing)."""
+    # with ANSI off, chunk_target=0 would make __s null and the
+    # explode(sequence(...)) silently drop every row — fail loudly
     assert chunk_target >= 1, "chunk_target must be a positive chunk size"
-    par = df.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(par, *bucket_cols)
-    w = Window.partitionBy(*bucket_cols)
-    chunked = df.withColumn(
-        "__s", F.ceil(F.count(F.lit(1)).over(w) / chunk_target).cast("int")
-    ).withColumn("__c", chunk_assignment(id_col, F.col("__s")))
-    a = chunked.select(
-        *bucket_cols,
-        F.col("__c").alias("ci"),
-        F.explode(F.sequence(F.col("__c"), F.col("__s") - 1)).alias("cj"),
-        F.col(id_col).alias("__x_id"),
-        *[F.col(p).alias(f"__x_{p}") for p in payload_cols],
-    ).repartition(par, *bucket_cols, "ci", "cj")
-    b = chunked.select(
-        *bucket_cols,
-        F.explode(F.sequence(F.lit(0), F.col("__c"))).alias("ci"),
-        F.col("__c").alias("cj"),
-        F.col(id_col).alias("__y_id"),
-        *[F.col(p).alias(f"__y_{p}") for p in payload_cols],
-    ).repartition(par, *bucket_cols, "ci", "cj")
-    joined = a.join(b, on=[*bucket_cols, "ci", "cj"]).filter(
-        # diagonal chunk pairs see both orderings — cut by id; a
-        # cross-chunk pair meets exactly once, oriented by chunk
-        (F.col("ci") < F.col("cj")) | (F.col("__x_id") < F.col("__y_id"))
-    )
-    fwd = F.col("__x_id") < F.col("__y_id")
+    par = bucketed.sparkSession.sparkContext.defaultParallelism
+    df = bucketed.repartition(par, *bucket_cols)
+
+    def x(p: str) -> Column:
+        return F.col(f"__x_{p}")
+
+    def y(p: str) -> Column:
+        return F.col(f"__y_{p}")
+
+    def side(tag: str, *chunk: Column) -> list:
+        return [
+            *bucket_cols,
+            *chunk,
+            F.col(id_col).alias(f"__{tag}id"),
+            *[F.col(p).alias(f"__{tag}_{p}") for p in payload_cols],
+        ]
+
+    xid, yid = F.col("__xid"), F.col("__yid")
+    if max_bucket is not None and max_bucket <= chunk_target:
+        # both sides project off the SAME repartitioned frame, so
+        # ReuseExchange feeds the join from one shuffle
+        joined = (
+            df.select(*side("x"))
+            .join(df.select(*side("y")), on=list(bucket_cols))
+            .filter(xid < yid)
+        )
+        fwd = None
+    else:
+        w = Window.partitionBy(*bucket_cols)
+        chunked = df.withColumn(
+            "__s", F.ceil(F.count(F.lit(1)).over(w) / chunk_target).cast("int")
+        ).withColumn("__c", chunk_assignment(id_col, F.col("__s")))
+        chunk, n_chunks = F.col("__c"), F.col("__s")
+        a = chunked.select(
+            *side("x", chunk.alias("ci"),
+                  F.explode(F.sequence(chunk, n_chunks - 1)).alias("cj"))
+        ).repartition(par, *bucket_cols, "ci", "cj")
+        b = chunked.select(
+            *side("y", F.explode(F.sequence(F.lit(0), chunk)).alias("ci"),
+                  chunk.alias("cj"))
+        ).repartition(par, *bucket_cols, "ci", "cj")
+        joined = a.join(b, on=[*bucket_cols, "ci", "cj"]).filter(
+            # diagonal chunk pairs see both orderings — cut by id; a
+            # cross-chunk pair meets exactly once, oriented by chunk
+            (F.col("ci") < F.col("cj")) | (xid < yid)
+        )
+        fwd = xid < yid
+    if keep is not None:
+        joined = joined.filter(keep(x, y))
+
+    def oriented(first: Column, second: Column) -> Column:
+        return first if fwd is None else F.when(fwd, first).otherwise(second)
+
     out = [F.col(c) for c in bucket_cols] + [
-        F.when(fwd, F.col("__x_id")).otherwise(F.col("__y_id")).alias("a_id"),
-        F.when(fwd, F.col("__y_id")).otherwise(F.col("__x_id")).alias("b_id"),
+        oriented(xid, yid).alias("a_id"),
+        oriented(yid, xid).alias("b_id"),
     ]
     for p in payload_cols:
-        out.append(F.when(fwd, F.col(f"__x_{p}")).otherwise(F.col(f"__y_{p}")).alias(f"a_{p}"))
-        out.append(F.when(fwd, F.col(f"__y_{p}")).otherwise(F.col(f"__x_{p}")).alias(f"b_{p}"))
+        out.append(oriented(x(p), y(p)).alias(f"a_{p}"))
+        out.append(oriented(y(p), x(p)).alias(f"b_{p}"))
     return joined.select(*out)
 
 
@@ -1162,7 +1149,7 @@ def simhash_band_frame(
     one row per (doc, band), band_key = that band's bit slice. Shared
     with tools/guard_projections.py so the projection tool measures
     the SAME bucket frame the guard gates (the drift hazard
-    minhash_band_frame closed for pair_probe)."""
+    minhash_band_frame closes for the minhash row)."""
     width = bits // n_bands
     mask = (1 << width) - 1
     return fingerprints.select(
@@ -1196,42 +1183,20 @@ def simhash_near_pairs(
     ``max_hamming < n_bands``. Output (a_id, b_id, hamming), a_id <
     b_id.
 
-    Hot-bucket sub-splitting: on a boilerplate-heavy corpus one band
-    value can hold millions of documents, and a plain bucket join
-    would generate that bucket's |bucket|² pairs in ONE task. Instead
-    each bucket of size bs is split into ``s = ceil(bs/chunk_target)``
-    chunks by a hash of the id, and the join runs per CHUNK PAIR
-    (ci ≤ cj): a member of chunk c enters the left side for every
-    partner chunk cj ≥ c and the right side for every ci ≤ c, so each
-    unordered cross-chunk pair meets exactly once (at ci=min, cj=max)
-    and the diagonal ci=cj keeps the id-order cut. Per-task pair
-    generation is then ≤ ~chunk_target² regardless of bucket size.
-    Replication cost is s+1 rows per member — linear in s per member,
-    but ≈ bs²/chunk_target per bucket in total (a ~2/chunk_target
-    fraction of that bucket's pair output), which matters when sizing
-    shuffle capacity for multi-million-row hot buckets. Buckets at or
-    under chunk_target get s=1, i.e. exactly the un-split plan.
-
-    A qualifying pair shares every band where its XOR's band value is
-    zero — emitting it only from the FIRST such band makes each pair
+    Pairs come from :func:`bucket_pairs` over the (band, band_key)
+    buckets — the hot-bucket sub-split unless the guard certifies no
+    bucket exceeds ``chunk_target`` — with two ``keep`` filters on the
+    raw join sides: the hamming cut, and FIRST-SHARED-BAND emission. A
+    qualifying pair shares every band where its XOR's band value is
+    zero; emitting it only from the first such band makes each pair
     globally unique by construction, so no dropDuplicates re-shuffle
-    of the (large, near-quadratic) pair stream is needed, and the
-    hamming cut is applied inside the join before anything else
-    moves."""
+    of the (large, near-quadratic) pair stream is needed."""
     assert max_hamming < n_bands, "banding is only exact for max_hamming < n_bands"
-    # with ANSI off, chunk_target=0 would make __s null and the
-    # explode(sequence(...)) silently drop every row — fail loudly
+    # checked before the guard, whose replicated-row model divides by it
     assert chunk_target >= 1, "chunk_target must be a positive chunk size"
     width = bits // n_bands
     mask = (1 << width) - 1
     banded = simhash_band_frame(fingerprints, id_col, bits=bits, n_bands=n_bands)
-    # The join INPUT is tiny in bytes but its OUTPUT is the near-
-    # quadratic pair stream — exactly the shape AQE's size-based
-    # partition coalescing mis-reads (it sees KBs of shuffle data and
-    # folds the CPU-heavy pair generation onto one core; measured 5x
-    # on the bench corpus). A user repartition is exempt from AQE
-    # coalescing, so pin the bucket distribution explicitly. The
-    # window below reuses this clustering (no extra exchange).
     # Pre-flight disk gate with the CHUNK-SPLIT cost model (NOT the
     # quadratic pair model): simhash pairs are generated in-task after
     # the shuffle and deduped by first-band emission, so the disk
@@ -1249,7 +1214,7 @@ def simhash_near_pairs(
         if n_docs is None
         else n_bands * n_docs * (-(-n_docs // chunk_target) + 1)
     )
-    banded = replicated_volume_guard(
+    banded, gstats = replicated_volume_guard(
         banded,
         ["band", "band_key"],
         id_col,
@@ -1262,73 +1227,33 @@ def simhash_near_pairs(
         # note — guarded builders launch the probe job at build time)
         persist_on_probe=True,
         mode=guard_mode,
+        with_stats=True,
     )
-    # pin the banded frame before the chunk-split (r15 opt, same
-    # rationale as lsh_candidates): the split's two sides diverge at
-    # their explodes, and when the planner broadcasts one side the
-    # measured sink plan carried the whole scan→tokenize→per-bit-agg→
-    # fingerprint→band pipeline TWICE. The pin is linear — n_bands·|D|
-    # narrow rows at any scale. A guard-persisted input (probe ran at
-    # high SF) is already shared through the CacheManager and is NOT
-    # re-pinned, preserving the probe/run computation-sharing shape.
-    sl = banded.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        banded = banded.localCheckpoint(eager=True)
-    par = fingerprints.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(par, "band", "band_key")
-    bucket_w = Window.partitionBy("band", "band_key")
-    chunked = (
-        banded.withColumn(
-            "__s",
-            F.ceil(F.count(F.lit(1)).over(bucket_w) / chunk_target).cast("int"),
-        )
-        # chunk id: any deterministic hash of the id works (never
-        # surfaced in the output, so no oracle-parity constraint) —
-        # xxhash64 is the cheap builtin
-        .withColumn("__c", chunk_assignment(id_col, F.col("__s")))
-    )
-    a = chunked.select(
-        "band",
-        "band_key",
-        F.col("__c").alias("ci"),
-        F.explode(F.sequence(F.col("__c"), F.col("__s") - 1)).alias("cj"),
-        F.col(id_col).alias("a_id"),
-        F.col("simhash").alias("ha"),
-    )
-    b = chunked.select(
-        "band",
-        "band_key",
-        F.explode(F.sequence(F.lit(0), F.col("__c"))).alias("ci"),
-        F.col("__c").alias("cj"),
-        F.col(id_col).alias("b_id"),
-        F.col("simhash").alias("hb"),
-    )
-    # pin the chunk-pair distribution the same way as the bucket one
-    a = a.repartition(par, "band", "band_key", "ci", "cj")
-    b = b.repartition(par, "band", "band_key", "ci", "cj")
-    return (
-        a.join(b, on=["band", "band_key", "ci", "cj"])
-        # diagonal chunk pairs see both orderings — cut by id; a
-        # cross-chunk pair meets exactly once, in whichever order the
-        # two chunk ids impose, so normalize with least/greatest below
-        .filter((F.col("ci") < F.col("cj")) | (F.col("a_id") < F.col("b_id")))
-        .withColumn("x", F.col("ha").bitwiseXOR(F.col("hb")))
-        .withColumn("hamming", F.bit_count("x"))
-        .filter(F.col("hamming") <= max_hamming)
-        .filter(
-            # no earlier band bb < band also has a zero band value
-            # (sequence(0, band-1) would go DESCENDING for band=0,
-            # so range over all bands and gate on bb >= band instead)
-            F.expr(
-                f"forall(sequence(0, {n_bands - 1}),"
-                f" bb -> bb >= band OR (shiftright(x, bb * {width}) & {mask}) != 0)"
+
+    def keep(x, y):
+        xor = x("simhash").bitwiseXOR(y("simhash"))
+        near = F.bit_count(xor) <= max_hamming
+        # no earlier band bb < band also has a zero band value
+        for bb in range(n_bands - 1):
+            near = near & (
+                (F.col("band") <= bb)
+                | (F.shiftright(xor, bb * width).bitwiseAND(mask) != 0)
             )
-        )
-        .select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-            "hamming",
-        )
+        return near
+
+    pairs = bucket_pairs(
+        _pin_unless_cached(banded),
+        ["band", "band_key"],
+        id_col,
+        ["simhash"],
+        keep=keep,
+        max_bucket=gstats.certified_max_bucket,
+        chunk_target=chunk_target,
+    )
+    return pairs.select(
+        "a_id",
+        "b_id",
+        F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))).alias("hamming"),
     )
 
 

@@ -422,12 +422,15 @@ def apply_transitions(
     row and may stay lazy. Both frames read only batch-source files,
     never the state files being appended to, so the self-read hazard
     the admitted checkpoint guards against does not arise on this
-    path — PROVIDED ``decisions`` is already pinned (every in-repo
-    caller localCheckpoints the probe result first; an un-pinned
-    decisions frame would re-read the state store through the
+    path — PROVIDED ``decisions`` is already materialized. Every
+    in-repo caller passes either a localCheckpoint of the probe result
+    or a read of the decision files it has just written
+    (:func:`ingest_increment` does one or the other;
+    ``streaming.state_machine.stream_ingest_probe`` the read). A
+    lazy decisions frame would re-read the state store through the
     admitted-id semi-join exactly while the appends grow it, so the
     precomputed path requires the same pin the default path performs
-    itself)."""
+    itself."""
     new_ids = decisions.filter(F.col("state") == "new").select("doc_id")
     if batch_hashes is not None and batch_bands is not None:
         # the admitted count rides the (smaller) hash append as an

@@ -31,10 +31,10 @@ def minhash_band_frame(
     """The gated narrow-key minhash pipeline — trigram shingles →
     cross-engine hashed keys → minhash signatures → long band keys —
     exactly as `minhash_lsh_candidates_hashed` / `_sampled` run it.
-    Shared with tools/pair_probe.py so the probe tool measures the
-    SAME pipeline the queries gate (round-12 ADVICE: the tool
-    re-derived it with its own defaults, which would silently diverge
-    if the shingle width or banding parameters here moved)."""
+    Shared with tools/guard_projections.py so its minhash row measures
+    the SAME pipeline the queries gate (round-12 ADVICE: a tool that
+    re-derived it with its own defaults would silently diverge if the
+    shingle width or banding parameters here moved)."""
     sh = hashed_shingles(
         word_shingles(docs, "doc_id", "text", n=3), "doc_id", cross_engine=True
     )
@@ -193,9 +193,32 @@ def _sampled_baseline_docs(docs: DataFrame) -> tuple[DataFrame, int]:
     return docs, den
 
 
-@register(
+def _register_jaccard(name: str, hashed_keys: bool, doc: str) -> None:
+    """Register one exact n-gram Jaccard baseline: word-trigram
+    shingles of the row-budget doc sample, optionally xxhash64'd to
+    8-byte shuffle keys (:func:`hashed_shingles`) before the shingle
+    exchange. Both rows gate against the same string-keyed SQL: the
+    hashed keys leave per-doc sizes, bucket memberships and pair
+    counts unchanged."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs, den = _sampled_baseline_docs(_docs(spark, sf_dir))
+        sh = word_shingles(docs, "doc_id", "text", n=3)
+        if hashed_keys:
+            sh = hashed_shingles(sh, "doc_id")
+        # guard_mode pinned: this query's oracle does not model member
+        # sampling, so a session-level mode=sample must not apply here
+        return jaccard_pairs(
+            sh, "doc_id", threshold=0.15, guard_mode="fail"
+        ).withColumn("sample_den", F.lit(den).cast("int"))
+
+    build.__name__ = f"{name}_q"
+    register(name, _JACCARD_ORACLE, doc=doc)(build)
+
+
+_register_jaccard(
     "ngram_jaccard_pairs",
-    _JACCARD_ORACLE,
+    hashed_keys=False,
     doc="Dedup: word-trigram Jaccard near-dup pairs ≥ 0.15 (pairs "
     "generated per shingle bucket — equi-join, never cross product). "
     "ADJUDICATED QUADRATIC BASELINE — kept as the exact reference the "
@@ -205,23 +228,10 @@ def _sampled_baseline_docs(docs: DataFrame) -> tuple[DataFrame, int]:
     "twin and surfaced as the sample_den column), so the exact "
     "baseline can never accidentally dominate a corpus-scale run.",
 )
-def ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs, den = _sampled_baseline_docs(_docs(spark, sf_dir))
-    sh = word_shingles(docs, "doc_id", "text", n=3)
-    # guard_mode pinned: this query's oracle does not model member
-    # sampling, so a session-level mode=sample must not apply here.
-    # NOT pinned (r15 opt, measured): jaccard_pairs(pin=True) halves
-    # the sink's compute but serializes the pipeline into a checkpoint
-    # job the duplicated-parallel-stages plan beats on wall (control
-    # 1.15×) — the duplicate subtrees run concurrently on idle cores.
-    return jaccard_pairs(sh, "doc_id", threshold=0.15, guard_mode="fail").withColumn(
-        "sample_den", F.lit(den).cast("int")
-    )
 
-
-@register(
+_register_jaccard(
     "ngram_jaccard_pairs_hashed",
-    _JACCARD_ORACLE,
+    hashed_keys=True,
     doc="Hashed-shuffle-key variant of ngram_jaccard_pairs: shingle "
     "strings are xxhash64'd to 8-byte longs MAP-SIDE before the "
     "shingle-bucket exchange (operators/dedup.hashed_shingles) — a "
@@ -233,13 +243,6 @@ def ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "set (~2^-64 per pair). Same adjudicated-baseline row budget as "
     "the string variant (sample_den column).",
 )
-def ngram_jaccard_hashed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs, den = _sampled_baseline_docs(_docs(spark, sf_dir))
-    sh = hashed_shingles(word_shingles(docs, "doc_id", "text", n=3), "doc_id")
-    # guard_mode pinned: see ngram_jaccard_pairs (and its not-pinned note)
-    return jaccard_pairs(sh, "doc_id", threshold=0.15, guard_mode="fail").withColumn(
-        "sample_den", F.lit(den).cast("int")
-    )
 
 
 # Shared by the string-keyed LSH query and its narrow-key variant:
@@ -315,35 +318,66 @@ _MINHASH_SAMPLED_ORACLE = (
 )
 
 
-@register(
+def _register_minhash(
+    name: str, sql: str, narrow_keys: bool, sampled: bool, doc: str
+) -> None:
+    """Register one MinHash (8 perms) + LSH (4 bands × 2 rows)
+    candidate-pair query. ``narrow_keys`` takes the gated 8-byte-key
+    pipeline (:func:`minhash_band_frame`) instead of string shingles
+    and md5 band keys; ``sampled`` runs the pair-volume guard in
+    mode='sample' under a fixed tiny budget instead of the full-set
+    mode='fail' with its free worst-case hint."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = _docs(spark, sf_dir)
+        if narrow_keys:
+            bands = minhash_band_frame(docs, n_bands=4, rows_per_band=2)
+        else:
+            sh = word_shingles(docs, "doc_id", "text", n=3)
+            sigs = minhash_signatures(sh, "doc_id", n_hashes=8)
+            bands = lsh_band_keys(sigs, "doc_id", rows_per_band=2)
+        if sampled:
+            guard = dict(
+                budget_bytes=_SAMPLED_PAIR_BUDGET_BYTES, mode="sample",
+                # the probe ALWAYS executes here (600 B budget) — persist
+                # the band frame across probe + real run so the minhash
+                # pipeline is computed once, not twice (round-12 ADVICE)
+                persist_on_probe=True,
+            )
+        else:
+            guard = dict(
+                worst_case_pairs=_minhash_worst_case_pairs(docs, n_bands=4),
+                # pinned: this query's oracle is the FULL candidate set —
+                # a session-level mode=sample would silently break hash
+                # parity (the sampled doctrine lives in the _sampled row)
+                mode="fail",
+            )
+        bands = pair_volume_guard(bands, ["band", "band_key"], "doc_id", **guard)
+        return lsh_candidates(bands, "doc_id")
+
+    build.__name__ = f"{name}_q"
+    register(name, sql, doc=doc)(build)
+
+
+_register_minhash(
     "minhash_lsh_candidates",
     _MINHASH_LSH_ORACLE,
+    narrow_keys=False,
+    sampled=False,
     doc="Dedup: MinHash (8 perms) + LSH banding (4 bands × 2 rows) "
     "candidate pairs — shingle→minhash→band→bucket-join",
 )
-def minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    sh = word_shingles(docs, "doc_id", "text", n=3)
-    sigs = minhash_signatures(sh, "doc_id", n_hashes=8)
-    bands = lsh_band_keys(sigs, "doc_id", rows_per_band=2)
-    bands = pair_volume_guard(
-        bands, ["band", "band_key"], "doc_id",
-        worst_case_pairs=_minhash_worst_case_pairs(docs, n_bands=4),
-        # pinned: this query's oracle is the FULL candidate set — a
-        # session-level mode=sample would silently break hash parity
-        # (the sampled doctrine lives in minhash_lsh_candidates_sampled)
-        mode="fail",
-    )
-    return lsh_candidates(bands, "doc_id")
 
-
-@register(
+_register_minhash(
     "minhash_lsh_candidates_hashed",
-    _MINHASH_LSH_ORACLE,  # full hash gate: the hexint prehash feeds
-    # the SAME h31 the string-keyed path computes (pmod(hexint(s), p)
-    # == hexint(s) % p), so signatures are identical; band keys are an
-    # injective re-key and pairs depend only on key equality → the
-    # candidate set is bit-identical to the string-keyed query's.
+    # full hash gate: the hexint prehash feeds the SAME h31 the
+    # string-keyed path computes (pmod(hexint(s), p) == hexint(s) % p),
+    # so signatures are identical; band keys are an injective re-key
+    # and pairs depend only on key equality → the candidate set is
+    # bit-identical to the string-keyed query's.
+    _MINHASH_LSH_ORACLE,
+    narrow_keys=True,
+    sampled=False,
     doc="Narrow-shuffle-key variant of minhash_lsh_candidates: 8-byte "
     "longs replace shingle strings before the signature aggregation "
     "AND 8-byte band keys replace 32-char md5 strings in the "
@@ -354,23 +388,12 @@ def minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "widths, no md5 round — equivalence-tested against the string "
     "path in tests).",
 )
-def minhash_lsh_hashed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    bands = minhash_band_frame(docs, n_bands=4, rows_per_band=2)
-    bands = pair_volume_guard(
-        bands, ["band", "band_key"], "doc_id",
-        worst_case_pairs=_minhash_worst_case_pairs(docs, n_bands=4),
-        # pinned: this query's oracle is the FULL candidate set — a
-        # session-level mode=sample would silently break hash parity
-        # (the sampled doctrine lives in minhash_lsh_candidates_sampled)
-        mode="fail",
-    )
-    return lsh_candidates(bands, "doc_id")
 
-
-@register(
+_register_minhash(
     "minhash_lsh_candidates_sampled",
     _MINHASH_SAMPLED_ORACLE,
+    narrow_keys=True,
+    sampled=True,
     doc="The pair-volume guard's SAMPLE fallback as a first-class "
     "hash-gated query (round 12, closing the loop on the round-11 "
     "sf100 disk-death finding): the same minhash/banding pipeline as "
@@ -386,18 +409,6 @@ def minhash_lsh_hashed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a pair-materializing diagnostic takes on a collision-heavy "
     "corpus instead of dying on shuffle disk (SCALE.md §22.6, §23.1).",
 )
-def minhash_lsh_sampled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    bands = minhash_band_frame(docs, n_bands=4, rows_per_band=2)
-    bands = pair_volume_guard(
-        bands, ["band", "band_key"], "doc_id",
-        budget_bytes=_SAMPLED_PAIR_BUDGET_BYTES, mode="sample",
-        # the probe ALWAYS executes here (600 B budget) — persist the
-        # band frame across probe + real run so the minhash pipeline
-        # is computed once, not twice (round-12 ADVICE)
-        persist_on_probe=True,
-    )
-    return lsh_candidates(bands, "doc_id")
 
 
 @register(
@@ -502,8 +513,7 @@ def _register_recall(name: str, n_hashes: int, rows_per_band: int, doc: str) -> 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, den = _sampled_baseline_docs(_docs(spark, sf_dir))
         # NOT pinned (r15 opt, measured): checkpointing the shared
-        # shingle frame (and jaccard_pairs pin=True) halves the sink's
-        # aggregate compute but the checkpoint barrier + per-build
+        # shingle frame halves the sink's aggregate compute but the checkpoint barrier + per-build
         # probe job LOST on wall to the duplicated-parallel-stages
         # plan (control 1.28–1.42×) — on the row-budget sample the
         # duplicate subtrees run concurrently on idle cores.

@@ -1382,14 +1382,15 @@ from ..operators.similarity import plane_weight_sql, scaled_n_bits_sql  # noqa: 
     "derives the identical md5-parity planes in SQL), so expected "
     "bucket size — and therefore per-bucket pair work — stays "
     "constant while bucket count (= join parallelism) grows with the "
-    "corpus. Pair generation is the hot-bucket sub-split join "
-    "(operators/dedup.chunked_self_pairs): per-task pair output is "
+    "corpus. Pair generation is the bucket self-pair kernel "
+    "(operators/dedup.bucket_pairs): per-task pair output is "
     "bounded by chunk_target² even when real embeddings pile into a "
     "few dense buckets, the failure mode that made the fixed-plane "
-    "instance quadratic at sf1. Exact cosine confirms candidates.",
+    "instance quadratic at sf1, and the replicated-row disk guard "
+    "runs first. Exact cosine confirms candidates.",
 )
 def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import chunked_self_pairs
+    from ..operators.dedup import bucket_pairs, replicated_volume_guard
     from ..operators.similarity import cosine, scaled_n_bits
 
     # repartition BEFORE the plane-projection map: a small parquet
@@ -1402,19 +1403,43 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # taken on the BARE scan so the sizing job never pays the
     # repartition exchange) sizes the bucket geometry; everything
     # downstream is distributed
-    n_bits = scaled_n_bits(memo_count(base))
-    planes = derive_planes(seed=42, n_bits=n_bits, dims=_DIMS)
+    n = memo_count(base)
+    planes = derive_planes(seed=42, n_bits=scaled_n_bits(n), dims=_DIMS)
     tagged = emb.select(
         "vec_id", "embedding", bucket_key_col(F.col("embedding"), planes).alias("bucket")
     )
-    pairs = chunked_self_pairs(
-        tagged, ["bucket"], "vec_id", ["embedding"], chunk_target=256
+    # Pre-flight disk gate, set up exactly as semantic_dedup_flags':
+    # the replicated chunk-join input carries the 64-float payload
+    # (~320 B/row), and the everyone-in-one-bucket worst case
+    # n·(ceil(n/256)+1) rows is free from the sizing count — so up
+    # to sf0.1 at least the probe is skipped and costs nothing
+    tagged, gstats = replicated_volume_guard(
+        tagged,
+        ["bucket"],
+        "vec_id",
+        chunk_target=256,
+        bytes_per_row=320,
+        worst_case_rows=n * (-(-n // 256) + 1),
+        # pinned: the oracle does not model member sampling
+        mode="fail",
+        persist_on_probe=True,
+        with_stats=True,
+    )
+    pairs = bucket_pairs(
+        tagged,
+        ["bucket"],
+        "vec_id",
+        ["embedding"],
+        # symmetric: cosine's dot and norm product commute exactly
+        keep=lambda x, y: F.round(cosine(x("embedding"), y("embedding")), 6) >= 0.30,
+        max_bucket=gstats.certified_max_bucket,
+        chunk_target=256,
     )
     return pairs.select(
         "a_id",
         "b_id",
         F.round(cosine(F.col("a_embedding"), F.col("b_embedding")), 6).alias("cosine"),
-    ).filter(F.col("cosine") >= 0.30)
+    )
 
 
 from ..operators.zorder import zorder_key_sql as _zorder_key_sql  # noqa: E402

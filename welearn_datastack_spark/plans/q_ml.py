@@ -825,7 +825,7 @@ def semantic_assignment_frames(
     assignment, seed 211) with self-assigned singletons. Shared with
     tools/guard_projections.py so the projection tool probes the SAME
     cluster frame the guard gates (the drift hazard minhash_band_frame
-    closed for pair_probe)."""
+    closes for the minhash row)."""
     from ..operators.similarity import (
         bucket_key_col,
         bucket_pruned_assign,
@@ -899,7 +899,7 @@ def semantic_assignment_frames(
     "computed from COUNT(*) identically in both engines, so the "
     "full hash gate holds. Near-duplicates are flagged by pairwise "
     "cosine >= tau within a cluster only; pairs come from the "
-    "hot-bucket sub-split join (operators/dedup.chunked_self_pairs) "
+    "bucket self-pair kernel (operators/dedup.bucket_pairs) "
     "so a dense cluster can never serialize onto one task; the "
     "min-id member of each semantic-dup group is kept.",
 )
@@ -924,14 +924,14 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (same values bit-for-bit: the oracle's norms CTE is per-vector
     # too)
     mem = assign.join(tagged.select("vec_id", "embedding", "nrm"), on="vec_id")
-    # within-cluster pairs via the hot-bucket sub-split join: per-task
+    # within-cluster pairs via the bucket self-pair kernel: per-task
     # pair output bounded by chunk_target² even when assignment piles
     # into a few dense clusters
-    from ..operators.dedup import chunked_self_pairs, replicated_volume_guard
+    from ..operators.dedup import bucket_pairs, replicated_volume_guard
 
     # Pre-flight disk gate (round 13) with the CHUNK-SPLIT cost model:
     # the pair stream here is generated in-task and streamed straight
-    # into the cos >= tau filter before any exchange (only the few
+    # into the cos >= tau keep before any exchange (only the few
     # survivors reach the dup groupBy), so — exactly as for simhash —
     # the disk consumer is the REPLICATED chunk-join input, each row
     # carrying a 64-float embedding payload (~320 B vs the guard's
@@ -942,7 +942,7 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the probe is skipped and the gates/bench pay nothing; on a
     # degenerate assignment at corpus scale the guard fails fast with
     # the measured projection or member-samples under mode='sample'.
-    mem = replicated_volume_guard(
+    mem, gstats = replicated_volume_guard(
         mem,
         ["cent_id"],
         "vec_id",
@@ -956,21 +956,22 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         # computation instead of computing it twice
         mode="fail",
         persist_on_probe=True,
+        with_stats=True,
     )
-    pairs = chunked_self_pairs(
-        mem, ["cent_id"], "vec_id", ["embedding", "nrm"], chunk_target=256
-    ).select(
-        "a_id",
-        "b_id",
-        F.round(
-            dot(F.col("a_embedding"), F.col("b_embedding"))
-            / (F.col("a_nrm") * F.col("b_nrm")),
-            6,
-        ).alias("cos"),
+    pairs = bucket_pairs(
+        mem,
+        ["cent_id"],
+        "vec_id",
+        ["embedding", "nrm"],
+        # symmetric: dot and the norm product commute exactly
+        keep=lambda x, y: F.round(
+            dot(x("embedding"), y("embedding")) / (x("nrm") * y("nrm")), 6
+        ) >= F.lit(_SEMDEDUP_TAU),
+        max_bucket=gstats.certified_max_bucket,
+        chunk_target=256,
     )
     dup = (
-        pairs.filter(F.col("cos") >= F.lit(_SEMDEDUP_TAU))
-        .groupBy(F.col("b_id").alias("vec_id"))
+        pairs.groupBy(F.col("b_id").alias("vec_id"))
         .agg(F.min("a_id").alias("dup_of"))
     )
     return assign.join(dup, on="vec_id", how="left").select(

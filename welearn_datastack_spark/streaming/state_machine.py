@@ -353,6 +353,12 @@ def stream_ingest_probe(
     admitted row), and state remains exactly correct. Decisions are
     written BEFORE the state transition, so in the no-failure path
     each document's decision reflects the state at its own arrival.
+    An empty batch is detected only after its (data-free) decision
+    write, which is then removed; a crash between that write and the
+    removal leaves a transient empty ``batch_id=N`` directory in the
+    decision log. Readers see no rows from it, and because the
+    checkpoint has not committed the batch, the replay writes and
+    removes it again.
 
     At 100 TB the state store is the bucketed-table layout
     (``pipeline/ingest_increment.build_state_bucketed``): the probe
@@ -376,12 +382,13 @@ def stream_ingest_probe(
         schema = spark.read.parquet(docs_path).schema
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # pin the decisions before the writes: they derive from a lazy
-        # probe over the very state files apply_transitions appends to.
+        # the decisions derive from a lazy probe over the very state
+        # files apply_transitions appends to, so they are materialized
+        # (by the decision write below) before the appends.
         # |decisions| == |batch| by construction (one decision per
-        # incoming doc), so the emptiness test rides the checkpoint as
-        # an Observation instead of a separate isEmpty job per batch
-        # (r15 opt) — an empty replay batch still writes nothing
+        # incoming doc), so the emptiness test rides that write as an
+        # Observation instead of a separate isEmpty job per batch: an
+        # empty batch is written, then its directory removed again
         from pyspark.sql import Observation
 
         # the batch's band frame feeds BOTH the probe's near leg and
