@@ -55,55 +55,43 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir):
 def test_ann_probe_count_is_a_recall_dial(spark, sf_dir, k):
     """IVF nprobe sweep: recall@k vs exact brute force must not
     decrease as more lists are probed, reaching 1.0 when probing all."""
-    from welearn_datastack_spark.operators.similarity import brute_force_topk, cosine_pairs
-    from welearn_datastack_spark.operators.topk import top_k_by
+    from welearn_datastack_spark.operators.similarity import bucket_topk
     from welearn_datastack_spark.plans.q_ml import _CENTROID_IDS
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id").isin(*_CENTROID_IDS)).select(
-        F.col("vec_id").alias("cent_id"), "embedding"
+    cents = emb.filter(F.col("vec_id").isin(*_CENTROID_IDS)).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce")
     )
-    to_cent = cosine_pairs(
-        emb.select(F.col("vec_id").alias("q_id"), "embedding"),
-        centroids.select(F.col("cent_id").alias("c_id"), "embedding"),
-    ).select(F.col("q_id").alias("vec_id"), F.col("c_id").alias("cent_id"), F.col("cosine").alias("cos"))
-    assign = (
-        top_k_by(to_cent, ["vec_id"], [F.desc("cos"), F.asc("cent_id")], k=1, rank_col="r")
-        .filter(F.col("vec_id") >= 10)
-        .select(F.col("vec_id").alias("c_id"), "cent_id")
+
+    def as_probes(rows):
+        return rows.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"))
+
+    def nearest_lists(rows, n):
+        """(q_id, cent_id) of each row's n nearest centroids."""
+        return bucket_topk(as_probes(rows), cents, k=n).select(
+            "q_id", F.col("c_id").alias("cent_id")
+        )
+
+    corpus_rows = emb.filter(F.col("vec_id") >= 10)
+    lists = (
+        nearest_lists(corpus_rows, 1)
+        .withColumnRenamed("q_id", "c_id")
+        .join(
+            corpus_rows.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce")),
+            on="c_id",
+        )
     )
-    queries = emb.filter(F.col("vec_id") < 10).select(F.col("q_id" if False else "vec_id").alias("q_id"), "embedding")
+    queries = emb.filter(F.col("vec_id") < 10)
     exact = {
         (r["q_id"], r["c_id"])
-        for r in brute_force_topk(
-            queries, emb.filter(F.col("vec_id") >= 10).select(F.col("vec_id").alias("c_id"), "embedding"), k=k
-        ).collect()
+        for r in bucket_topk(as_probes(queries), lists, k=k).collect()
     }
 
     def recall(nprobe: int) -> float:
-        probes = (
-            top_k_by(
-                to_cent.filter(F.col("vec_id") < 10),
-                ["vec_id"],
-                [F.desc("cos"), F.asc("cent_id")],
-                k=nprobe,
-                rank_col="r",
-            )
-            .select(F.col("vec_id").alias("q_id"), "cent_id")
-        )
-        cand = probes.join(assign, on="cent_id").select("q_id", "c_id")
-        qv = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"))
-        cv = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce"))
-        from welearn_datastack_spark.operators.similarity import cosine
-
-        scored = (
-            cand.join(F.broadcast(qv), on="q_id")
-            .join(cv, on="c_id")
-            .select("q_id", "c_id", F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"))
-        )
+        probes = nearest_lists(queries, nprobe).join(as_probes(queries), on="q_id")
         got = {
             (r["q_id"], r["c_id"])
-            for r in top_k_by(scored, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=k).collect()
+            for r in bucket_topk(probes, lists, k=k, on=("cent_id",)).collect()
         }
         return len(got & exact) / len(exact)
 

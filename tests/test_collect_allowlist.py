@@ -137,10 +137,10 @@ def test_blas_topk_query_guard_raises(spark):
     S.BLAS_MAX_QUERY_ROWS = 5
     try:
         q = spark.range(6).selectExpr(
-            "id AS q_id", "array(cast(id as float), 1.0F) AS embedding"
+            "id AS q_id", "array(cast(id as float), 1.0F) AS qe"
         )
         c = spark.range(3).selectExpr(
-            "id AS c_id", "array(cast(id as float), 1.0F) AS embedding"
+            "id AS c_id", "array(cast(id as float), 1.0F) AS ce"
         )
         with pytest.raises(ValueError, match="query side exceeds 5 rows"):
             S.blas_topk(q, c, k=2)

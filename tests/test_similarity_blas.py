@@ -22,13 +22,13 @@ def spark():
 
 def test_blas_topk_matches_jvm_kernel(spark):
     from welearn_datastack_spark.plans.q_ml import _split
-    from welearn_datastack_spark.operators.similarity import blas_topk, brute_force_topk
+    from welearn_datastack_spark.operators.similarity import blas_topk, bucket_topk
 
     queries, corpus = _split(spark, SF_DIR)
-    corpus = corpus.select("c_id", "embedding")
+    corpus = corpus.select("c_id", "ce")
     jvm = {
         (r["q_id"], r["c_id"]): r["cosine"]
-        for r in brute_force_topk(queries, corpus, k=5).collect()
+        for r in bucket_topk(queries, corpus, k=5).collect()
     }
     blas = {
         (r["q_id"], r["c_id"]): r["cosine"]
@@ -47,7 +47,7 @@ def test_blas_topk_per_query_counts(spark):
     from welearn_datastack_spark.operators.similarity import blas_topk
 
     queries, corpus = _split(spark, SF_DIR)
-    out = blas_topk(queries, corpus.select("c_id", "embedding"), k=5).collect()
+    out = blas_topk(queries, corpus.select("c_id", "ce"), k=5).collect()
     by_q: dict = {}
     for r in out:
         by_q.setdefault(r["q_id"], []).append(r["rnk"])
@@ -62,12 +62,12 @@ def test_blas_topk_empty_queries_returns_empty(spark):
     from welearn_datastack_spark.operators.similarity import blas_topk
 
     corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "c_id long, embedding array<double>"
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "c_id long, ce array<double>"
     )
-    empty = spark.createDataFrame([], "q_id long, embedding array<double>")
+    empty = spark.createDataFrame([], "q_id long, qe array<double>")
     assert blas_topk(empty, corpus, k=3).count() == 0
     all_null = spark.createDataFrame(
-        [(7, None)], "q_id long, embedding array<double>"
+        [(7, None)], "q_id long, qe array<double>"
     )
     assert blas_topk(all_null, corpus, k=3).count() == 0
 
@@ -82,10 +82,10 @@ def test_blas_topk_zero_norm_and_null_vectors(spark):
 
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, None), (4, [0.5, 0.5])],
-        "c_id long, embedding array<double>",
+        "c_id long, ce array<double>",
     )
     queries = spark.createDataFrame(
-        [(10, [1.0, 0.0])], "q_id long, embedding array<double>"
+        [(10, [1.0, 0.0])], "q_id long, qe array<double>"
     )
     rows = blas_topk(queries, corpus, k=3).orderBy("rnk").collect()
     got = [(r["c_id"], r["cosine"]) for r in rows]

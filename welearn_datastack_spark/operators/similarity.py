@@ -4,21 +4,28 @@ The reference stores slice embeddings as raw float32 bytes and serves
 cosine search from Qdrant (modules/qdrant_handler.py:114–138; vectors
 are L2-normalized at embed time, embedding_model_helpers.py:58–64; the
 load-test workload is top-100 search and grouped-by-document search,
-locustfiles/locustfile.py:58–97). Here the same semantics are pure
-DataFrame algebra:
+locustfiles/locustfile.py:58–97). Here both shapes are one
+candidate→verify kernel, :func:`bucket_topk`:
 
-- brute-force cosine top-k: broadcast the (small) query set against
-  the corpus — a map-side nested loop with **zero shuffle on the
-  corpus side**; the only shuffle is the final per-query top-k window
-  over |Q|·k candidate rows. This is the correctness baseline and is
-  exactly how you'd seed an IVF index build at 100 TB.
-- LSH-bucketed variant (random-hyperplane signs): corpus and queries
-  hash to sign-bucket keys; candidates are generated per bucket →
-  the cross product shrinks from |Q|·|C| to the bucket-local products.
-  At scale, bucket on the first B bits and shuffle both sides by
-  bucket — a co-partitioned equi-join instead of a broadcast loop.
+- candidates: the bounded probe side (|Q| queries, or |Q|·n_probe
+  rows) broadcasts onto the corpus. With bucket keys (an IVF list id,
+  a learned cluster, an LSH sign-bucket) the candidates are the
+  bucket-local equi-join, so the cross product shrinks from |Q|·|C|
+  to the probed buckets; with no keys they are the full cross
+  product — the exact brute-force baseline every ANN path is
+  recall-measured against. Either way the corpus embedding column is
+  map-scanned only, never shuffled.
+- verify: exact cosine, rounded to 6 digits for cross-engine
+  determinism, then the per-query top-k window over the narrow
+  (q_id, c_id, cosine) rows — optionally after a best-hit-per-group
+  window (Qdrant grouped search, group_size 1).
 
-All arithmetic is JVM-side (zip_with/aggregate higher-order
+The index builds that produce the bucket keys (baked-literal
+quantizers, :func:`kmeans_fixed`, sign-plane tagging) live here too;
+:func:`blas_topk` is the Arrow/numpy alternate of the brute-force
+case, and :func:`cosine_pairs` the unranked all-pairs scores.
+
+All kernel arithmetic is JVM-side (zip_with/aggregate higher-order
 functions) — no Python in the hot path.
 """
 
@@ -50,105 +57,52 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_pairs(
-    queries: DataFrame,
-    corpus: DataFrame,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """All (query, corpus) cosine scores; queries broadcast. Returns
-    (q_id, c_id, cosine) with cosine rounded for cross-engine
-    determinism."""
-    q = queries.select(F.col(q_id), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(c_id), F.col(vec_col).alias("__cv"))
-    return (
-        F.broadcast(q)
-        .crossJoin(c)
-        .select(
-            q_id,
-            c_id,
-            F.round(cosine(F.col("__qv"), F.col("__cv")), round_digits).alias("cosine"),
-        )
-    )
+def _score() -> Column:
+    """The verify step: exact cosine of a candidate's (qe, ce), rounded
+    for cross-engine determinism."""
+    return F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine")
 
 
-def brute_force_topk(
-    queries: DataFrame,
+def cosine_pairs(probes: DataFrame, corpus: DataFrame) -> DataFrame:
+    """All (q_id, c_id, cosine) scores of ``probes`` (q_id, qe) against
+    ``corpus`` (c_id, ce); the probe side broadcasts."""
+    return F.broadcast(probes).crossJoin(corpus).select("q_id", "c_id", _score())
+
+
+def bucket_topk(
+    probes: DataFrame,
     corpus: DataFrame,
     k: int,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    vec_col: str = "embedding",
+    on: tuple[str, ...] = (),
+    group_col: str | None = None,
 ) -> DataFrame:
-    """Top-k corpus rows per query by cosine (ties broken by c_id) —
-    the Qdrant `search(limit=k)` shape."""
-    pairs = cosine_pairs(queries, corpus, q_id=q_id, c_id=c_id, vec_col=vec_col)
-    return top_k_by(pairs, [q_id], [F.desc("cosine"), F.asc(c_id)], k=k)
+    """Top ``k`` corpus rows per query by exact cosine — the Qdrant
+    ``search(limit=k)`` shape — over the candidates that share the
+    ``on`` bucket keys (all of them when ``on`` is empty).
 
+    ``probes`` is (q_id, qe, *on) and always broadcasts: it is the
+    bounded side. ``corpus`` is (c_id, ce, *on[, group_col]). Returns
+    (q_id, c_id, cosine, rnk) ordered by (cosine desc, c_id asc).
 
-def grouped_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    group_col: str,
-    k_groups: int,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Grouped search: best hit per (query, group), then top
-    ``k_groups`` groups per query — the Qdrant grouped-search shape
-    (group_by document_id, group_size 1; locustfile.py:82–87)."""
-    pairs = cosine_pairs(
-        queries, corpus.select(F.col(c_id), group_col, "embedding"), q_id=q_id, c_id=c_id, vec_col=vec_col
+    With ``group_col`` (Qdrant grouped search: group_by document,
+    group_size 1; locustfile.py:82–87) the best hit per (q_id, group)
+    is kept first, by the same order, and the top ``k`` groups per
+    query are returned as (q_id, c_id, group_col, cosine, rnk) ordered
+    by (cosine desc, group asc). The group column rides through the
+    scoring join, so no second pass over the corpus joins it back."""
+    cand = (
+        corpus.join(F.broadcast(probes), on=list(on))
+        if on
+        else F.broadcast(probes).crossJoin(corpus)
     )
-    grp = corpus.select(F.col(c_id), F.col(group_col))
-    with_grp = pairs.join(F.broadcast(grp), on=c_id)
-    best_per_group = top_k_by(
-        with_grp, [q_id, group_col], [F.desc("cosine"), F.asc(c_id)], k=1, rank_col="__r1"
-    ).drop("__r1")
-    return top_k_by(best_per_group, [q_id], [F.desc("cosine"), F.asc(group_col)], k=k_groups)
-
-
-def ivf_grouped_topk(
-    lists: DataFrame,
-    probes: DataFrame,
-    group_col: str,
-    k_groups: int,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Grouped ANN serve on the IVF path — the reference's real serve
-    workload (Qdrant grouped search: group_by document_id, group_size
-    1, limit N; locustfiles/locustfile.py:82–87) WITHOUT a crossJoin
-    against the full corpus (the brute-force :func:`grouped_topk` is
-    the recall yardstick, not the scale plan).
-
-    Inputs are the two IVF frames a quantizer produces:
-
-    - ``lists``: the assigned corpus — (cent_id, c_id, ce = embedding,
-      group_col). Assignment is a map expression over the scan when
-      the centroids are baked literals (see plans.q_ml.ivf_ann_topk).
-    - ``probes``: the probe set — (cent_id, q_id, qe = embedding),
-      one row per (query, probed list).
-
-    Plan shape at 100 TB: candidates come from a broadcast equi-join
-    on ``cent_id`` (the probe side is |Q|·n_probe rows — tiny), so the
-    corpus embedding column is NEVER shuffled; the exchanges are the
-    narrow (q_id, group, cosine, c_id) windows — best-per-(query,
-    group) first, then top-k groups per query."""
-    scored = lists.join(F.broadcast(probes), on="cent_id").select(
-        q_id,
-        c_id,
-        group_col,
-        F.round(cosine(F.col("qe"), F.col("ce")), round_digits).alias("cosine"),
-    )
+    if group_col is None:
+        scored = cand.select("q_id", "c_id", _score())
+        return top_k_by(scored, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=k)
+    scored = cand.select("q_id", "c_id", group_col, _score())
     best = top_k_by(
-        scored, [q_id, group_col], [F.desc("cosine"), F.asc(c_id)], k=1, rank_col="__r1"
+        scored, ["q_id", group_col], [F.desc("cosine"), F.asc("c_id")], k=1, rank_col="__r1"
     ).drop("__r1")
-    return top_k_by(best, [q_id], [F.desc("cosine"), F.asc(group_col)], k=k_groups)
+    return top_k_by(best, ["q_id"], [F.desc("cosine"), F.asc(group_col)], k=k)
 
 
 # corpus-scaled LSH sizing: the plane count grows with the corpus so
@@ -366,21 +320,15 @@ def sq8_dequantize(vec: Column) -> Column:
 BLAS_MAX_QUERY_ROWS = 65_536
 
 
-def blas_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Arrow/BLAS alternate of :func:`brute_force_topk`: the query
-    matrix ships to every task (same rows the JVM path broadcasts —
-    |Q| is the small side by construction), each corpus Arrow batch
-    scores as ONE numpy matmul (B×d @ d×Q), and only the per-batch
-    top-k survives, so the final shuffle is |partitions|·|Q|·k rows —
-    identical shuffle shape to the JVM path's |Q|·k window input.
+def blas_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Arrow/BLAS alternate of :func:`bucket_topk` with no bucket keys
+    (same input contract: ``probes`` (q_id, qe), ``corpus`` (c_id, ce);
+    same (q_id, c_id, cosine, rnk) output): the query matrix ships to
+    every task (same rows the JVM path broadcasts — |Q| is the small
+    side by construction), each corpus Arrow batch scores as ONE numpy
+    matmul (B×d @ d×Q), and only the per-batch top-k survives, so the
+    final shuffle is |partitions|·|Q|·k rows — identical shuffle shape
+    to the JVM path's |Q|·k window input.
 
     Same semantics as the zip_with/aggregate kernel up to float
     summation order (numpy uses pairwise summation; the JVM fold is
@@ -393,7 +341,7 @@ def blas_topk(
     import numpy as np
     import pandas as pd
 
-    schema = f"{q_id} long, {c_id} long, cosine double"
+    schema = "q_id long, c_id long, cosine double"
     # null query embeddings can't score — drop them up front (the JVM
     # kernel's null cosine ranks last and never survives top-k).
     # STRUCTURAL GUARD on the collect: |Q| is the small side by
@@ -402,8 +350,8 @@ def blas_topk(
     # pulling an unbounded query table onto the driver and shipping it
     # to every task (the blas twin of state_log._bounded_row_guard).
     q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(q_id, vec_col)
+        probes.filter(F.col("qe").isNotNull())
+        .select("q_id", "qe")
         .limit(BLAS_MAX_QUERY_ROWS + 1)
         .collect()
     )
@@ -411,23 +359,22 @@ def blas_topk(
         raise ValueError(
             f"blas_topk: query side exceeds {BLAS_MAX_QUERY_ROWS} rows — it is "
             "collected to the driver and shipped to every task, so an unbounded "
-            "query table must use a distributed path (brute_force_topk or the "
-            "bucketed ANN family) instead"
+            "query table must use a distributed path (bucket_topk) instead"
         )
     if not q_rows:
         # 0 queries → 0 result rows; np.array([]) would be 1-D and
         # crash norm(axis=1), so return the empty frame directly
-        return queries.sparkSession.createDataFrame([], schema)
+        return probes.sparkSession.createDataFrame([], schema)
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     qn = np.linalg.norm(qm, axis=1)
 
     def run(batches):
         for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
+            pdf = pdf[pdf["ce"].notna()]
             if not len(pdf):
                 continue
-            cm = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            cm = np.array([list(v) for v in pdf["ce"]], dtype=np.float64)
             cn = np.linalg.norm(cm, axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
                 scores = (cm @ qm.T) / (cn[:, None] * qn[None, :])
@@ -438,14 +385,14 @@ def blas_topk(
             scores = np.where(np.isfinite(scores), scores, -np.inf)
             top = min(k, len(pdf))
             idx = np.argpartition(-scores, kth=top - 1, axis=0)[:top]  # top×Q
-            cids = pdf[c_id].to_numpy(dtype=np.int64)
+            cids = pdf["c_id"].to_numpy(dtype=np.int64)
             n_q = len(q_ids)
             picked = scores[idx.T.ravel(), np.repeat(np.arange(n_q), top)]
             out = pd.DataFrame(
                 {
-                    q_id: np.repeat(q_ids, top),
-                    c_id: cids[idx.T.ravel()],
-                    "cosine": np.round(picked, round_digits),
+                    "q_id": np.repeat(q_ids, top),
+                    "c_id": cids[idx.T.ravel()],
+                    "cosine": np.round(picked, 6),
                 }
             )
             # surface the masked sentinels as NULL, matching the JVM
@@ -453,8 +400,8 @@ def blas_topk(
             out.loc[~np.isfinite(picked), "cosine"] = None
             yield out
 
-    cand = corpus.select(c_id, vec_col).mapInPandas(run, schema=schema)
-    return top_k_by(cand, [q_id], [F.desc("cosine"), F.asc(c_id)], k=k)
+    cand = corpus.select("c_id", "ce").mapInPandas(run, schema=schema)
+    return top_k_by(cand, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=k)
 
 
 def sqdist(a: Column, b: Column) -> Column:

@@ -335,8 +335,7 @@ def _bucket_col() -> F.Column:
     "shuffle once on a uniform key (see operators/similarity.py)",
 )
 def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import cosine
-    from ..operators.topk import top_k_by
+    from ..operators.similarity import bucket_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     tagged = emb.select("vec_id", "embedding", _bucket_col().alias("bucket"))
@@ -351,20 +350,15 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce"), "bucket"
         )
     )
-    # the PROBE side is bounded (|Q| query vectors) — broadcast it
-    # explicitly: both sides derive from the same scan, so Catalyst
-    # estimates q at corpus size and would otherwise shuffle every
-    # corpus embedding on the bucket key (measured: 906 B at sf1
+    # bucket_topk broadcasts the bounded PROBE side (|Q| query
+    # vectors) explicitly: both sides derive from the same scan, so
+    # Catalyst estimates q at corpus size and would otherwise shuffle
+    # every corpus embedding on the bucket key (measured: 906 B at sf1
     # flipping to 16 MB at sf3 when the misestimated side outgrew the
     # threshold). With the broadcast the corpus is map-scanned only;
     # the large-|Q| regime instead pre-buckets BOTH sides in storage
     # (bucketed layout, §6) rather than broadcasting.
-    pairs = F.broadcast(q).join(c, on="bucket").select(
-        "q_id", "c_id", F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine")
-    )
-    return top_k_by(pairs, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=3).select(
-        "q_id", "c_id", "cosine", "rnk"
-    )
+    return bucket_topk(q, c, k=3, on=("bucket",))
 
 
 @register(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import brute_force_topk, cosine_pairs, grouped_topk
+from ..operators.similarity import bucket_topk, cosine_pairs, sq8_dequantize
 from ..sources.tables import fan_out_for_compute, load_table, memo_count
 from .registry import register
 
@@ -42,14 +42,18 @@ WITH qe AS (
 
 
 def _split(spark: SparkSession, sf_dir: str):
+    """The bucket_topk frames of the serve queries: probes (q_id, qe)
+    are vec_id < 10, the corpus (c_id, ce, label) the rest."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("q_id"), "embedding")
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+    )
     # the corpus side feeds O(dim²)-per-row scoring kernels — its
     # parallelism must not be hostage to the scan's split count
     # (fan_out_for_compute is a no-op once the layout provides splits)
     corpus = fan_out_for_compute(
         emb.filter(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("c_id"), "embedding", "label"
+            F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce"), "label"
         )
     )
     return queries, corpus
@@ -112,9 +116,7 @@ def classify_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, corpus = _split(spark, sf_dir)
-    return brute_force_topk(queries, corpus.select("c_id", "embedding"), k=5).select(
-        "q_id", "c_id", "cosine", "rnk"
-    )
+    return bucket_topk(queries, corpus, k=5)
 
 
 @register(
@@ -142,7 +144,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def grouped_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, corpus = _split(spark, sf_dir)
-    return grouped_topk(queries, corpus, group_col="label", k_groups=3).select(
+    return bucket_topk(queries, corpus, k=3, group_col="label").select(
         "q_id", "label", "cosine", "c_id", "rnk"
     )
 
@@ -177,8 +179,8 @@ def grouped_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    a = emb.select(F.col("vec_id").alias("q_id"), "embedding")
-    b = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    a = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"))
+    b = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce"))
     pairs = cosine_pairs(a, b)
     return (
         pairs.filter((F.col("q_id") < F.col("c_id")) & (F.col("cosine") >= 0.35))
@@ -321,16 +323,8 @@ def _ivf_lists_probes(
     "step once the corpus outgrew the broadcast threshold.",
 )
 def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import cosine
-    from ..operators.topk import top_k_by
-
     lists, probes = _ivf_lists_probes(spark, sf_dir)
-    scored = lists.join(F.broadcast(probes), on="cent_id").select(
-        "q_id", "c_id", F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine")
-    )
-    return top_k_by(scored, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=3).select(
-        "q_id", "c_id", "cosine", "rnk"
-    )
+    return bucket_topk(probes, lists, k=3, on=("cent_id",))
 
 
 _IVF_GROUPED_ORACLE = (
@@ -372,10 +366,8 @@ SELECT q_id, label, cosine, c_id, rnk FROM (
     "window. grouped_vector_search stays as the exact recall yardstick.",
 )
 def ivf_grouped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import ivf_grouped_topk as ivf_grouped
-
     lists, probes = _ivf_lists_probes(spark, sf_dir, with_label=True)
-    return ivf_grouped(lists, probes, group_col="label", k_groups=3).select(
+    return bucket_topk(probes, lists, k=3, on=("cent_id",), group_col="label").select(
         "q_id", "label", "cosine", "c_id", "rnk"
     )
 
@@ -408,6 +400,13 @@ rng AS (
 """
 
 
+def _sq8_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Exact top-k over SQ8-dequantized vectors of ``_split``'s frames."""
+    dq = queries.select("q_id", sq8_dequantize(F.col("qe")).alias("qe"))
+    dc = corpus.select("c_id", sq8_dequantize(F.col("ce")).alias("ce"))
+    return bucket_topk(dq, dc, k)
+
+
 @register(
     "sq8_ann_topk",
     "WITH "
@@ -427,12 +426,7 @@ rng AS (
     "path, so swapping precision never changes the plan shape.",
 )
 def sq8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import sq8_dequantize
-
-    queries, corpus = _split(spark, sf_dir)
-    dq = queries.select("q_id", sq8_dequantize(F.col("embedding")).alias("embedding"))
-    dc = corpus.select("c_id", sq8_dequantize(F.col("embedding")).alias("embedding"))
-    return brute_force_topk(dq, dc, k=5).select("q_id", "c_id", "cosine", "rnk")
+    return _sq8_topk(*_split(spark, sf_dir), k=5)
 
 
 @register(
@@ -528,35 +522,6 @@ def _lsh_topk_sql(k: int) -> str:
     )"""
 
 
-def _lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 per query via the sign-plane LSH bucket join — shared by
-    ann_recall_report and ann_method_recall."""
-    from ..operators.similarity import cosine
-    from ..operators.topk import top_k_by
-    from .q_extra import _bucket_col
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    tagged = emb.select("vec_id", "embedding", _bucket_col().alias("bucket"))
-    lq = tagged.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), "bucket"
-    )
-    # corpus side fans out for the bucket-local cosine kernel; the
-    # bounded |Q|-row probe side broadcasts explicitly (same
-    # misestimate fix as lsh_ann_topk — both sides derive from one
-    # scan, so Catalyst would size lq at corpus scale)
-    lc = fan_out_for_compute(
-        tagged.filter(F.col("vec_id") >= 10).select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce"), "bucket"
-        )
-    )
-    lsh_pairs = F.broadcast(lq).join(lc, on="bucket").select(
-        "q_id", "c_id", F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine")
-    )
-    return top_k_by(lsh_pairs, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=3).select(
-        "q_id", "c_id"
-    )
-
-
 @register(
     "ann_recall_report",
     _COSINE_CTE
@@ -585,11 +550,11 @@ def _lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     "value-checked, not just row-counted.",
 )
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .q_extra import lsh_ann_topk
+
     queries, corpus = _split(spark, sf_dir)
-    exact = brute_force_topk(queries, corpus.select("c_id", "embedding"), k=3).select(
-        "q_id", "c_id"
-    )
-    lsh_top = _lsh_top3(spark, sf_dir).select("q_id", F.col("c_id").alias("l_c_id"))
+    exact = bucket_topk(queries, corpus, k=3).select("q_id", "c_id")
+    lsh_top = lsh_ann_topk(spark, sf_dir).select("q_id", F.col("c_id").alias("l_c_id"))
 
     joined = exact.join(
         lsh_top,
@@ -671,17 +636,10 @@ _METHOD_RECALL_ORACLE = (
     "are value-hashed, not just row-counted.",
 )
 def ann_method_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import sq8_dequantize
+    from .q_extra import lsh_ann_topk
 
     queries, corpus = _split(spark, sf_dir)
-    exact = brute_force_topk(queries, corpus.select("c_id", "embedding"), k=3).select(
-        "q_id", "c_id"
-    )
-
-    ivf_top = ivf_ann_topk(spark, sf_dir).select("q_id", "c_id")
-    dq = queries.select("q_id", sq8_dequantize(F.col("embedding")).alias("embedding"))
-    dc = corpus.select("c_id", sq8_dequantize(F.col("embedding")).alias("embedding"))
-    sq_top = brute_force_topk(dq, dc, k=3).select("q_id", "c_id")
+    exact = bucket_topk(queries, corpus, k=3).select("q_id", "c_id")
 
     def branch(top: DataFrame, name: str) -> DataFrame:
         t = top.select(F.col("q_id").alias("m_q_id"), F.col("c_id").alias("m_c_id"))
@@ -697,9 +655,9 @@ def ann_method_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(name).alias("method"), "n_queries", "mean_recall_at_3")
 
     return (
-        branch(_lsh_top3(spark, sf_dir), "lsh")
-        .unionByName(branch(ivf_top, "ivf"))
-        .unionByName(branch(sq_top, "sq8"))
+        branch(lsh_ann_topk(spark, sf_dir), "lsh")
+        .unionByName(branch(ivf_ann_topk(spark, sf_dir), "ivf"))
+        .unionByName(branch(_sq8_topk(queries, corpus, k=3), "sq8"))
     )
 
 
@@ -733,7 +691,7 @@ def cosine_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import blas_topk
 
     queries, corpus = _split(spark, sf_dir)
-    top = blas_topk(queries, corpus.select("c_id", "embedding"), k=5)
+    top = blas_topk(queries, corpus, k=5)
     return top.groupBy("q_id").agg(F.array_sort(F.collect_list("c_id")).alias("c_ids"))
 
 
@@ -1288,8 +1246,7 @@ SELECT q_id, c_id, cosine, rnk FROM (
     "map-side assignment, shuffle on list id).",
 )
 def ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import cosine, kmeans_fixed
-    from ..operators.topk import top_k_by
+    from ..operators.similarity import kmeans_fixed
 
     emb = load_table(spark, sf_dir, "embeddings")
     # the index build runs the full distributed Lloyd loop; only the
@@ -1320,9 +1277,4 @@ def ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("q_id", "qe", F.col("p")["t"].alias("cluster"))
     )
-    scored = lists.join(F.broadcast(probes), on="cluster").select(
-        "q_id", "c_id", F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine")
-    )
-    return top_k_by(scored, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=3).select(
-        "q_id", "c_id", "cosine", "rnk"
-    )
+    return bucket_topk(probes, lists, k=3, on=("cluster",))
