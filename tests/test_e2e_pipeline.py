@@ -93,6 +93,25 @@ def test_full_enrichment_chain(spark, sf_dir):
     assert again.count() == n_points
 
 
+def test_enrich_cli_writes_every_stage(spark, sf_dir, tmp_path, monkeypatch):
+    """``jobs enrich`` end to end on the session under test: one point
+    per slice, every document linked to its keywords."""
+    from welearn_datastack_spark import jobs, session
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    out = str(tmp_path / "enriched")
+    jobs.main(["enrich", "--sf-dir", sf_dir, "--out", out])
+    read = spark.read.parquet
+    n_docs = load_table(spark, sf_dir, "documents").count()
+    slices = read(f"{out}/slices")
+    assert slices.select("document_id").distinct().count() == n_docs
+    points = read(f"{out}/points")
+    assert points.count() == slices.count()
+    assert points.select("point_id").distinct().count() == slices.count()
+    assert read(f"{out}/verdicts").count() == n_docs
+    assert read(f"{out}/keyword_links").select("document_id").distinct().count() == n_docs
+
+
 def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):
     """The composed incremental-ingest pipeline: state build → probe →
     decisions → state transitions, with the two structural guarantees

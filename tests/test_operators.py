@@ -66,6 +66,34 @@ def test_get_or_create_idempotent(spark):
     again = get_or_create(merged, incoming, key="keyword")
     assert sorted(r["keyword"] for r in again.collect()) == ["alpha", "beta"]
 
+    def reference(dim, incoming):
+        # the union + anti-join form the one-pass merge replaces
+        created = (
+            incoming.select("keyword").dropDuplicates(["keyword"])
+            .join(dim.select("keyword"), on="keyword", how="left_anti")
+            .withColumn("id", F.md5("keyword"))
+        )
+        return dim.select("keyword", "id").unionByName(created.select("keyword", "id"))
+
+    schema = "keyword string, id string"
+    cases = [
+        # a duplicate-key dim: both rows survive, no id is created
+        ([("alpha", "id-a"), ("alpha", "id-a2"), ("gamma", "id-g")], [("alpha",), ("beta",)]),
+        # a NULL key on both sides: never matches, the incoming one is created
+        ([("alpha", "id-a"), (None, "id-null")], [(None,), (None,), ("alpha",), ("delta",)]),
+        # an existing NULL id stays NULL, it is not replaced by md5(key)
+        ([("alpha", None), ("beta", "id-b")], [("alpha",), ("beta",), ("eps",)]),
+        # empty sides
+        ([], [("alpha",)]),
+        ([("alpha", "id-a")], []),
+    ]
+    for dim_rows, incoming_rows in cases:
+        dim = spark.createDataFrame(dim_rows, schema)
+        incoming = spark.createDataFrame(incoming_rows, "keyword string")
+        got = sorted(map(tuple, get_or_create(dim, incoming, key="keyword").collect()), key=repr)
+        want = sorted(map(tuple, reference(dim, incoming).collect()), key=repr)
+        assert got == want, (dim_rows, incoming_rows)
+
 
 def test_overwrite_by_key(spark):
     existing = spark.createDataFrame([(1, "old"), (2, "keep")], ["k", "v"])

@@ -147,6 +147,66 @@ def test_keywords_get_or_create_and_relink(spark):
     assert ("d1", "kw-solar") in {(r["document_id"], r["keyword_id"]) for r in link_rows}
 
 
+def _kw_docs(spark):
+    return spark.createDataFrame(
+        [("d1", "solar energy solar power"), ("d2", "ocean water ocean"),
+         ("d3", "wind power wind"), ("d4", "solar ocean tides")],
+        ["document_id", "description"],
+    ).repartition(4)
+
+
+def test_custom_keyword_loader_is_not_shadowed_by_the_stub(spark):
+    # a worker that has run the stub must not answer a custom loader
+    # from the stub's cache entry (both use the default model name)
+    docs = _kw_docs(spark)
+    dim0 = spark.createDataFrame([], "keyword string, id string")
+    links0 = spark.createDataFrame([], "document_id string, keyword_id string")
+    stub_dim, _ = extract_and_link(docs, dim0, links0)
+    assert "solar" in {r["keyword"] for r in stub_dim.collect()}
+    dim, links = extract_and_link(
+        docs, dim0, links0, model_loader=lambda: (lambda t: ["CUSTOM"])
+    )
+    assert {r["keyword"] for r in dim.collect()} == {"CUSTOM"}
+    assert links.count() == 4
+
+
+def test_keyword_stage_runs_the_model_once_per_document(spark):
+    from welearn_datastack_spark.functions.udfs import stub_keyword_extractor
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def loader():
+        # every task ships (and registers) its own copy of ``calls``;
+        # the cached model outlives the task that loaded it, so it adds
+        # to the copy registered for the running task, looked up on
+        # the worker at call time
+        aid, stub = calls.aid, stub_keyword_extractor()
+
+        def model(text):
+            from pyspark.accumulators import _accumulatorRegistry
+
+            _accumulatorRegistry[aid].add(1)
+            return stub(text)
+
+        return model
+
+    docs = _kw_docs(spark)
+    dim, links = extract_and_link(
+        docs,
+        spark.createDataFrame([("solar", "kw-solar")], ["keyword", "id"]),
+        spark.createDataFrame([("d9", "kw-old")], ["document_id", "keyword_id"]),
+        model_loader=loader,
+    )
+    for df in (dim, links):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Python" not in plan and "Pandas" not in plan, plan
+    assert {r["keyword"]: r["id"] for r in dim.collect()}["solar"] == "kw-solar"
+    assert {r["document_id"] for r in links.collect()} == {"d1", "d2", "d3", "d4", "d9"}
+    dim.count()
+    links.count()
+    assert calls.value == 4
+
+
 def test_qdrant_sync_routing_top2_and_overwrite(spark):
     collections = spark.createDataFrame(
         [

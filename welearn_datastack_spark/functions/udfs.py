@@ -43,10 +43,23 @@ from pyspark.sql import types as T
 _MODEL_CACHE: dict[str, object] = {}
 
 
-def get_cached_model(name: str, loader: Callable[[], object]) -> object:
-    if name not in _MODEL_CACHE:
-        _MODEL_CACHE[name] = loader()
-    return _MODEL_CACHE[name]
+def model_cache_key(name: str, loader: Callable[[], object]) -> str:
+    """Executor-cache key for one (model name, loader) pair, computed
+    on the DRIVER: the name plus a digest of the pickled loader. The
+    name alone is not enough: a worker that had loaded one loader's
+    model would answer every later loader under that name, silently
+    ignoring a custom ``model_loader``. Distinct loaders pickle
+    differently and never share an entry; the same loader keeps one
+    load per worker."""
+    from pyspark import cloudpickle
+
+    return f"{name}:{hashlib.md5(cloudpickle.dumps(loader)).hexdigest()}"
+
+
+def get_cached_model(key: str, loader: Callable[[], object]) -> object:
+    if key not in _MODEL_CACHE:
+        _MODEL_CACHE[key] = loader()
+    return _MODEL_CACHE[key]
 
 
 # ---------------------------------------------------------------------------
@@ -247,12 +260,13 @@ def embed_slices(
 
     ensure_self_on_executors(slices.sparkSession)
     loader = model_loader or (lambda: stub_embedder())
+    key = model_cache_key(model_name, loader)
     schema = T.StructType(
         list(slices.schema.fields) + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = get_cached_model(model_name, loader)
+        model = get_cached_model(key, loader)
         for pdf in batches:
             vecs = model(pdf[text_col].tolist())
             pdf = pdf.copy()
@@ -308,10 +322,11 @@ def bi_classify(
 
     ensure_self_on_executors(df.sparkSession)
     loader = model_loader or (lambda: stub_bi_classifier())
+    key = model_cache_key(model_name, loader)
     schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.BooleanType())])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = get_cached_model(model_name, loader)
+        model = get_cached_model(key, loader)
         for pdf in batches:
             mat = np.stack(pdf[vec_col].to_numpy())
             pdf = pdf.copy()
@@ -335,12 +350,13 @@ def n_classify_probas(
 
     ensure_self_on_executors(df.sparkSession)
     loader = model_loader or (lambda: stub_n_classifier())
+    key = model_cache_key(model_name, loader)
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = get_cached_model(model_name, loader)
+        model = get_cached_model(key, loader)
         for pdf in batches:
             mat = np.stack(pdf[vec_col].to_numpy())
             probas = model(mat)
@@ -386,10 +402,11 @@ def extract_keywords(
 
     ensure_self_on_executors(docs.sparkSession)
     loader = model_loader or (lambda: stub_keyword_extractor())
+    key = model_cache_key(model_name, loader)
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _kw(s: pd.Series) -> pd.Series:
-        model = get_cached_model(model_name, loader)
+        model = get_cached_model(key, loader)
         return s.map(model)
 
     return docs.select(F.col(id_col), F.explode(_kw(F.col(text_col))).alias("keyword"))

@@ -29,17 +29,23 @@ def _enrich(args: argparse.Namespace) -> None:
     from .sources.tables import load_table
 
     spark = get_spark("welearn-enrich")
+    read = spark.read.parquet
     docs = load_table(spark, args.sf_dir, "documents")
+    # each stage reads back what the stage before it wrote: a lazy
+    # frame reused across sinks would re-run its models in every one
     doc_in = docs.select(
         F.col("doc_id").cast("string").alias("id"), F.col("text").alias("full_content")
     )
-    slices = vectorize(doc_in, slice_length=args.slice_length)
-    slices.write.mode("overwrite").parquet(f"{args.out}/slices")
-
-    classified = classify_slices(
-        slices.select("document_id", F.col("order_sequence").alias("slice_seq"), "embedding")
+    vectorize(doc_in, slice_length=args.slice_length).write.mode("overwrite").parquet(
+        f"{args.out}/slices"
     )
-    classified.drop("embedding").write.mode("overwrite").parquet(f"{args.out}/classified")
+
+    classify_slices(
+        read(f"{args.out}/slices").select(
+            "document_id", F.col("order_sequence").alias("slice_seq"), "embedding"
+        )
+    ).drop("embedding").write.mode("overwrite").parquet(f"{args.out}/classified")
+    classified = read(f"{args.out}/classified")
     document_verdicts(classified).write.mode("overwrite").parquet(f"{args.out}/verdicts")
 
     spark_docs = docs.select(
@@ -61,7 +67,7 @@ def _enrich(args: argparse.Namespace) -> None:
     )
     top2 = doc_top2_sdgs(classified.select("document_id", "sdg"))
     points = build_points(
-        slices.join(
+        read(f"{args.out}/slices").join(
             classified.select(
                 "document_id", F.col("slice_seq").alias("order_sequence"), "sdg"
             ),

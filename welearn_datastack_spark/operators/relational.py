@@ -41,12 +41,23 @@ def get_or_create(
     re-running the job converges instead of relying on transactional
     INSERT + unique-constraint rollback. Returns the updated dimension
     (existing ∪ created).
+
+    One pass over each input: ``dim`` full-outer-joins the distinct
+    incoming keys, and a row keeps the dim's own id iff it came from
+    ``dim`` (a presence marker, not a coalesce, so an existing NULL id
+    stays NULL). Equal to ``dim ∪ (distinct incoming ⋉̸ dim)`` with
+    md5 ids on the created side, row for row: duplicate dim rows all
+    survive, and a NULL key never matches, so a NULL dim key is kept
+    as is and a NULL incoming key is created (with a NULL md5 id).
     """
     incoming_keys = incoming.select(key).dropDuplicates([key])
-    created = incoming_keys.join(dim.select(key), on=key, how="left_anti").withColumn(
-        id_col, F.md5(F.col(key))
+    merged = dim.select(key, id_col, F.lit(True).alias("__in_dim")).join(
+        incoming_keys, on=key, how="full_outer"
     )
-    return dim.select(key, id_col).unionByName(created.select(key, id_col))
+    return merged.select(
+        key,
+        F.when(F.col("__in_dim"), F.col(id_col)).otherwise(F.md5(F.col(key))).alias(id_col),
+    )
 
 
 def overwrite_by_key(existing: DataFrame, incoming: DataFrame, key: str) -> DataFrame:

@@ -274,22 +274,6 @@ def bucket_key_col(vec_col: Column, planes: list[list[float]]) -> Column:
     return F.concat(*signs)
 
 
-def signed_projection_buckets(
-    df: DataFrame, id_col: str, vec_col: str, n_bits: int, dims: int, seed: int = 42
-) -> DataFrame:
-    """Random-hyperplane LSH bucket key per vector.
-
-    Scale path: join corpus and queries on ``bucket`` instead of a
-    broadcast cross product — both sides shuffle once on a uniform
-    key, bucket-local brute force follows (used by plans/q_extra.py
-    lsh_ann_topk, whose SQL oracle shares derive_planes' literals).
-    """
-    planes = derive_planes(seed, n_bits, dims)
-    return df.select(
-        F.col(id_col), F.col(vec_col), bucket_key_col(F.col(vec_col), planes).alias("bucket")
-    )
-
-
 def sq8_dequantize(vec: Column) -> Column:
     """Scalar-quantization round trip: per-vector (min, max) range,
     256 levels, code = floor((v - min)/step), value ≈ min + code·step.

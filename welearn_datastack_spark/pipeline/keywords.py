@@ -29,9 +29,19 @@ def extract_and_link(
     The dictionary update is MERGE-style and idempotent (J8); the
     link replacement is overwrite-by-key on the document id — exactly
     the reference's delete-then-insert (keywords_extractor.py:44–60)
-    without the transaction."""
-    kws = extract_keywords(docs, id_col=id_col, text_col=text_col, model_loader=model_loader)
-    dim = get_or_create(keyword_dim, kws, key="keyword", id_col="id")
+    without the transaction.
+
+    Both returned frames read the same two pins, made here: the
+    exploded ``(id, keyword)`` frame and the merged dimension. So the
+    keyword model runs once per document, and ``keyword_dim`` is
+    scanned once, however many times the caller writes or reads the
+    outputs; left lazy, every sink would re-run the UDF and the
+    dictionary scan. The pins live as long as the returned frames;
+    nothing is cached across calls."""
+    kws = extract_keywords(
+        docs, id_col=id_col, text_col=text_col, model_loader=model_loader
+    ).localCheckpoint(eager=True)
+    dim = get_or_create(keyword_dim, kws, key="keyword", id_col="id").localCheckpoint(eager=True)
     links = kws.join(F.broadcast(dim), on="keyword").select(
         F.col(id_col), F.col("id").alias("keyword_id")
     )
