@@ -216,9 +216,7 @@ def post_query_hygiene(spark) -> dict[str, int] | None:
     every LATER query in the pass is exactly the flap the per-round
     adjudications kept acquitting as 'session-state'. Clean state per
     query makes every wall self-contained; the probe-verdict memo
-    (Python-side) still makes warm-pass guard probes free.
-    SPARK_GRAFT_BENCH_CACHE_CLEAN=0 restores the legacy leave-dirty
-    behavior (A/B evidence)."""
+    (Python-side) still makes warm-pass guard probes free."""
     rec = _storage_info(spark)
     # clear UNCONDITIONALLY, not only when blocks materialized: a query
     # that registers a persist but errors/short-circuits before any
@@ -261,10 +259,9 @@ def _quiet_gate(full_run: bool, getloadavg=os.getloadavg, sleep=time.sleep) -> d
     invoke/start loadavgs, the wait, and whether the gate gave up
     (``overridden``), so a noisy stamp is LABELED, never blocked
     forever. Applies to FULL-headline runs (the canonical stamps) by
-    default; subset runs (bench_control, audit_scaling's isolated
-    re-runs, slim decade families) skip it unless
-    SPARK_GRAFT_BENCH_QUIET=1 forces it — an adjudication re-run must
-    not stall ten minutes behind the very marathon it adjudicates.
+    default; subset runs (targeted families, A/B pairs) skip it unless
+    SPARK_GRAFT_BENCH_QUIET=1 forces it — a short targeted run must
+    not stall ten minutes behind a marathon on the same box.
     SPARK_GRAFT_BENCH_QUIET=0 disables the gate entirely."""
     force = os.environ.get("SPARK_GRAFT_BENCH_QUIET", "")
     thr = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_LOADAVG", "4"))
@@ -301,15 +298,12 @@ def _quiet_gate(full_run: bool, getloadavg=os.getloadavg, sleep=time.sleep) -> d
 
 
 def _git_rev() -> str | None:
-    """Short rev (+ -dirty) of the MEASURED CODE — the anchor
-    tools/round_close.py's stale-stamp guard compares HEAD against
-    (round-14 verdict item 7). The -dirty suffix is computed over the
-    stamp SCOPE only (welearn_datastack_spark/ + bench.py): the close
-    protocol itself modifies tracked artifacts (PLANS.md, the
-    bench_runs/ canonicals) while stamps run, and a whole-tree
-    --dirty would therefore mark every close-produced stamp as
-    matching no commit (round-15; the dirty-is-stale rule needs a
-    fingerprint of the code, not of the artifacts the code wrote)."""
+    """Short rev (+ -dirty) of the MEASURED CODE. The -dirty suffix is
+    computed over the measured code only (welearn_datastack_spark/ +
+    bench.py): bench.py itself writes tracked artifacts (the
+    bench_runs/ canonicals), so a whole-tree --dirty would mark every
+    stamp after the first as matching no commit — the rev must
+    fingerprint the code, not the artifacts the code wrote."""
     import subprocess
 
     here = Path(__file__).resolve().parent
@@ -442,14 +436,11 @@ def main() -> None:
     # (random.Random(run_i)), so across the warm passes each query
     # samples different session positions and min-of-warm averages the
     # position effect out instead of baking it in. Deterministic given
-    # run count — reproducible across rounds. SPARK_GRAFT_BENCH_SHUFFLE=0
-    # restores the legacy fixed order (A/B evidence).
+    # run count — reproducible across rounds.
     # Codegen note: interleaving ~90 plans per pass would thrash
     # Spark's default 100-entry codegen cache and turn "warm" runs
     # into Janino recompiles; get_spark() raises
     # spark.sql.codegen.cache.maxEntries to 4096 for exactly this.
-    shuffle_order = os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "1") != "0"
-    cache_clean = os.environ.get("SPARK_GRAFT_BENCH_CACHE_CLEAN", "1") != "0"
     warm_by_query: dict[str, list[float]] = {}
     storage_by_query: dict[str, dict[str, int]] = {}
     positions: dict[str, list[int]] = {}
@@ -466,9 +457,8 @@ def main() -> None:
     artifact_dir = Path(__file__).resolve().parent / "bench_runs"
     artifact_dir.mkdir(exist_ok=True)
     stem = "subset" if subset else "latest"
-    # SPARK_GRAFT_BENCH_ARTIFACT redirects the artifact (used by the
-    # adjudication pass in tools/audit_scaling.py so its isolated
-    # re-runs never clobber the canonical subset_sf{sf}.json series)
+    # SPARK_GRAFT_BENCH_ARTIFACT redirects the artifact (A/B pairs and
+    # tests, so they never clobber the tracked bench_runs/ series)
     override = os.environ.get("SPARK_GRAFT_BENCH_ARTIFACT", "")
     tag = f"_{corpus}" if corpus else ""
     artifact = (
@@ -506,13 +496,11 @@ def main() -> None:
             "runs": n_runs,
             "passes_done": passes_done,
             "stat": f"min-of-{passes_done - 1}-warm",
-            "order_shuffle": shuffle_order,
             "median_total_sec": round(sum(p_med.values()), 3),
             "queries_median": p_med,
             "queries_rel_spread": p_spread,
             "queries_position": positions,
             "queries_shuffle": bytes_by_query,
-            "cache_clean": cache_clean,
             "queries_storage": storage_by_query,
             "shuffle_read_mb": rd,
             "shuffle_write_mb": wr,
@@ -542,8 +530,7 @@ def main() -> None:
 
     for run_i in range(n_runs):
         order = list(headline)
-        if shuffle_order:
-            random.Random(run_i).shuffle(order)
+        random.Random(run_i).shuffle(order)
         for pos, name in enumerate(order):
             if name in failed:
                 continue
@@ -571,15 +558,14 @@ def main() -> None:
                 # then clear it so the next query's wall is self-
                 # contained — a dirty-state stamp is now DETECTABLE
                 # (queries_storage nonzero) and IMPOSSIBLE (cleared)
-                if cache_clean:
-                    st = post_query_hygiene(spark)
-                    if st and st["rdds"]:
-                        prev = storage_by_query.get(name)
-                        if prev is None or (
-                            st["mem_bytes"] + st["disk_bytes"]
-                            > prev["mem_bytes"] + prev["disk_bytes"]
-                        ):
-                            storage_by_query[name] = st
+                st = post_query_hygiene(spark)
+                if st and st["rdds"]:
+                    prev = storage_by_query.get(name)
+                    if prev is None or (
+                        st["mem_bytes"] + st["disk_bytes"]
+                        > prev["mem_bytes"] + prev["disk_bytes"]
+                    ):
+                        storage_by_query[name] = st
                 # compact per-query stdout line: with console progress
                 # bars off (session.py), these are what the driver's
                 # ~2000-char tail shows — query names + times instead
@@ -588,14 +574,12 @@ def main() -> None:
             except PairVolumeExceeded as e:
                 guard_exits[name] = str(e)[:500]
                 failed.add(name)
-                if cache_clean:
-                    post_query_hygiene(spark)
+                post_query_hygiene(spark)
                 print(f"[p{run_i}] {name} GUARD-EXIT: {e}"[:200], flush=True)
             except Exception as e:  # noqa: BLE001
                 errors[name] = f"{type(e).__name__}: {e}"[:300]
                 failed.add(name)
-                if cache_clean:
-                    post_query_hygiene(spark)
+                post_query_hygiene(spark)
                 # keep any warm samples already collected — a transient
                 # failure on a LATE pass must not erase real timing
                 # signal (the error is recorded alongside, and the

@@ -197,3 +197,52 @@ def test_query_matches_oracle_on_degenerate_data(spark, degen_dir, degen_con, na
     spec = REGISTRY[name]
     issues = check_query(spark, spec, degen_dir, degen_con)
     assert not issues, f"{name}: {issues}"
+
+
+BPE_QUERIES = ["bpe_merge_3rounds", "bpe_encode_corpus", "token_budget_packing_bpe"]
+
+
+def _degenerate_dir(tmp_path, texts):
+    d = tmp_path / "sf_degenerate"
+    d.mkdir()
+    pd.DataFrame(
+        {
+            "doc_id": range(len(texts)),
+            "text": texts,
+            "lang": (["en", "fr"] * len(texts))[: len(texts)],
+            "source": ["s"] * len(texts),
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(d / "documents.parquet", index=False)
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "texts",
+    [
+        # no pairs at ALL: every word is a single character — round 1
+        # is already dry, the pre-fix SQL emptied v2..v4 and returned
+        # zero encode rows while Spark kept the vocab
+        ["a b c", "x y", "a a b"],
+        # merges exhaust after round 1: one distinct 2-char word —
+        # round 1 collapses it to a single symbol, rounds 2-3 are dry
+        ["ab ab", "ab", "ab ab ab"],
+        # exhaust after round 2: one distinct 3-char word
+        ["abc abc", "abc"],
+    ],
+    ids=["dry-round-1", "dry-round-2", "dry-round-3"],
+)
+def test_bpe_oracles_survive_dry_merge_rounds(spark, tmp_path, texts):
+    sf_dir = _degenerate_dir(tmp_path, texts)
+    con = duckdb_conn(sf_dir)
+    try:
+        for name in BPE_QUERIES:
+            issues = check_query(spark, REGISTRY[name], sf_dir, con)
+            assert not issues, f"{name}: {issues}"
+            # and the encode output is genuinely non-empty: the dry
+            # round must keep the vocab, not clear it
+            if name == "bpe_encode_corpus":
+                rows = REGISTRY[name].build(spark, sf_dir).collect()
+                assert len(rows) == len(texts)
+    finally:
+        con.close()

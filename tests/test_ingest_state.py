@@ -1,35 +1,12 @@
-"""Round-10 hardening guards: the bounded-window guard on
-make_transitions, the decision-log layout migration check, and the
-bucketed state store's self-describing LSH parameterization."""
+"""The ingest dedup state: the streaming decision log's layout and
+schema checks, the LSH parameters a state store persists (bucketed and
+folded stores), banding sized from a similarity target, and the plans
+of the decision-only probe in batch and streaming form."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from welearn_datastack_spark.pipeline.state import make_transitions
-
-
-def test_make_transitions_orders_small_batch(spark):
-    ids = spark.createDataFrame([(7,), (3,), (5,)], ["document_id"])
-    out = make_transitions(ids, "document_id", "url_retrieved", base_order=100)
-    rows = {r["document_id"]: r["operation_order"] for r in out.collect()}
-    # deterministic rank on the id, offset by base_order
-    assert rows == {3: 101, 5: 102, 7: 103}
-
-
-def test_make_transitions_guard_trips_on_unbounded_frame(spark):
-    """Feeding an over-ceiling frame into the single-task global
-    window must fail loudly (the 100 TB silent-serialization guard),
-    not quietly produce a one-core plan."""
-    from welearn_datastack_spark.operators.state_log import BOUNDED_INPUT_MAX_ROWS
-
-    big = spark.range(BOUNDED_INPUT_MAX_ROWS + 1).select(
-        F.col("id").alias("document_id")
-    )
-    out = make_transitions(big, "document_id", "url_retrieved", base_order=0)
-    with pytest.raises(Exception, match="bounded_input"):
-        out.agg(F.max("operation_order")).collect()
 
 
 def test_decision_log_legacy_flat_layout_raises(tmp_path):
@@ -81,6 +58,39 @@ def test_decision_log_counting_schema_raises(spark, tmp_path):
     _check_decision_log_layout(str(out))
 
 
+def test_decision_log_partial_migration_raises(spark, tmp_path):
+    """A MIXED decision log — one batch written by the counting era,
+    one by the decision era — must be rejected no matter which batch
+    the directory glob happens to order first. An earlier guard
+    sampled only the first glob hit, so a partially-migrated log
+    passed whenever that hit was new-schema."""
+    from welearn_datastack_spark.streaming.state_machine import (
+        _check_decision_log_layout,
+    )
+
+    out = tmp_path / "out"
+    current = spark.createDataFrame(
+        [(1, None, True, "near_dup")],
+        "doc_id long, exact_dup_of long, near_dup boolean, state string",
+    )
+    # batch_id=0 sorts FIRST: the old single-sample guard would read
+    # it, see the new schema, and wave the mixed log through
+    current.coalesce(1).write.parquet(str(out / "batch_id=0"))
+    legacy = spark.createDataFrame(
+        [(2, None, 3, "near_dup")],
+        "doc_id long, exact_dup_of long, n_near_candidates long, state string",
+    )
+    legacy.coalesce(1).write.parquet(str(out / "batch_id=1"))
+    with pytest.raises(RuntimeError, match="counting-probe schema"):
+        _check_decision_log_layout(str(out))
+    # all-new-schema multi-batch log passes
+    import shutil
+
+    shutil.rmtree(out / "batch_id=1")
+    current.coalesce(1).write.parquet(str(out / "batch_id=1"))
+    _check_decision_log_layout(str(out))
+
+
 def test_bucketed_store_params_roundtrip_and_conflict(spark, sf_dir):
     """The bucketed store is self-describing: build persists the LSH
     params as a band-store TBLPROPERTY, probe reads them back, and a
@@ -109,6 +119,33 @@ def test_bucketed_store_params_roundtrip_and_conflict(spark, sf_dir):
         probe_batch_bucketed(spark, batch, prefix, params=params)
         with pytest.raises(ValueError, match="LSH params mismatch"):
             probe_batch_bucketed(spark, batch, prefix, params=LshParams())
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
+
+
+def test_fold_state_bucketed_carries_params(spark, sf_dir, tmp_path):
+    """fold_state_bucketed moves the path store's lsh_params.json
+    sidecar into the folded tables' TBLPROPERTY, so a later
+    probe_batch_bucketed can never default-mismatch a non-default
+    store (the exact failure the sidecar exists to prevent)."""
+    from welearn_datastack_spark.pipeline.ingest_increment import (
+        LshParams,
+        build_state,
+        fold_state_bucketed,
+        load_table_params,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+        F.col("doc_id") < 100
+    )
+    params = LshParams(shingle_n=3, n_hashes=16, rows_per_band=4)
+    state = str(tmp_path / "state")
+    build_state(docs, state, params=params)
+    prefix = "params_fold_test"
+    fold_state_bucketed(spark, state, prefix)
+    try:
+        assert load_table_params(spark, prefix) == params
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
@@ -230,28 +267,48 @@ def test_decision_probe_matches_counting_probe(spark, sf_dir, tmp_path):
         assert nd[r["doc_id"]] == (r["n_near_candidates"] > 0), r
 
 
-def test_fold_state_bucketed_carries_params(spark, sf_dir, tmp_path):
-    """fold_state_bucketed moves the path store's lsh_params.json
-    sidecar into the folded tables' TBLPROPERTY, so a later
-    probe_batch_bucketed can never default-mismatch a non-default
-    store (the exact failure the sidecar exists to prevent)."""
-    from welearn_datastack_spark.pipeline.ingest_increment import (
-        LshParams,
-        build_state,
-        fold_state_bucketed,
-        load_table_params,
-    )
+def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
+    """The STREAM's per-micro-batch probe must ride the decision-only
+    path: probe_batch called with count_candidates falsey, LeftSemi in
+    the executed decision plan, and no counting-era candidate
+    aggregation (n_near_candidates) anywhere in it. §21.4 proved the
+    BATCH probe's bytes linear; this pins that the streaming wrapper
+    cannot silently regress onto the counting leg whose bytes grow
+    with corpus collision density (4.72x per 3x at sf30)."""
+    import glob
+    import os
+    import shutil
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("doc_id") < 100
-    )
-    params = LshParams(shingle_n=3, n_hashes=16, rows_per_band=4)
-    state = str(tmp_path / "state")
-    build_state(docs, state, params=params)
-    prefix = "params_fold_test"
-    fold_state_bucketed(spark, state, prefix)
-    try:
-        assert load_table_params(spark, prefix) == params
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
+    import welearn_datastack_spark.pipeline.ingest_increment as inc
+    from welearn_datastack_spark.sources.tables import load_table
+    from welearn_datastack_spark.streaming.state_machine import stream_ingest_probe
+
+    captured: dict = {}
+    real = inc.probe_batch
+
+    def spy(spark_, batch, state_dir, count_candidates=False, **precomputed):
+        d = real(
+            spark_, batch, state_dir,
+            count_candidates=count_candidates, **precomputed,
+        )
+        captured["count_candidates"] = count_candidates
+        captured["plan"] = d._jdf.queryExecution().executedPlan().toString()
+        return d
+
+    monkeypatch.setattr(inc, "probe_batch", spy)
+
+    docs = load_table(spark, sf_dir, "documents")
+    m = F.col("doc_id") % 5
+    work = str(tmp_path)
+    inc.build_state(docs.filter(m.isin(1, 2, 3)), f"{work}/state")
+    src = f"{work}/incoming"
+    docs.filter(m == 4).coalesce(1).write.mode("overwrite").parquet(f"{work}/tmp_a")
+    os.makedirs(src, exist_ok=True)
+    shutil.copy(glob.glob(f"{work}/tmp_a/part-*.parquet")[0], f"{src}/a.parquet")
+
+    stream_ingest_probe(spark, src, f"{work}/state", f"{work}/ckpt", f"{work}/out")
+
+    assert captured, "stream never reached probe_batch"
+    assert not captured["count_candidates"]
+    assert "LeftSemi" in captured["plan"], captured["plan"][:1500]
+    assert "n_near_candidates" not in captured["plan"]

@@ -5,6 +5,7 @@ tests/qdrant_syncronizer/) with deterministic stub models."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from welearn_datastack_spark.functions.udfs import (
@@ -29,6 +30,7 @@ from welearn_datastack_spark.pipeline.qdrant_sync import (
     route_collections,
     sync,
 )
+from welearn_datastack_spark.pipeline.state import make_transitions
 from welearn_datastack_spark.pipeline.url_ingest import insert_urls
 from welearn_datastack_spark.pipeline.vectorizer import vectorize
 
@@ -403,3 +405,25 @@ def test_merge_details_strict_and_nonstrict(spark):
     strict = merge_details(df, {"duration": F.lit("9")}, strict=True)
     got2 = {r["id"]: _json.loads(r["details"]) for r in strict.collect()}
     assert got2["a"]["duration"] == "9"  # strict recompute overwrites
+
+
+def test_make_transitions_orders_small_batch(spark):
+    ids = spark.createDataFrame([(7,), (3,), (5,)], ["document_id"])
+    out = make_transitions(ids, "document_id", "url_retrieved", base_order=100)
+    rows = {r["document_id"]: r["operation_order"] for r in out.collect()}
+    # deterministic rank on the id, offset by base_order
+    assert rows == {3: 101, 5: 102, 7: 103}
+
+
+def test_make_transitions_guard_trips_on_unbounded_frame(spark):
+    """Feeding an over-ceiling frame into the single-task global
+    window must fail loudly (the 100 TB silent-serialization guard),
+    not quietly produce a one-core plan."""
+    from welearn_datastack_spark.operators.state_log import BOUNDED_INPUT_MAX_ROWS
+
+    big = spark.range(BOUNDED_INPUT_MAX_ROWS + 1).select(
+        F.col("id").alias("document_id")
+    )
+    out = make_transitions(big, "document_id", "url_retrieved", base_order=0)
+    with pytest.raises(Exception, match="bounded_input"):
+        out.agg(F.max("operation_order")).collect()

@@ -334,3 +334,21 @@ def test_snapshot_tail_filter_pushed_to_log_scan(spark, sf_dir):
     query silently re-reads the full history at 100 TB."""
     plan = _plan(spark, sf_dir, "snapshot_tail_read")
     assert "PushedFilters: [IsNotNull(ts), GreaterThan(ts," in plan, plan[:2000]
+
+
+def test_ivf_grouped_topk_plan_is_bucketed(spark, sf_dir):
+    """The grouped serve path must be the bucketed IVF join, not a
+    crossJoin against the corpus (the whole point vs grouped_vector_
+    search): candidates from a broadcast EQUI-join on cent_id, no
+    nested-loop/cartesian anywhere, no Python in the plan."""
+    plan = _plan(spark, sf_dir, "ivf_grouped_topk")
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "EvalPython" not in plan
+
+
+def test_bpe_encode_corpus_plan_stays_jvm(spark, sf_dir):
+    plan = _plan(spark, sf_dir, "bpe_encode_corpus")
+    assert "EvalPython" not in plan
+    assert "CartesianProduct" not in plan

@@ -4,6 +4,9 @@ the example-based tests."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -14,6 +17,7 @@ from welearn_datastack_spark.functions.udfs import (
     stub_embedder,
     stub_keyword_extractor,
 )
+from welearn_datastack_spark.plans.registry import all_queries
 
 words = st.text(alphabet="abcdefghij", min_size=1, max_size=8)
 texts = st.lists(words, min_size=0, max_size=60).map(" ".join)
@@ -219,3 +223,59 @@ def test_cc_star_local_finish_mid_loop_switch(spark):
     }
     assert got_mid == _union_find_labels(edges)
     assert stats_mid["local_finish"] and stats_mid["rounds"] >= 1, stats_mid
+
+
+def _ref_bpe_doc_counts(rows: list[dict]) -> dict:
+    """Pure-Python Sennrich BPE, 3 merge rounds, same conventions as
+    the engine: ASCII \\w+ lowercased words, pair counts weighted by
+    word frequency, argmax by (cnt DESC, left, right), greedy
+    left-to-right fold where a just-merged token never re-merges
+    within its round."""
+    vocab: Counter = Counter()
+    doc_words: dict = {}
+    for row in rows:
+        ws = re.findall(r"[A-Za-z0-9_]+", row["text"].lower())
+        doc_words[row["doc_id"]] = ws
+        vocab.update(ws)
+    seqs = {w: list(w) for w in vocab}
+    for _ in range(3):
+        pc: Counter = Counter()
+        for w, n in vocab.items():
+            s = seqs[w]
+            for a, b in zip(s, s[1:]):
+                pc[(a, b)] += n
+        if not pc:
+            break
+        (left, right), _cnt = min(
+            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+        )
+        merged = left + right
+        for w, s in seqs.items():
+            out = [s[0]]
+            for x in s[1:]:
+                if out[-1] == left and x == right:
+                    out[-1] = merged
+                else:
+                    out.append(x)
+            seqs[w] = out
+    return {
+        d: (len(ws), sum(len(seqs[w]) for w in ws))
+        for d, ws in doc_words.items()
+    }
+
+
+def test_bpe_encode_corpus_matches_pure_python_reference(spark, sf_dir):
+    """Every per-doc (n_words, n_bpe_tokens) must agree with the
+    independent Python implementation — merge choice, tie-break, fold
+    semantics, and the corpus join-back all pinned at once."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(
+        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
+    ).to_pylist()
+    ref = _ref_bpe_doc_counts(rows)
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
+        for r in all_queries()["bpe_encode_corpus"](spark, sf_dir).collect()
+    }
+    assert got == ref

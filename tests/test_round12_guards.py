@@ -1,13 +1,11 @@
-"""Round-12 hardening pins: the pre-flight pair-volume disk-budget
-guard (both branches — the round-11 sf100 minhash diagnostic burned 98
-minutes before dying on 'No space left on device'; the guard must make
-that an exit-in-seconds verdict), its probe-skip fast path, and its
-mode/budget resolution."""
+"""Pair-volume guard pins: the pre-flight disk-budget guard's fail,
+sample and pass branches, its probe-skip fast path and mode/budget
+resolution, the guarded minhash and simhash queries, and the stream
+probe's broadcast-to-exchange plan transition."""
 
 from __future__ import annotations
 
 import math
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,8 +15,6 @@ from welearn_datastack_spark.operators.dedup import (
     hexint,
     pair_volume_guard,
 )
-
-REPO = Path(__file__).resolve().parent.parent
 
 
 def _mega_bucket(spark, n=100):
@@ -127,62 +123,7 @@ def test_pair_guard_mode_off_and_conf_resolution(spark):
         pair_volume_guard(df, ["band", "band_key"], "doc_id", mode="explode")
 
 
-# --- adjudicator verdict fixtures (round-12 item 5) ------------------
-# Of audit_scaling.py's four machine verdicts, only session-state and
-# bytes-grew had real-data coverage through round 11; the branch that
-# would catch a TRUE regression (persists-isolated) had never fired.
-# This fixture runs the real adjudication path end-to-end — a genuine
-# bench.py fresh-JVM isolated re-run — against two synthetic flags
-# engineered so one query's inflation survives isolation (A understates
-# its baseline 20x below any achievable wall) and the other's does not
-# (A overstates it 100x above), pinning BOTH verdict branches in one
-# subprocess pass.
-
-
-def test_adjudicator_persists_isolated_and_session_state_branches(tmp_path):
-    import json
-    import subprocess
-    import sys
-
-    q_fast = "group_counts"   # ~0.1-0.5 s at sf0.001; iso_med >> 0.02*3.75
-    q_slow = "octet_projection"  # iso_med << 60*3.75
-    bytes_block = {
-        q_fast: {"shuffle_write_bytes": 1_000_000},
-        q_slow: {"shuffle_write_bytes": 1_000_000},
-    }
-    a = {
-        "queries_median": {q_fast: 0.02, q_slow: 60.0},
-        "queries_shuffle": bytes_block,  # identical bytes → ratio 1.0 (linear)
-    }
-    b = {
-        "queries_median": {q_fast: 0.2, q_slow: 600.0},  # both flag at 10x
-        "queries_shuffle": bytes_block,
-        "sf_dir": "/root/testdata/sf0.001",
-    }
-    a_path, b_path = tmp_path / "a.json", tmp_path / "b.json"
-    a_path.write_text(json.dumps(a))
-    b_path.write_text(json.dumps(b))
-    proc = subprocess.run(
-        [
-            sys.executable, str(REPO / "tools" / "audit_scaling.py"),
-            str(a_path), str(b_path), "3.0", "--adjudicate", "--runs", "2",
-        ],
-        cwd=REPO, capture_output=True, text=True, timeout=600,
-    )
-    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
-    adj = json.loads(b_path.read_text())["adjudication"]
-    # the inflation A could never have produced persists in a fresh JVM
-    assert adj[q_fast]["verdict"] == "persists-isolated", adj[q_fast]
-    # the inflation a marathon could have produced is acquitted
-    assert adj[q_slow]["verdict"] == "session-state", adj[q_slow]
-    # like-vs-like: the verdict stat is the isolated MEDIAN (ADVICE r11)
-    assert adj["_meta"]["verdict_stat"].startswith("isolated_median_sec")
-    assert adj[q_fast]["isolated_ratio_vs_a"] == round(
-        adj[q_fast]["isolated_median_sec"] / 0.02, 2
-    )
-
-
-# --- streaming-probe first-rung plan transition (round-12 item 6) ----
+# --- streaming-probe first-rung plan transition ---------------------
 # SCALE.md §22.5 explains the stream probe's steep sf1→sf3 byte rung
 # (5.05x for 3x data) as a broadcast→exchange plan transition: at sf1
 # the stored state side fits under the broadcast threshold so the

@@ -1,8 +1,7 @@
-"""Round-14 pins: adaptive chunking for the jaccard family (the probe's
-max-bucket certificate picks the un-split pair join), guard-mode
-pinning for oracle parity (round-13 ADVICE #1), probe-memo staleness
-hardening (#2), the guard-cache accounting/release surface (#3 +
-verdict item 6), and the memoized-pass re-persist (#5)."""
+"""Adaptive chunking for the jaccard family (the probe's max-bucket
+certificate picks the un-split pair join), guard-mode pinning for
+oracle parity, probe-memo staleness and cap, the guard-cache
+accounting/release surface, and the memoized-pass re-persist."""
 
 from __future__ import annotations
 
@@ -32,7 +31,7 @@ def _chunk_split_markers(plan: str) -> bool:
     return "ci#" in plan and "cj#" in plan
 
 
-# --- adaptive chunking (round-14 verdict item 1) ---------------------
+# --- adaptive chunking ----------------------------------------------
 
 
 def test_jaccard_adaptive_takes_direct_plan_when_buckets_small(spark):
@@ -85,7 +84,7 @@ def test_jaccard_sample_branch_never_takes_direct_plan(spark):
         spark.conf.unset("spark.welearn.pairGuard.budget")
 
 
-# --- guard-mode pinning (round-13 ADVICE #1) -------------------------
+# --- guard-mode pinning ---------------------------------------------
 
 
 def test_guard_mode_pin_overrides_session_sample_conf(spark):
@@ -108,7 +107,7 @@ def test_guard_mode_pin_overrides_session_sample_conf(spark):
         spark.conf.unset("spark.welearn.pairGuard.budget")
 
 
-# --- probe-memo staleness + cap (round-13 ADVICE #2) -----------------
+# --- probe-memo staleness + cap -------------------------------------
 
 
 def test_input_snapshot_changes_on_in_place_rewrite(spark, tmp_path):
@@ -157,7 +156,7 @@ def test_probe_memo_is_capped(spark, monkeypatch):
     assert clear_probe_memo() > 0 and len(_PROBE_MEMO) == 0
 
 
-# --- guard-cache accounting (ADVICE #3 + verdict item 6) -------------
+# --- guard-cache accounting -----------------------------------------
 
 
 def test_guard_cache_info_and_bulk_release(spark):
@@ -176,7 +175,7 @@ def test_guard_cache_info_and_bulk_release(spark):
 
 
 def test_memo_hit_repersists_idempotently(spark):
-    """ADVICE #5: a caller that unpersisted after its sink must still
+    """A caller that unpersisted after its sink must still
     get probe/run sharing on LATER builds — the memoized pass re-marks
     the frame persisted instead of silently skipping the cache."""
     release_guard_caches()
@@ -196,8 +195,8 @@ def test_memo_hit_repersists_idempotently(spark):
 
 
 def test_sampled_cache_feeds_sibling_plan(spark, sf_dir):
-    """Pin of the claimed sibling-query cache hit (round-13 verdict
-    item 6): after minhash_lsh_candidates_sampled's persist_on_probe
+    """Pin of the claimed sibling-query cache hit: after
+    minhash_lsh_candidates_sampled's persist_on_probe
     caches the shared band frame, the hashed sibling's physical plan
     reads through the InMemoryRelation; releasing the guard caches
     restores the cold plan within the tight exchange budget."""

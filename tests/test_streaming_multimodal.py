@@ -272,3 +272,124 @@ def test_multimodal_narrow_column_seams_equivalent(spark):
     # null payload rows stay dead-letter (null fields), not exceptions
     nulls = [t for t in got_s if t[0] == 3]
     assert nulls and nulls[0][1] is None and nulls[0][3] is None
+
+
+def _valid_png(w: int, h: int) -> bytes:
+    import struct
+    import zlib
+
+    data = b"IHDR" + struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + struct.pack(">I", 13)
+        + data
+        + struct.pack(">I", zlib.crc32(data))
+        + b"\x00\x00\x00\x00IEND\xaeB`\x82"
+    )
+
+
+def _valid_jpeg(w: int, h: int) -> bytes:
+    import struct
+
+    return (
+        b"\xff\xd8"
+        + b"\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+        + b"\xff\xc0\x00\x11\x08"
+        + struct.pack(">HH", h, w)
+        + b"\x03\x01\x11\x00\x02\x11\x01\x03\x11\x01"
+        + b"\xff\xd9"
+    )
+
+
+def test_parse_image_header_png_jpeg():
+    from welearn_datastack_spark.operators.multimodal import parse_image_header
+
+    assert parse_image_header(_valid_png(640, 480)) == (640, 480, "png")
+    assert parse_image_header(_valid_jpeg(123, 77)) == (123, 77, "jpeg")
+    # progressive JPEG: SOF2 instead of SOF0
+    prog = _valid_jpeg(50, 60).replace(b"\xff\xc0", b"\xff\xc2")
+    assert parse_image_header(prog) == (50, 60, "jpeg")
+    # corrupt: truncated PNG sig, garbage, empty, None, zero dims
+    assert parse_image_header(b"\x89PNG\r\n\x1a\n\x00\x00") == (None, None, None)
+    assert parse_image_header(b"\xde\xad\xbe\xef") == (None, None, None)
+    assert parse_image_header(b"") == (None, None, None)
+    assert parse_image_header(None) == (None, None, None)
+    assert parse_image_header(_valid_png(0, 10)) == (None, None, None)
+    # JPEG with EOI before any SOF (no frame header)
+    assert parse_image_header(b"\xff\xd8\xff\xd9") == (None, None, None)
+    # DHT (C4) must be walked over, not mistaken for a SOF
+    dht_first = (
+        b"\xff\xd8" + b"\xff\xc4\x00\x04\x00\x00" + _valid_jpeg(9, 8)[2:]
+    )
+    assert parse_image_header(dht_first) == (9, 8, "jpeg")
+
+
+def test_synth_payloads_roundtrip_through_parser(spark):
+    """The JVM-side synthesizers and the Python parser agree — the
+    same invariant the multimodal_decode oracle gates, pinned here
+    against hand-built reference bytes too."""
+    from welearn_datastack_spark.operators.multimodal import (
+        parse_image_header,
+        synth_jpeg,
+        synth_png,
+    )
+
+    df = spark.createDataFrame([(640, 480), (16, 527)], ["w", "h"])
+    rows = df.select(
+        synth_png(F.col("w"), F.col("h")).alias("png"),
+        synth_jpeg(F.col("w"), F.col("h")).alias("jpg"),
+        "w",
+        "h",
+    ).collect()
+    for r in rows:
+        assert bytes(r["png"]) == _valid_png(r["w"], r["h"])
+        assert bytes(r["jpg"]) == _valid_jpeg(r["w"], r["h"])
+        assert parse_image_header(bytes(r["png"])) == (r["w"], r["h"], "png")
+        assert parse_image_header(bytes(r["jpg"])) == (r["w"], r["h"], "jpeg")
+
+
+def test_parse_image_header_fuzz_never_raises():
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from welearn_datastack_spark.operators.multimodal import parse_image_header
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.binary(max_size=256))
+    def check(payload):
+        w, h, fmt = parse_image_header(payload)
+        # total contract: garbage → the dead-letter triple; anything
+        # accepted must carry positive dims and a known format
+        if fmt is None:
+            assert (w, h) == (None, None)
+        else:
+            assert fmt in ("png", "jpeg") and w > 0 and h > 0
+
+    check()
+
+
+def test_parse_image_header_truncation_fuzz():
+    """Any prefix of a valid payload either parses to the SAME
+    dimensions (header fully inside the prefix) or dead-letters —
+    never to different dimensions. This is the property that makes
+    corrupt-tail multi-GB objects safe to route at scale."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from welearn_datastack_spark.operators.multimodal import parse_image_header
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        st.integers(min_value=1, max_value=4096),
+        st.integers(min_value=1, max_value=4096),
+        st.booleans(),
+        st.integers(min_value=0, max_value=64),
+    )
+    def check(w, h, use_png, cut):
+        full = _valid_png(w, h) if use_png else _valid_jpeg(w, h)
+        fmt_full = parse_image_header(full)
+        assert fmt_full == (w, h, "png" if use_png else "jpeg")
+        got = parse_image_header(full[: max(0, len(full) - cut)])
+        assert got in (fmt_full, (None, None, None))
+
+    check()

@@ -1,20 +1,26 @@
-"""Round-13 pins: the volume-guard doctrine generalized to every
-pair-materializing diagnostic (jaccard_pairs quadratic model,
-semantic-dedup chunk-split model), the shared _volume_guard scaffold's
-persist-on-probe semantics, and the two adjudicator verdict branches
-(bytes-grew / no-byte-evidence) that round 12 left to real-data
-happenstance."""
+"""Pre-flight volume guards of the pair-materializing operators: the
+jaccard and semantic-dedup guards, the probe memo and its input
+snapshot, and persist-on-probe caching. The pair-guard branches live in
+test_round12_guards.py; adaptive chunking, mode pins and the guard
+caches in test_round14_guards.py."""
 
 from __future__ import annotations
 
+import importlib.util
+import sys
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+import welearn_datastack_spark.operators.dedup as dedup_mod
 from welearn_datastack_spark.operators.dedup import (
+    _PROBE_MEMO,
     PairVolumeExceeded,
+    _input_snapshot,
+    clear_probe_memo,
     jaccard_pairs,
+    pair_volume_guard,
     replicated_volume_guard,
     word_shingles,
 )
@@ -30,7 +36,7 @@ def _docs(spark, n=24, text="alpha beta gamma delta epsilon zeta"):
     )
 
 
-# --- jaccard_pairs guard (round-13 item 1: the last unguarded
+# --- jaccard_pairs guard (the last unguarded
 # quadratic — its pair stream IS shuffled by the pair-count groupBy, so
 # the quadratic Σ C(c,2) model applies) ------------------------------
 
@@ -118,6 +124,100 @@ def test_semantic_dedup_guard_engages_on_tiny_budget(spark, sf_dir):
         spark.conf.unset("spark.welearn.pairGuard.budget")
 
 
+def test_input_snapshot_returns_none_on_listing_failure(spark):
+    class Boom:
+        def inputFiles(self):
+            raise RuntimeError("listing unavailable")
+
+    assert _input_snapshot(Boom()) is None
+
+
+def test_memo_skipped_when_snapshot_fails(spark, monkeypatch):
+    """A plan whose input listing fails must RE-PROBE every build —
+    a plan-hash-only memo key could stale-hit after an unlistable
+    source was rewritten in place (the under-gating hazard)."""
+    clear_probe_memo()
+    monkeypatch.setattr(dedup_mod, "_input_snapshot", lambda df: None)
+    df = spark.createDataFrame([(1, "a"), (2, "a")], ["doc_id", "bk"])
+    out = pair_volume_guard(df, ["bk"], "doc_id", budget_bytes=1 << 30)
+    assert out.count() == 2
+    assert len(_PROBE_MEMO) == 0  # nothing memoized under a None key
+
+
+def _load_module(name: str, path: Path):
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[name] = mod
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_gen_sf_regen_invalidates_probe_memo(spark):
+    """The corpora-regen tool calls the memo hook,
+    so an in-session in-place rewrite cannot stale-hit a verdict."""
+    gen = _load_module("gen_sf_r15", REPO / "tools" / "gen_sf.py")
+    clear_probe_memo()
+    df = spark.createDataFrame([(1, "a")], ["doc_id", "bk"])
+    pair_volume_guard(df, ["bk"], "doc_id", budget_bytes=1 << 30)
+    assert len(_PROBE_MEMO) == 1
+    gen._invalidate_guard_memos()
+    assert len(_PROBE_MEMO) == 0
+
+
+def test_gen_sf_regen_releases_live_guard_caches(spark):
+    from welearn_datastack_spark.operators import dedup
+
+    sys.path.insert(0, str(REPO / "tools"))
+    try:
+        import gen_sf
+    finally:
+        sys.path.pop(0)
+
+    # start from an empty block manager: pins other tests left behind
+    # (localCheckpoint frames, not guard caches) would count below
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist()
+    df = spark.range(50).selectExpr("id")
+    df.persist().count()
+    dedup._GUARD_PERSISTS["__t__"] = df
+    try:
+        gen_sf._invalidate_guard_memos()
+        assert "__t__" not in dedup._GUARD_PERSISTS
+        assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
+    finally:
+        dedup._GUARD_PERSISTS.pop("__t__", None)
+        df.unpersist()
+
+
+def test_memo_count_invalidates_on_rewrite(spark, tmp_path):
+    """The sizing-count memo must key on input content — a
+    same-path in-place rewrite re-counts, a repeat build memo-hits,
+    and clear_count_memo drops everything (the regen hook)."""
+    from welearn_datastack_spark.sources.tables import (
+        _COUNT_MEMO,
+        clear_count_memo,
+        memo_count,
+    )
+
+    p = str(tmp_path / "t.parquet")
+    spark.range(7).write.mode("overwrite").parquet(p)
+    clear_count_memo()
+    assert memo_count(spark.read.parquet(p)) == 7
+    n_keys = len(_COUNT_MEMO)
+    assert n_keys == 1
+    # repeat build of the same plan over unchanged files: memo hit
+    assert memo_count(spark.read.parquet(p)) == 7
+    assert len(_COUNT_MEMO) == n_keys
+    # in-place rewrite: the snapshot (mtime/size/paths) changes, the
+    # stale 7 must not be served
+    import time
+
+    time.sleep(0.05)  # mtime_ns granularity guard
+    spark.range(11).write.mode("overwrite").parquet(p)
+    assert memo_count(spark.read.parquet(p)) == 11
+    assert clear_count_memo() >= 1 and not _COUNT_MEMO
+
+
 def test_persist_on_probe_caches_and_fail_branch_releases(spark):
     df = spark.range(50).select(
         F.col("id").alias("doc_id"), F.lit(0).alias("b"), F.lit("k").alias("bk")
@@ -132,7 +232,7 @@ def test_persist_on_probe_caches_and_fail_branch_releases(spark):
     # query that declines to run must not leak executor storage).
     # chunk_target differs from the call above so the probe_key is
     # distinct — a _PROBE_MEMO hit would skip the persist entirely and
-    # make this assertion vacuous (round-13 review finding)
+    # make this assertion vacuous
     with pytest.raises(PairVolumeExceeded):
         replicated_volume_guard(
             df, ["b", "bk"], "doc_id", budget_bytes=10,
@@ -145,110 +245,3 @@ def test_persist_on_probe_caches_and_fail_branch_releases(spark):
     )
     assert out2.count() == 50
     out2.unpersist()
-
-
-# --- adjudicator verdict matrix completion (round-13 item 4):
-# bytes-grew and no-byte-evidence never fired on real data; this
-# fixture pins both WITHOUT any isolated re-run (they are decided
-# before the re-run pass, so the test is subprocess-cheap). ----------
-
-
-def test_adjudicator_bytes_grew_and_no_byte_evidence_branches(tmp_path):
-    import json
-    import subprocess
-    import sys
-
-    a = {
-        "queries_median": {"q_bytes": 1.0, "q_noev": 1.0, "q_ok": 1.0},
-        "queries_shuffle": {
-            "q_bytes": {"shuffle_write_bytes": 1_000_000},
-            # q_noev: A side lacks byte accounting entirely
-            "q_ok": {"shuffle_write_bytes": 1_000_000},
-        },
-    }
-    b = {
-        "queries_median": {"q_bytes": 10.0, "q_noev": 10.0, "q_ok": 2.0},
-        "queries_shuffle": {
-            # 10x bytes for 3x data: byte ratio 10 > 3.0 * 1.35
-            "q_bytes": {"shuffle_write_bytes": 10_000_000},
-            "q_noev": {"shuffle_write_bytes": 10_000_000},
-            "q_ok": {"shuffle_write_bytes": 3_000_000},
-        },
-        "sf_dir": "/root/testdata/sf0.001",
-    }
-    a_path, b_path = tmp_path / "a.json", tmp_path / "b.json"
-    a_path.write_text(json.dumps(a))
-    b_path.write_text(json.dumps(b))
-    proc = subprocess.run(
-        [
-            sys.executable, str(REPO / "tools" / "audit_scaling.py"),
-            str(a_path), str(b_path), "3.0", "--adjudicate",
-        ],
-        cwd=REPO, capture_output=True, text=True, timeout=120,
-    )
-    assert proc.returncode == 0, proc.stdout[-1500:] + proc.stderr[-1500:]
-    adj = json.loads(b_path.read_text())["adjudication"]
-    assert adj["q_bytes"]["verdict"] == "bytes-grew"
-    assert adj["q_bytes"]["byte_ratio"] == 10.0
-    assert adj["q_noev"]["verdict"] == "no-byte-evidence"
-    # q_ok is 2x for 3x data — not flagged, no verdict entry
-    assert "q_ok" not in adj
-
-
-# --- bench.py quiet-box gate (round-13 item 2) -----------------------
-
-
-def test_bench_quiet_gate_waits_records_and_overrides(monkeypatch):
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_LOADAVG", "4")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_WAIT", "600")
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_QUIET", raising=False)
-
-    # busy box that quiets down after two polls → gate waits, records
-    loads = iter([9.0, 7.0, 1.5])
-    slept = []
-    rec = bench._quiet_gate(
-        full_run=True,
-        getloadavg=lambda: (next(loads), 0, 0),
-        sleep=lambda s: slept.append(s),
-    )
-    assert rec["enabled"] and len(slept) == 2
-    assert rec["loadavg_at_invoke"] == 9.0 and rec["loadavg_at_start"] == 1.5
-    assert not rec["overridden"]
-
-    # box never quiets within the budget → proceed, LABELED overridden
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_WAIT", "0")
-    rec = bench._quiet_gate(
-        full_run=True, getloadavg=lambda: (9.0, 0, 0), sleep=lambda s: None
-    )
-    assert rec["overridden"] and rec["loadavg_at_start"] == 9.0
-
-    # already quiet → no wait at all
-    rec = bench._quiet_gate(
-        full_run=True,
-        getloadavg=lambda: (0.5, 0, 0),
-        sleep=lambda s: (_ for _ in ()).throw(AssertionError("slept")),
-    )
-    assert rec["waited_sec"] == 0.0 and not rec["overridden"]
-
-    # subset runs skip the gate (adjudication re-runs must not stall
-    # behind the marathon they adjudicate) unless QUIET=1 forces it
-    rec = bench._quiet_gate(
-        full_run=False,
-        getloadavg=lambda: (9.0, 0, 0),
-        sleep=lambda s: (_ for _ in ()).throw(AssertionError("slept")),
-    )
-    assert not rec["enabled"]
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET", "1")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_WAIT", "0")
-    rec = bench._quiet_gate(
-        full_run=False, getloadavg=lambda: (9.0, 0, 0), sleep=lambda s: None
-    )
-    assert rec["enabled"] and rec["overridden"]
-    # and QUIET=0 disables even full runs
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET", "0")
-    rec = bench._quiet_gate(
-        full_run=True, getloadavg=lambda: (9.0, 0, 0), sleep=lambda s: None
-    )
-    assert not rec["enabled"]

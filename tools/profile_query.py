@@ -1,22 +1,21 @@
 #!/usr/bin/env python
-"""Per-query overhead profiler (optimization round 15).
+"""Per-layer account of registered queries, measured with the
+benchmark's own tracer (``perfbench/spans.py``).
 
-Splits a registered query's wall into the phases the bench's single
-noop-sink timing cannot distinguish:
+    python tools/profile_query.py SF_DIR NAME [NAME ...]
 
-  build    - Python DSL time to construct the DataFrame (driver only;
-             includes any .collect()-driven sub-jobs the builder runs,
-             e.g. k-means iteration collects or quantizer seeds)
-  analyze  - first .schema touch (Catalyst analysis of the final plan)
-  exec0    - first noop sink (optimization + codegen compile + run)
-  execN    - min of N repeat noop sinks on the SAME DataFrame object
-             (steady-state execution: job scheduling + task run)
-  rebuildN - min of N full rebuild+sink cycles (what bench.py times on
-             warm passes: DSL + analysis + optimization + cached
-             codegen + run)
-  jobs     - Spark jobs launched by one rebuild cycle (status API)
+Each named query runs once untimed (its plan compiled and JIT-warmed),
+then once traced, with the spans ``query_short``'s timed pass opens:
+``op`` around ``plans.build`` (the DSL build, with every
+``sources.load_table`` call inside it), ``catalyst.plan`` and
+``exec.sink`` (a noop write). After each run, ``bench.py``'s
+``post_query_hygiene`` drops what the run left cached, as
+``query_short`` does between ops.
 
-Usage: python tools/profile_query.py [sf_dir] name [name ...]
+One JSON line per query: the per-layer metrics of ``layer_report`` for
+that single pass (``exec.jobs``, ``plans.build_jobs``, ``driver.gap_s``,
+...) and its op account (wall time, self time per layer, ``covered``,
+job time, driver gap).
 """
 
 from __future__ import annotations
@@ -24,102 +23,61 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path[:0] = [str(ROOT), str(ROOT / "perfbench")]
 
-os.environ.setdefault("SPARK_GRAFT_UI", "true")
+# the tracer reads job and stage figures from Spark's status API; the
+# engine is sized to this machine, as perfbench sizes it
+os.environ["SPARK_GRAFT_UI"] = "true"
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
-from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
-from welearn_datastack_spark.session import get_spark
+from run import instrument_sources  # noqa: E402
+from spans import Tracer, fetch_status, layer_report  # noqa: E402
 
-
-def _job_count(spark) -> int | None:
-    try:
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return None
-        app_id = spark.sparkContext.applicationId
-        url = f"{base}/api/v1/applications/{app_id}/jobs"
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return len(json.load(r))
-    except Exception:  # noqa: BLE001
-        return None
+from bench import post_query_hygiene  # noqa: E402
+from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups  # noqa: E402
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def profile(spark, tracer: Tracer, op: int, name: str, sf_dir: str) -> dict:
+    build = REGISTRY[name].build
+    build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    post_query_hygiene(spark)
+    tracer.spans = []
+    tracer.enabled = True
+    with tracer.span("op", op=op):
+        with tracer.span("plans.build"):
+            df = build(spark, sf_dir)
+        with tracer.span("catalyst.plan"):
+            df._jdf.queryExecution().executedPlan()
+        with tracer.span("exec.sink"):
+            df.write.format("noop").mode("overwrite").save()
+    tracer.enabled = False
+    post_query_hygiene(spark)
+    metrics, accounts = layer_report(tracer.spans, fetch_status(spark), passes=1)
+    return {"query": name, **metrics, **accounts[0]}
 
 
-def profile(spark, name: str, sf_dir: str, n: int = 3) -> dict:
-    spec = REGISTRY[name]
-    rec: dict = {"name": name}
-
-    t0 = time.perf_counter()
-    df = spec.build(spark, sf_dir)
-    rec["build"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    _ = df.schema
-    rec["analyze"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    _noop(df)
-    rec["exec0"] = time.perf_counter() - t0
-
-    execs = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        _noop(df)
-        execs.append(time.perf_counter() - t0)
-    rec["execN"] = min(execs)
-
-    rebuilds = []
-    jobs_before = _job_count(spark)
-    for i in range(n):
-        t0 = time.perf_counter()
-        df2 = spec.build(spark, sf_dir)
-        _noop(df2)
-        rebuilds.append(time.perf_counter() - t0)
-        if i == 0 and jobs_before is not None:
-            after = _job_count(spark)
-            rec["jobs_per_cycle"] = None if after is None else after - jobs_before
-    rec["rebuildN"] = min(rebuilds)
-    return rec
-
-
-def main() -> int:
-    args = sys.argv[1:]
-    sf_dir = "/root/testdata/sf0.1"
-    if args and os.path.isdir(args[0]):
-        sf_dir = args.pop(0)
+def main(argv: list[str]) -> int:
+    if len(argv) < 2:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    sf_dir, names = argv[0], argv[1:]
     _load_groups()
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        print(f"profile_query: not registered: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    from welearn_datastack_spark.session import get_spark
+
     spark = get_spark("profile-query")
-    # warm parquet footers + JVM like bench.py
-    for warm_table in ("lineitem", "documents", "events", "region"):
-        if os.path.exists(f"{sf_dir}/{warm_table}.parquet"):
-            spark.read.parquet(f"{sf_dir}/{warm_table}.parquet").count()
-            break
-    names = args or list(REGISTRY)
-    print(
-        f"{'query':36s} {'build':>7s} {'analyze':>7s} {'exec0':>7s}"
-        f" {'execN':>7s} {'rebuildN':>8s} {'jobs':>5s}"
-    )
-    for name in names:
-        if name not in REGISTRY:
-            print(f"{name}: not registered", file=sys.stderr)
-            continue
-        r = profile(spark, name, sf_dir)
-        print(
-            f"{r['name']:36s} {r['build']:7.3f} {r['analyze']:7.3f}"
-            f" {r['exec0']:7.3f} {r['execN']:7.3f} {r['rebuildN']:8.3f}"
-            f" {str(r.get('jobs_per_cycle')):>5s}",
-            flush=True,
-        )
+    tracer = Tracer(spark, enabled=False)
+    instrument_sources(tracer)
+    for op, name in enumerate(names):
+        print(json.dumps(profile(spark, tracer, op, name, sf_dir)), flush=True)
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

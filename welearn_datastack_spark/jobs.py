@@ -26,7 +26,7 @@ def _enrich(args: argparse.Namespace) -> None:
     from .pipeline.qdrant_sync import build_points, doc_top2_sdgs
     from .pipeline.vectorizer import vectorize
     from .session import get_spark
-    from .sources.tables import load_table
+    from .sources.tables import empty_frame, load_table
 
     spark = get_spark("welearn-enrich")
     read = spark.read.parquet
@@ -51,8 +51,8 @@ def _enrich(args: argparse.Namespace) -> None:
     spark_docs = docs.select(
         F.col("doc_id").cast("string").alias("document_id"), F.col("text").alias("description")
     )
-    dim0 = spark.createDataFrame([], "keyword string, id string")
-    links0 = spark.createDataFrame([], "document_id string, keyword_id string")
+    dim0 = empty_frame(spark, "keyword string, id string")
+    links0 = empty_frame(spark, "document_id string, keyword_id string")
     dim, links = extract_and_link(spark_docs, dim0, links0)
     dim.write.mode("overwrite").parquet(f"{args.out}/keywords")
     links.write.mode("overwrite").parquet(f"{args.out}/keyword_links")

@@ -541,8 +541,8 @@ def _volume_guard(
     short-circuits, the probe runs a REAL Spark job (one aggregation
     to a 1-row fetch — allowlisted in tests/test_collect_allowlist.py)
     at DataFrame-BUILD time, so a guarded builder is not plan-only
-    (tools/dump_plans.py executes these probes while constructing
-    plans). ``persist_on_probe=True`` persists the bucketed input
+    (anything that builds plans, e.g. the plan tests, executes these
+    probes). ``persist_on_probe=True`` persists the bucketed input
     (MEMORY_AND_DISK) before probing so the probe pass materializes
     the same computation the real run then reuses — the guarded
     pipeline is computed ONCE, not twice; on the fail branch the

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import empty_frame
 from .topk import top_k_by
 
 
@@ -348,7 +349,7 @@ def blas_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     if not q_rows:
         # 0 queries → 0 result rows; np.array([]) would be 1-D and
         # crash norm(axis=1), so return the empty frame directly
-        return probes.sparkSession.createDataFrame([], schema)
+        return empty_frame(probes.sparkSession, schema)
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     qn = np.linalg.norm(qm, axis=1)

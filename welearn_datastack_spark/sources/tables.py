@@ -22,6 +22,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 TABLES = (
     "region",
@@ -112,6 +113,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def empty_frame(spark: SparkSession, schema: str | StructType) -> DataFrame:
+    """An empty frame with exactly ``schema`` (DDL string or StructType),
+    built in the JVM as an empty local relation. ``createDataFrame([],
+    schema)`` parallelizes the empty list into a Python RDD instead, so
+    every scan of it starts one Python worker per partition, rows or no
+    rows."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    jspark = spark._jsparkSession
+    jdf = jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json()))
+    return DataFrame(jdf, spark)
 
 
 def _size_to_bytes(val: str) -> int:

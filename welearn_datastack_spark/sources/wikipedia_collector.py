@@ -37,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import empty_frame
+
 WIKIPEDIA_BASE_URL = "https://<lang>.wikipedia.org/"  # ref constants.py:203
 RECENCY_DAYS = 10  # ref wikipedia_collector.py:44
 TRANSLATION_BATCH = 50  # ref wikipedia_collector.py:188
@@ -147,7 +149,7 @@ def collect_wikipedia_urls(
                     urls.append(f"{dst_base}wiki/{tt}")
 
     if not urls:
-        return spark.createDataFrame([], "url string, corpus string")
+        return empty_frame(spark, "url string, corpus string")
     return (
         spark.createDataFrame([(u,) for u in urls], ["url"])
         .dropDuplicates(["url"])
