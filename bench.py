@@ -215,8 +215,9 @@ def post_query_hygiene(spark) -> dict[str, int] | None:
     while the memory pressure and GC their lingering blocks impose on
     every LATER query in the pass is exactly the flap the per-round
     adjudications kept acquitting as 'session-state'. Clean state per
-    query makes every wall self-contained; the probe-verdict memo
-    (Python-side) still makes warm-pass guard probes free."""
+    query makes every wall self-contained: each warm pass re-runs the
+    guard probes and sizing counts its builders take, as a one-build
+    scheduled job does."""
     rec = _storage_info(spark)
     # clear UNCONDITIONALLY, not only when blocks materialized: a query
     # that registers a persist but errors/short-circuits before any

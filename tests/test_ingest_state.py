@@ -312,3 +312,63 @@ def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
     assert not captured["count_candidates"]
     assert "LeftSemi" in captured["plan"], captured["plan"][:1500]
     assert "n_near_candidates" not in captured["plan"]
+
+
+# --- streaming-probe first-rung plan transition ---------------------
+# SCALE.md §22.5 explains the stream probe's steep sf1→sf3 byte rung
+# (5.05x for 3x data) as a broadcast→exchange plan transition: at sf1
+# the stored state side fits under the broadcast threshold so the
+# semi-join leg pays no shuffle; by sf3 it is a real exchange. This
+# pins that mechanism: the SAME probe plan rides BroadcastHashJoin
+# when the state side is under the threshold and a shuffle join once
+# it is not — so a future change that made the probe super-linear
+# could no longer hide behind the "plan transition" sentence.
+
+
+def test_stream_probe_first_rung_is_broadcast_to_exchange_transition(spark, sf_dir):
+    from welearn_datastack_spark.operators.dedup import (
+        incremental_near_dup_ids,
+        lsh_band_keys,
+        minhash_signatures,
+        word_shingles,
+    )
+    from welearn_datastack_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    def bands(d):
+        return lsh_band_keys(
+            minhash_signatures(word_shingles(d, "doc_id", "text", n=3), "doc_id", 8),
+            "doc_id",
+            rows_per_band=2,
+        )
+
+    stored = bands(docs.filter(F.col("doc_id") % 5 != 4))
+    new = bands(docs.filter(F.col("doc_id") % 5 == 4))
+
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+
+    def executed_plan(threshold):
+        old = {k: spark.conf.get(k, None) for k in keys}
+        try:
+            for k in keys:
+                spark.conf.set(k, threshold)
+            d = incremental_near_dup_ids(stored, new, "doc_id")
+            d.write.format("noop").mode("overwrite").save()
+            return d._jdf.queryExecution().executedPlan().toString()
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
+
+    # sf1 regime: state side under the threshold → broadcast semi leg
+    small = executed_plan("10485760b")
+    assert "BroadcastHashJoin" in small and "LeftSemi" in small, small[:1500]
+    # sf3+ regime: no broadcast eligibility → the semi leg is a real
+    # exchange-backed join (the byte rung §22.5 measured)
+    big = executed_plan("-1")
+    assert "LeftSemi" in big, big[:1500]
+    assert "BroadcastHashJoin" not in big, big[:1500]
+    assert "SortMergeJoin" in big or "ShuffledHashJoin" in big, big[:1500]

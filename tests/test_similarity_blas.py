@@ -58,18 +58,28 @@ def test_blas_topk_per_query_counts(spark):
 
 def test_blas_topk_empty_queries_returns_empty(spark):
     """0 query rows (or all-null embeddings) must yield an empty
-    frame, not a numpy shape error on the (0,) query matrix."""
+    frame, not a numpy shape error on the (0,) query matrix — with the
+    scored path's schema (q_id, c_id, cosine, rnk), rnk included."""
     from welearn_datastack_spark.operators.similarity import blas_topk
 
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "c_id long, ce array<double>"
     )
+    scored = blas_topk(
+        spark.createDataFrame([(7, [1.0, 0.0])], "q_id long, qe array<double>"),
+        corpus, k=3,
+    )
+    assert scored.count() == 2
     empty = spark.createDataFrame([], "q_id long, qe array<double>")
-    assert blas_topk(empty, corpus, k=3).count() == 0
+    out = blas_topk(empty, corpus, k=3)
+    assert out.count() == 0
+    assert out.schema == scored.schema
     all_null = spark.createDataFrame(
         [(7, None)], "q_id long, qe array<double>"
     )
-    assert blas_topk(all_null, corpus, k=3).count() == 0
+    out = blas_topk(all_null, corpus, k=3)
+    assert out.count() == 0
+    assert out.schema == scored.schema
 
 
 def test_blas_topk_zero_norm_and_null_vectors(spark):

@@ -139,47 +139,26 @@ def _ts_col(us: np.ndarray) -> pa.Array:
     return pa.array(us, type=pa.timestamp("us"))
 
 
-def _invalidate_guard_memos() -> None:
-    """Corpora-regen hook (round-14 verdict item 5): if this generator
-    runs INSIDE a session that already probed a guard over the output
-    dir (service-style callers, test fixtures), drop every memoized
-    probe verdict — an in-place rewrite must re-probe, never stale-hit
-    a verdict measured on the old data. No-op when the engine package
-    is not importable (the normal standalone-CLI case: the memo is
-    per-process, so a fresh process has nothing to invalidate)."""
+def _release_session_caches() -> None:
+    """Corpora-regen hook: if this generator runs INSIDE a session that
+    already cached frames over the output dir (service-style callers,
+    test fixtures), release the live guard persists and the catalog
+    cache — Spark would otherwise serve later queries over the
+    rewritten files from caches built over the old ones. No-op when
+    the engine package or a session is unavailable (the normal
+    standalone-CLI case: a fresh process holds no caches)."""
     try:
-        from welearn_datastack_spark.operators.dedup import (
-            clear_probe_memo,
-            release_guard_caches,
-        )
-    except Exception:  # noqa: BLE001 — generation must not require the engine
-        return
-    n = clear_probe_memo()
-    if n:
-        print(f"  (invalidated {n} memoized guard verdict(s) after regen)")
-    try:
-        from welearn_datastack_spark.sources.tables import clear_count_memo
+        from pyspark.sql import SparkSession
 
-        nc = clear_count_memo()
-        if nc:
-            print(f"  (invalidated {nc} memoized sizing count(s) after regen)")
-    except Exception:  # noqa: BLE001 — generation must not require the engine
-        pass
-    # the memo is only half the staleness surface: a live session may
-    # still hold guard persists and CacheManager entries built over the
-    # PRE-regen files — Spark would happily serve the forced re-probe
-    # (and the query itself) from the stale cache (round-15
-    # self-review). Release them too, on the active session if any.
-    try:
+        from welearn_datastack_spark.operators.dedup import release_guard_caches
+
         released = release_guard_caches()
         if released:
             print(f"  (released {released} live guard cache(s) after regen)")
-        from pyspark.sql import SparkSession
-
         active = SparkSession.getActiveSession()
         if active is not None:
             active.catalog.clearCache()
-    except Exception:  # noqa: BLE001 — generation must not require a session
+    except Exception:  # noqa: BLE001 — generation must not require the engine
         pass
 
 
@@ -322,7 +301,7 @@ def generate(sf: float, out: str) -> None:
             "label": pa.array(rng.integers(0, 10, n_emb), pa.int32()),
         }))
 
-    _invalidate_guard_memos()
+    _release_session_caches()
 
 
 def main() -> None:

@@ -167,8 +167,7 @@ def jaccard_pairs(
     row-budget-sampled to ≤ _JACCARD_DOC_BUDGET documents
     (plans/q_dedup.py), which bounds the probe's own cost at roughly
     sf0.1 forever — that, not a worst-case formula, is their skip
-    argument — and the probe-verdict memo (_PROBE_MEMO) makes repeat
-    builds of the same plan (bench warm passes) probe-free.
+    argument.
     ``guard_mode`` pins the guard's mode regardless of the session
     conf — registered queries pass 'fail' because their DuckDB oracles
     do not model member sampling (a global mode=sample would silently
@@ -380,84 +379,10 @@ def _pair_guard_budget(spark, budget_bytes: int | None) -> int:
     return free // 2
 
 
-# probe-verdict memo: (applicationId, semanticHash(bucketed), model
-# key, input snapshot) → (measured units, max bucket count). An
-# identical bucketed plan re-probed (bench passes 2..n of the same
-# query, repeat driver gates) reuses the first pass's measurement
-# instead of re-running the aggregation job — the guard's steady-state
-# cost on warm passes is zero. Keyed by applicationId so a new session
-# never inherits stale verdicts, and by :func:`_input_snapshot` so a
-# corpus REWRITTEN at the same path within one long-lived application
-# (mid-session regen, service-style callers) re-probes instead of
-# reusing a stale verdict and under-gating (round-13 ADVICE). Bounded
-# at _PROBE_MEMO_CAP entries, oldest-insertion eviction.
-_PROBE_MEMO: dict[tuple, tuple[int, int]] = {}
-_PROBE_MEMO_CAP = 256
-
-# live persist_on_probe caches, keyed like the memo (or by plan object
-# id when the memo key is unavailable) — the accounting surface for
-# caches that deliberately outlive their query (round-13 verdict:
-# session-lifetime guard persists had no list/release hook).
+# live persist_on_probe caches, keyed by frame object id, so caches
+# that deliberately outlive their query can be released in bulk
+# (release_guard_caches).
 _GUARD_PERSISTS: dict[object, DataFrame] = {}
-
-
-def _input_snapshot(df: DataFrame) -> tuple | None:
-    """Fingerprint of a plan's leaf input files — folded into the
-    probe-memo key so rewritten inputs invalidate memoized verdicts.
-    Local files contribute (path, mtime_ns, size); non-local URIs
-    contribute the path alone (listing churn still invalidates). The
-    per-file entries are md5-folded to one hex digest so the key stays
-    small at production file counts. Returns None when the listing
-    itself fails — the caller must then SKIP memoization entirely
-    (round-14 ADVICE: a constant fallback degraded the key to
-    plan-hash-only, so a corpus rewritten behind an unlistable source
-    could stale-hit the very verdict this key exists to invalidate;
-    re-probing every build is the safe degradation, a stale under-gate
-    is not)."""
-    import hashlib
-    import os
-
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:  # noqa: BLE001 — snapshot is best-effort
-        return None
-    h = hashlib.md5()
-    for uri in files:
-        h.update(uri.encode())
-        path = uri[7:] if uri.startswith("file://") else uri
-        if path.startswith("/"):
-            try:
-                st = os.stat(path)
-                h.update(f":{st.st_mtime_ns}:{st.st_size}".encode())
-            except OSError:
-                h.update(b":missing")
-    return (len(files), h.hexdigest())
-
-
-def clear_probe_memo() -> int:
-    """Drop every memoized probe verdict (call after regenerating a
-    corpus in-place mid-session). Returns the number dropped. Does not
-    touch live persists — see :func:`release_guard_caches`."""
-    n = len(_PROBE_MEMO)
-    _PROBE_MEMO.clear()
-    return n
-
-
-def guard_cache_info() -> list[dict]:
-    """Accounting surface for persist_on_probe caches that outlive
-    their query: one record per registered persist with its probe key
-    and whether the frame is still cached (a caller may have
-    unpersisted it directly)."""
-    out = []
-    for key, df in _GUARD_PERSISTS.items():
-        lvl = df.storageLevel
-        out.append(
-            {
-                "probe_key": key[3] if isinstance(key, tuple) and len(key) > 3 else str(key),
-                "is_cached": bool(lvl.useMemory or lvl.useDisk),
-            }
-        )
-    return out
 
 
 def release_guard_caches() -> int:
@@ -488,11 +413,10 @@ class GuardStats:
     which case ``max_bucket`` describes the PRE-sample buckets."""
 
     __slots__ = ("mode", "skipped", "units", "max_bucket", "projected",
-                 "budget", "sampled", "keep", "memo_hit")
+                 "budget", "sampled", "keep")
 
     def __init__(self, mode, skipped=None, units=None, max_bucket=None,
-                 projected=None, budget=None, sampled=False, keep=None,
-                 memo_hit=False):
+                 projected=None, budget=None, sampled=False, keep=None):
         self.mode = mode
         self.skipped = skipped
         self.units = units
@@ -501,7 +425,6 @@ class GuardStats:
         self.budget = budget
         self.sampled = sampled
         self.keep = keep
-        self.memo_hit = memo_hit
 
     @property
     def certified_max_bucket(self) -> int | None:
@@ -522,12 +445,11 @@ def _volume_guard(
     keep_fn,
     fail_msg,
     log_label: str,
-    probe_key: str,
     worst_case_units: int | None = None,
     budget_bytes: int | None = None,
     mode: str | None = None,
     persist_on_probe: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, GuardStats]:
     """Shared scaffolding for the two pre-flight disk-budget guards —
     mode/budget resolution, the worst-case probe skip, the per-bucket
     count probe, and the fail/sample/off branching live HERE so the
@@ -548,15 +470,18 @@ def _volume_guard(
     pipeline is computed ONCE, not twice; on the fail branch the
     persist is released before raising. On the pass/sample branches
     the cache deliberately OUTLIVES the query: later builds of the
-    same plan (bench warm passes, sibling queries sharing the frame —
-    e.g. the hashed minhash query after the sampled one) resolve to it
-    via Spark's CacheManager, which is where the measured −35%
-    family win at sf3 comes from; the footprint is the linear bucketed
-    input (never pairs) and MEMORY_AND_DISK evicts LRU under
-    pressure. Callers wanting a strictly transient cache can
-    ``unpersist()`` the returned frame after their sink, or release
-    every live guard cache with :func:`release_guard_caches`;
-    :func:`guard_cache_info` lists what is held.
+    same plan and sibling queries sharing the frame (e.g. the hashed
+    minhash query after the sampled one) resolve to it via Spark's
+    CacheManager, which is where the measured −35% family win at sf3
+    comes from; the footprint is the linear bucketed input (never
+    pairs) and MEMORY_AND_DISK evicts LRU under pressure. Callers
+    wanting a strictly transient cache can ``unpersist()`` the
+    returned frame after their sink, or release every live guard
+    cache with :func:`release_guard_caches`.
+
+    No verdict is kept across builds: every rebuild of a plan runs
+    its probe again (a scheduled job builds each plan once per
+    process).
 
     Returns ``(frame, GuardStats)`` — the public wrappers unwrap to
     the frame alone unless called with ``with_stats=True``. The probe
@@ -572,64 +497,30 @@ def _volume_guard(
             mode=mode, skipped="worst_case",
             projected=worst_case_units * unit_bytes, budget=budget,
         )
-    try:
-        snap = _input_snapshot(bucketed)
-        # snap is None when the input listing failed: memoization is
-        # DISABLED for this build (memo_key None) rather than keyed on
-        # the plan hash alone — see _input_snapshot's docstring
-        memo_key = None if snap is None else (
-            spark.sparkContext.applicationId,
-            bucketed.semanticHash(),
-            tuple(bucket_cols),
-            probe_key,
-            snap,
-        )
-    except Exception:  # noqa: BLE001 — memo is an optimization, never a gate
-        memo_key = None
-    persisted = False
-    memo_hit = memo_key is not None and memo_key in _PROBE_MEMO
-    if memo_hit:
-        units, max_bucket = _PROBE_MEMO[memo_key]
-        if persist_on_probe:
-            # idempotent re-persist (round-13 ADVICE): a memoized pass
-            # must not silently depend on the FIRST pass's cache having
-            # survived — a caller that unpersisted after its sink still
-            # gets probe/run computation sharing on later builds
-            from pyspark import StorageLevel
+    if persist_on_probe:
+        from pyspark import StorageLevel
 
-            bucketed = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
-            _GUARD_PERSISTS[memo_key] = bucketed
-            persisted = True
-    else:
-        if persist_on_probe:
-            from pyspark import StorageLevel
-
-            bucketed = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
-            _GUARD_PERSISTS[memo_key if memo_key is not None else id(bucketed)] = bucketed
-            persisted = True
-        row = (
-            bucketed.groupBy(*bucket_cols)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .agg(probe_expr.alias("__units"), F.max("__c").alias("__maxc"))
-            .first()
-        )
-        units = int(row["__units"] or 0)
-        max_bucket = int(row["__maxc"] or 0)
-        if memo_key is not None:
-            if len(_PROBE_MEMO) >= _PROBE_MEMO_CAP:
-                _PROBE_MEMO.pop(next(iter(_PROBE_MEMO)))
-            _PROBE_MEMO[memo_key] = (units, max_bucket)
+        bucketed = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
+        _GUARD_PERSISTS[id(bucketed)] = bucketed
+    row = (
+        bucketed.groupBy(*bucket_cols)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .agg(probe_expr.alias("__units"), F.max("__c").alias("__maxc"))
+        .first()
+    )
+    units = int(row["__units"] or 0)
+    max_bucket = int(row["__maxc"] or 0)
     projected = units * unit_bytes
     stats = GuardStats(
         mode=mode, units=units, max_bucket=max_bucket,
-        projected=projected, budget=budget, memo_hit=memo_hit,
+        projected=projected, budget=budget,
     )
     if projected <= budget:
         return bucketed, stats
     if mode == "fail":
-        if persisted:
+        if persist_on_probe:
             bucketed.unpersist()
-            _GUARD_PERSISTS.pop(memo_key if memo_key is not None else id(bucketed), None)
+            _GUARD_PERSISTS.pop(id(bucketed), None)
         raise PairVolumeExceeded(
             fail_msg(units, projected, budget), units, projected, budget
         )
@@ -742,7 +633,6 @@ def pair_volume_guard(
         keep_fn=lambda den: math.isqrt(den - 1) + 1,
         fail_msg=msg,
         log_label="pair_volume_guard",
-        probe_key="pairs",
         worst_case_units=worst_case_pairs,
         budget_bytes=budget_bytes,
         mode=mode,
@@ -827,7 +717,6 @@ def replicated_volume_guard(
         keep_fn=lambda den: den,
         fail_msg=msg,
         log_label="replicated_volume_guard",
-        probe_key=f"repl{chunk_target}",
         worst_case_units=worst_case_rows,
         budget_bytes=budget_bytes,
         mode=mode,

@@ -346,10 +346,12 @@ def blas_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
             "collected to the driver and shipped to every task, so an unbounded "
             "query table must use a distributed path (bucket_topk) instead"
         )
+    order = [F.desc("cosine"), F.asc("c_id")]
     if not q_rows:
         # 0 queries → 0 result rows; np.array([]) would be 1-D and
-        # crash norm(axis=1), so return the empty frame directly
-        return empty_frame(probes.sparkSession, schema)
+        # crash norm(axis=1), so rank an empty candidate frame instead
+        # (same output schema as the scored path, rnk included)
+        return top_k_by(empty_frame(probes.sparkSession, schema), ["q_id"], order, k=k)
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     qn = np.linalg.norm(qm, axis=1)
@@ -386,7 +388,7 @@ def blas_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
             yield out
 
     cand = corpus.select("c_id", "ce").mapInPandas(run, schema=schema)
-    return top_k_by(cand, ["q_id"], [F.desc("cosine"), F.asc("c_id")], k=k)
+    return top_k_by(cand, ["q_id"], order, k=k)
 
 
 def sqdist(a: Column, b: Column) -> Column:

@@ -21,7 +21,7 @@ from ..operators.dedup import (
     star_edges,
     word_shingles,
 )
-from ..sources.tables import fan_out_for_compute, load_table, memo_count
+from ..sources.tables import fan_out_for_compute, load_table
 from .registry import register
 
 
@@ -53,7 +53,7 @@ def _minhash_worst_case_pairs(docs: DataFrame, n_bands: int) -> int:
     COUNT-driven sizing _sampled_baseline_docs uses); when even this
     fits the disk budget the guard's Σ C(c,2) probe is skipped, so
     small-SF gates and the sf0.1 bench pay nothing for the guard."""
-    n = memo_count(docs)
+    n = docs.count()
     return n_bands * (n * (n - 1) // 2)
 
 
@@ -187,7 +187,7 @@ def _sampled_baseline_docs(docs: DataFrame) -> tuple[DataFrame, int]:
     same COUNT(*)-driven sizing the LSH/semantic families use."""
     from ..operators.dedup import hexint
 
-    den = jaccard_sample_den(memo_count(docs))
+    den = jaccard_sample_den(docs.count())
     if den > 1:
         docs = docs.filter(hexint(F.col("doc_id").cast("string")) % den == 0)
     return docs, den
@@ -1129,7 +1129,7 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guard_mode pinned: the oracle is the full near-pair set — a
     # session-level mode=sample must not silently subset it
     return simhash_near_pairs(
-        fp, "doc_id", bits=16, n_bands=4, max_hamming=3, n_docs=memo_count(docs),
+        fp, "doc_id", bits=16, n_bands=4, max_hamming=3, n_docs=docs.count(),
         guard_mode="fail",
     )
 

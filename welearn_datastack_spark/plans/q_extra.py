@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import fan_out_for_compute, load_table, memo_count
+from ..sources.tables import fan_out_for_compute, load_table
 from .registry import register
 
 
@@ -1393,11 +1393,11 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     base = load_table(spark, sf_dir, "embeddings")
     emb = base.repartition(par)
-    # one driver-side scalar (a parquet metadata count, memoized and
-    # taken on the BARE scan so the sizing job never pays the
-    # repartition exchange) sizes the bucket geometry; everything
+    # one driver-side scalar (a parquet metadata count, taken on the
+    # BARE scan so the sizing job never pays the repartition
+    # exchange) sizes the bucket geometry; everything
     # downstream is distributed
-    n = memo_count(base)
+    n = base.count()
     planes = derive_planes(seed=42, n_bits=scaled_n_bits(n), dims=_DIMS)
     tagged = emb.select(
         "vec_id", "embedding", bucket_key_col(F.col("embedding"), planes).alias("bucket")

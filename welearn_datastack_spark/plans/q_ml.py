@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import bucket_topk, cosine_pairs, sq8_dequantize
-from ..sources.tables import fan_out_for_compute, load_table, memo_count
+from ..sources.tables import fan_out_for_compute, load_table
 from .registry import register
 
 # Shared DuckDB CTE: cosine between query set (vec_id < 10) and corpus
@@ -872,9 +872,9 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # noise
     base = load_table(spark, sf_dir, "embeddings")
     emb = base.repartition(par)
-    # sizing count on the BARE scan (footer-metadata count, memoized)
-    # — counting the repartitioned frame would pay its exchange
-    n = memo_count(base)
+    # sizing count on the BARE scan (footer-metadata count) —
+    # counting the repartitioned frame would pay its exchange
+    n = base.count()
     tagged, assign = semantic_assignment_frames(emb, n)
     # norms are computed ONCE per vector (tagged), not per pair — the
     # pair stage is the quadratic part (|cluster|² dots), so pushing
@@ -1052,9 +1052,9 @@ def incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "embeddings")
     emb = base.repartition(par)
     stored_ids = F.col("vec_id") % 4 != 0
-    # sizing count on the BARE scan (footer-metadata count, memoized)
-    # — counting the repartitioned frame would pay its exchange
-    n_stored = memo_count(base.filter(stored_ids))
+    # sizing count on the BARE scan (footer-metadata count) —
+    # counting the repartitioned frame would pay its exchange
+    n_stored = base.filter(stored_ids).count()
     stride, off = stride_centroid_params(n_stored)
     planes = derive_planes(seed=211, n_bits=sem_assign_bits(n_stored), dims=64)
     # pinned for the same reason as semantic_assignment_frames (r15

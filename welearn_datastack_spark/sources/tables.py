@@ -58,54 +58,6 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-# COUNT(*)-sizing memo (r15 opt). Several builders size a knob from a
-# one-scalar row count (sampling modulus, bucket bits, quantizer k) —
-# a real Spark job per BUILD, re-paid on every bench warm pass for an
-# immutable input. Keyed exactly like the dedup probe-verdict memo
-# (appId + plan semantic hash + leaf-file snapshot with mtime/size),
-# so a rewritten corpus re-counts and a failed listing disables
-# memoization for that build. In-process only — every fresh process
-# still computes from the parquet inputs.
-_COUNT_MEMO: dict[tuple, int] = {}
-_COUNT_MEMO_CAP = 256
-
-
-def memo_count(df: DataFrame) -> int:
-    """``df.count()`` with the sizing-scalar memo described above."""
-    from ..operators.dedup import _input_snapshot
-
-    try:
-        snap = _input_snapshot(df)
-        key = (
-            None
-            if snap is None
-            else (
-                df.sparkSession.sparkContext.applicationId,
-                df.semanticHash(),
-                snap,
-            )
-        )
-    except Exception:  # noqa: BLE001 — memo is an optimization, never a gate
-        key = None
-    if key is not None and key in _COUNT_MEMO:
-        return _COUNT_MEMO[key]
-    n = df.count()
-    if key is not None:
-        if len(_COUNT_MEMO) >= _COUNT_MEMO_CAP:
-            _COUNT_MEMO.pop(next(iter(_COUNT_MEMO)))
-        _COUNT_MEMO[key] = n
-    return n
-
-
-def clear_count_memo() -> int:
-    """Drop every memoized sizing count (the corpora-regen hook, same
-    contract as operators.dedup.clear_probe_memo). Returns the number
-    dropped."""
-    n = len(_COUNT_MEMO)
-    _COUNT_MEMO.clear()
-    return n
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
