@@ -6,6 +6,7 @@ Spark analog of running every reference node back-to-back."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from welearn_datastack_spark.pipeline.classifier import classify_slices, document_verdicts
@@ -120,8 +121,8 @@ def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):
     never re-shingled), (b) admitting a batch transitions state so a
     re-probe of the same batch flags every doc an exact duplicate."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
-        apply_transitions,
         build_state,
+        ingest_batch,
         ingest_increment,
         probe_batch,
     )
@@ -163,12 +164,14 @@ def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):
         else:
             assert r["exact_dup_of"] is None
 
-    # (b) transitions: admitted NEW docs join the state; re-probing
-    # the SAME batch now finds each former-new doc as an exact dup of
-    # itself (its hash is in the store)
+    # (b) transitions: ingest_batch decides the batch exactly as the
+    # probe did (its decisions are materialized BEFORE the appends)
+    # and admits the NEW docs; re-probing the SAME batch now finds each
+    # former-new doc as an exact dup of itself (its hash is in the store)
     n_new = sum(1 for r in rows if r["state"] == "new")
-    admitted = apply_transitions(spark, batch, decisions, state)
-    assert admitted == n_new
+    ingested, counts = ingest_batch(spark, batch, state)
+    assert counts == {"decided": len(rows), "admitted": n_new}
+    assert sorted(map(tuple, ingested.collect())) == sorted(map(tuple, rows))
     reprobe = {r["doc_id"]: r for r in probe_batch(spark, batch, state).collect()}
     for doc_id, r in got.items():
         if r["state"] == "new":
@@ -187,7 +190,7 @@ def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):
 
 def test_ingest_params_persisted_with_state(spark, sf_dir, tmp_path):
     """The LSH parameterization is a property of the STATE STORE:
-    build_state persists it, probe_batch/apply_transitions read it
+    build_state persists it, probe_batch/ingest_batch read it
     back, and a later ingest_increment call passing DIFFERENT params
     must be overruled by the store's own (probing a store with
     mismatched bands would silently find nothing)."""
@@ -301,10 +304,10 @@ def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
     discipline snapshot_tail_read proved for the state log, applied
     to the dedup state store."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
-        apply_transitions,
         build_state,
         compact_state,
         fold_state_bucketed,
+        ingest_batch,
         load_params,
         probe_batch,
         probe_batch_bucketed,
@@ -314,10 +317,7 @@ def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
     m = F.col("doc_id") % 5
     state = str(tmp_path / "state")
     build_state(docs.filter(m.isin(1, 2, 3)), state)
-
-    batch_a = docs.filter(m == 4)
-    dec_a = probe_batch(spark, batch_a, state).localCheckpoint(eager=True)
-    apply_transitions(spark, batch_a, dec_a, state)
+    ingest_batch(spark, docs.filter(m == 4), state)
 
     key = lambda r: (r["doc_id"], r["exact_dup_of"], r["near_dup"], r["state"])
     batch_b = docs.filter(m == 0)
@@ -360,51 +360,68 @@ def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS maint_fold_test_band_store")
 
 
-def test_precomputed_batch_frames_equivalent(spark, sf_dir, tmp_path):
-    """r15 opt: probe_batch/apply_transitions accept the batch's
-    precomputed (pinned) hash/band frames so the minhash pipeline runs
-    once per ingest cycle instead of twice. The path must be
-    decision- AND state-equivalent to the default: same decisions
-    row-for-row, same admitted count, byte-identical state-store
-    contents after the transition."""
+@pytest.mark.parametrize("to_dir", [False, True], ids=["checkpoint", "decisions_dir"])
+def test_ingest_batch_state_matches_from_scratch(spark, sf_dir, tmp_path, to_dir):
+    """After one ingest_batch, the state store holds exactly the
+    content hashes and band keys of corpus ∪ admitted computed from
+    scratch: the appends from the pinned batch frames add the admitted
+    rows and nothing else, whichever way the decisions are
+    materialized."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
-        apply_transitions,
         band_keys,
         build_state,
         content_hashes,
-        probe_batch,
+        ingest_batch,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     batch_pred = F.col("doc_id") % 5 == 0
-    batch = docs.filter(batch_pred)
+    corpus, batch = docs.filter(~batch_pred), docs.filter(batch_pred)
+    state = str(tmp_path / "state")
+    build_state(corpus, state)
+    decisions, counts = ingest_batch(
+        spark, batch, state, decisions_dir=str(tmp_path / "dec") if to_dir else None
+    )
+    admitted = [r["doc_id"] for r in decisions.filter(F.col("state") == "new").collect()]
+    assert counts["admitted"] == len(admitted) > 0
+    assert counts["decided"] == batch.count()
 
-    def run(state: str, precompute: bool):
-        build_state(docs.filter(~batch_pred), state)
-        if precompute:
-            bands = band_keys(batch).localCheckpoint(eager=True)
-            hashes = content_hashes(batch)
-            dec = probe_batch(
-                spark, batch, state, batch_hashes=hashes, batch_bands=bands
-            ).localCheckpoint(eager=True)
-            admitted = apply_transitions(
-                spark, batch, dec, state, batch_hashes=hashes, batch_bands=bands
-            )
-        else:
-            dec = probe_batch(spark, batch, state).localCheckpoint(eager=True)
-            admitted = apply_transitions(spark, batch, dec, state)
-        decisions = sorted(
-            (r["doc_id"], r["exact_dup_of"], r["near_dup"], r["state"])
-            for r in dec.collect()
-        )
-        stored_hashes = sorted(
-            map(tuple, spark.read.parquet(f"{state}/doc_hashes").collect())
-        )
-        stored_bands = sorted(
-            map(tuple, spark.read.parquet(f"{state}/band_store").collect())
-        )
-        return decisions, admitted, stored_hashes, stored_bands
+    grown = corpus.unionByName(batch.filter(F.col("doc_id").isin(admitted)))
 
-    default = run(str(tmp_path / "state_default"), precompute=False)
-    pinned = run(str(tmp_path / "state_pinned"), precompute=True)
-    assert pinned == default
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(spark.read.parquet(f"{state}/doc_hashes")) == rows(content_hashes(grown))
+    assert rows(spark.read.parquet(f"{state}/band_store")) == rows(band_keys(grown))
+
+
+def test_interrupted_build_state_keeps_store_params(spark, sf_dir, tmp_path, monkeypatch):
+    """A build_state killed after both parquet legs landed must still
+    leave a store that describes itself: the next ingest_increment
+    skips the build (band_store exists) and has to probe with the
+    store's own custom params, deciding exactly like an uninterrupted
+    store built with them."""
+    import welearn_datastack_spark.pipeline.ingest_increment as inc
+
+    docs = load_table(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % 5 != 0)
+    custom = inc.LshParams(shingle_n=2, n_hashes=12, rows_per_band=3)
+    state = str(tmp_path / "state")
+
+    real = inc._run_concurrently
+
+    def legs_then_killed(*thunks):
+        real(*thunks)
+        raise RuntimeError("killed after the legs")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(inc, "_run_concurrently", legs_then_killed)
+        with pytest.raises(RuntimeError, match="killed after the legs"):
+            inc.build_state(corpus, state, params=custom)
+    assert inc.load_params(state) == custom
+
+    got = inc.ingest_increment(spark, docs, state, batch_mod=5)
+    want = inc.ingest_increment(
+        spark, docs, str(tmp_path / "clean"), batch_mod=5, params=custom
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

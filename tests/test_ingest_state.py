@@ -1,6 +1,6 @@
 """The ingest dedup state: the streaming decision log's layout and
 schema checks, the LSH parameters a state store persists (bucketed and
-folded stores), banding sized from a similarity target, and the plans
+folded stores) and the banding they refuse, banding sized from a similarity target, and the plans
 of the decision-only probe in batch and streaming form."""
 
 from __future__ import annotations
@@ -91,11 +91,10 @@ def test_decision_log_partial_migration_raises(spark, tmp_path):
     _check_decision_log_layout(str(out))
 
 
-def test_bucketed_store_params_roundtrip_and_conflict(spark, sf_dir):
+def test_bucketed_store_params_roundtrip(spark, sf_dir):
     """The bucketed store is self-describing: build persists the LSH
-    params as a band-store TBLPROPERTY, probe reads them back, and a
-    conflicting explicit parameterization raises instead of silently
-    probing with mismatched bands (which finds zero candidates)."""
+    params as a band-store TBLPROPERTY and the probe reads them back
+    (it takes no params of its own)."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
         LshParams,
         build_state_bucketed,
@@ -112,13 +111,11 @@ def test_bucketed_store_params_roundtrip_and_conflict(spark, sf_dir):
     try:
         assert load_table_params(spark, prefix) == params
         batch = docs.filter(F.col("doc_id") % 5 == 0)
-        # no explicit params: the persisted ones govern
         dec = probe_batch_bucketed(spark, batch, prefix)
+        # the persisted 12-hash parameterization governs the band leg
+        plan = dec._jdf.queryExecution().analyzed().toString()
+        assert "_mh11" in plan and "_mh12" not in plan, plan[:3000]
         assert dec.count() == batch.count()
-        # matching explicit params are fine
-        probe_batch_bucketed(spark, batch, prefix, params=params)
-        with pytest.raises(ValueError, match="LSH params mismatch"):
-            probe_batch_bucketed(spark, batch, prefix, params=LshParams())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
@@ -149,6 +146,57 @@ def test_fold_state_bucketed_carries_params(spark, sf_dir, tmp_path):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"shingle_n": 0}, "shingle_n"),
+        ({"n_hashes": 0}, "n_hashes"),
+        ({"n_hashes": -8}, "n_hashes"),
+        ({"rows_per_band": 0}, "rows_per_band"),
+        ({"n_hashes": 9, "rows_per_band": 2}, "multiple of rows_per_band"),
+    ],
+    ids=["shingle_n_zero", "n_hashes_zero", "n_hashes_negative",
+         "rows_per_band_zero", "ragged_last_band"],
+)
+def test_lsh_params_rejects_unbandable(kwargs, match):
+    """lsh_band_keys bands by seed // rows_per_band: 9 hashes at 2 rows
+    would write a 5th single-row band that n_bands (4) and s50 never
+    count, and 0 rows divides by zero — the params refuse both."""
+    from welearn_datastack_spark.pipeline.ingest_increment import LshParams
+
+    with pytest.raises(ValueError, match=match):
+        LshParams(**kwargs)
+
+
+def test_corrupt_params_sidecar_raises(tmp_path):
+    """A store whose lsh_params.json holds unbandable params fails on
+    load instead of probing with bands the store cannot match."""
+    import json
+
+    from welearn_datastack_spark.pipeline.ingest_increment import load_params
+
+    (tmp_path / "lsh_params.json").write_text(
+        json.dumps({"shingle_n": 3, "n_hashes": 9, "rows_per_band": 2})
+    )
+    with pytest.raises(ValueError, match="multiple of rows_per_band"):
+        load_params(str(tmp_path))
+
+
+def test_ingest_cli_rejects_unbandable_args(spark, sf_dir, tmp_path, monkeypatch):
+    """``jobs ingest-increment --n-hashes 9 --rows-per-band 2`` fails
+    before it builds a state store."""
+    from welearn_datastack_spark import jobs, session
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    state = tmp_path / "state"
+    with pytest.raises(ValueError, match="multiple of rows_per_band"):
+        jobs.main([
+            "ingest-increment", "--sf-dir", sf_dir, "--state", str(state),
+            "--out", str(tmp_path / "out"), "--n-hashes", "9", "--rows-per-band", "2",
+        ])
+    assert not state.exists()
 
 
 def test_size_lsh_params_solves_the_s_curve():
@@ -234,47 +282,38 @@ def test_wide_banding_raises_mid_similarity_recall(spark):
     )
 
 
-def test_decision_probe_matches_counting_probe(spark, sf_dir, tmp_path):
-    """The decision-only probe (production default: left_semi band
-    existence) and the counting diagnostic must yield IDENTICAL
-    (doc_id, exact_dup_of, state) decisions — only the near leg's
-    evidence differs (near_dup boolean vs partner multiplicity). The
-    decision plan must actually BE a semi join: no candidate-pair
-    aggregation may survive in it."""
-    from welearn_datastack_spark.pipeline.ingest_increment import (
-        build_state,
-        probe_batch,
-    )
+def test_decision_probe_matches_counting_probe(spark, sf_dir):
+    """The two ingest gates agree per doc: ingest_decision_probe (the
+    production probe: left_semi band existence) and
+    ingest_increment_pipeline (the counting diagnostic) yield IDENTICAL
+    (doc_id, exact_dup_of, state) decisions, and near_dup is set
+    exactly where the partner count is positive. The decision plan
+    must actually BE a semi join: no candidate-pair aggregation may
+    survive in it."""
+    from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    state = str(tmp_path / "state")
-    build_state(docs.filter(F.col("doc_id") % 5 != 0), state)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-
-    decision = probe_batch(spark, batch, state)
-    counting = probe_batch(spark, batch, state, count_candidates=True)
+    _load_groups()
+    decision = REGISTRY["ingest_decision_probe"].build(spark, sf_dir)
+    counting = REGISTRY["ingest_increment_pipeline"].build(spark, sf_dir)
 
     plan = decision._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, plan[:1500]
 
+    d_rows, c_rows = decision.collect(), counting.collect()
     key = lambda r: (r["doc_id"], r["exact_dup_of"], r["state"])
-    d = sorted(key(r) for r in decision.collect())
-    c = sorted(key(r) for r in counting.collect())
-    assert d == c
-    # and the boolean agrees with the count
-    nd = {r["doc_id"]: r["near_dup"] for r in decision.collect()}
-    for r in counting.collect():
+    assert sorted(map(key, d_rows)) == sorted(map(key, c_rows))
+    nd = {r["doc_id"]: r["near_dup"] for r in d_rows}
+    for r in c_rows:
         assert nd[r["doc_id"]] == (r["n_near_candidates"] > 0), r
 
 
 def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
     """The STREAM's per-micro-batch probe must ride the decision-only
-    path: probe_batch called with count_candidates falsey, LeftSemi in
-    the executed decision plan, and no counting-era candidate
-    aggregation (n_near_candidates) anywhere in it. §21.4 proved the
-    BATCH probe's bytes linear; this pins that the streaming wrapper
-    cannot silently regress onto the counting leg whose bytes grow
-    with corpus collision density (4.72x per 3x at sf30)."""
+    path: LeftSemi in the executed decision plan, and no counting-era
+    candidate aggregation (n_near_candidates) anywhere in it. §21.4
+    proved the BATCH probe's bytes linear; this pins that the
+    streaming wrapper cannot silently regress onto a counting leg whose
+    bytes grow with corpus collision density (4.72x per 3x at sf30)."""
     import glob
     import os
     import shutil
@@ -284,18 +323,14 @@ def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
     from welearn_datastack_spark.streaming.state_machine import stream_ingest_probe
 
     captured: dict = {}
-    real = inc.probe_batch
+    real = inc._probe
 
-    def spy(spark_, batch, state_dir, count_candidates=False, **precomputed):
-        d = real(
-            spark_, batch, state_dir,
-            count_candidates=count_candidates, **precomputed,
-        )
-        captured["count_candidates"] = count_candidates
+    def spy(*frames):
+        d = real(*frames)
         captured["plan"] = d._jdf.queryExecution().executedPlan().toString()
         return d
 
-    monkeypatch.setattr(inc, "probe_batch", spy)
+    monkeypatch.setattr(inc, "_probe", spy)
 
     docs = load_table(spark, sf_dir, "documents")
     m = F.col("doc_id") % 5
@@ -308,8 +343,7 @@ def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
 
     stream_ingest_probe(spark, src, f"{work}/state", f"{work}/ckpt", f"{work}/out")
 
-    assert captured, "stream never reached probe_batch"
-    assert not captured["count_candidates"]
+    assert captured, "stream never reached the probe"
     assert "LeftSemi" in captured["plan"], captured["plan"][:1500]
     assert "n_near_candidates" not in captured["plan"]
 

@@ -880,9 +880,9 @@ def incremental_near_dup_ids(
     match, so bytes track the MATCHED BATCH ROWS — O(|batch|·bands)
     regardless of corpus density. The reference's dedup insert needs
     exactly this existence decision, not the partner list
-    (nodes_helpers/collect.py:24–30). Keep the counting probe as the
-    opt-in diagnostic when the partner multiplicity itself is the
-    question."""
+    (nodes_helpers/collect.py:24–30). When the partner multiplicity
+    itself is the question, the ingest_increment_pipeline diagnostic
+    counts it beside the decision."""
     new = new_bands.select(F.col(id_col).alias("new_id"), "band", "band_key").alias("n")
     old = stored_bands.select(
         F.col(id_col).alias("existing_id"), "band", "band_key"

@@ -14,13 +14,19 @@ equivalent is the URL-ingest dedup + anti-join backfill chain
 (nodes_workflow collect→filter cycle, pipeline/url_ingest.py twin);
 here it is generalized to content-level dedup state.
 
-At 100 TB: ``band_store`` is written bucketed by ``band_key`` so the
-per-batch probe join is a bucket-local equi-join with no corpus-side
-shuffle (tests/test_bucketed_layout.py proves the zero-Exchange plan
-for this layout); ``doc_hashes`` is bucketed by ``content_hash`` the
-same way. Batches append new state in the arriving partitioning —
-compaction folds them into the bucketed snapshot on the maintenance
-schedule (operators/compaction.py).
+One function owns the per-batch step: :func:`ingest_batch` pins the
+batch's bands, probes, materializes the decisions once and appends the
+admitted rows. The stream (``streaming.state_machine.
+stream_ingest_probe``), the ``jobs ingest-increment`` CLI
+(:func:`ingest_increment`) and the maintenance gate all call it.
+
+The path store written here is plain parquet; batches append new
+state in the arriving partitioning and :func:`compact_state` bin-packs
+the fragments. The bucketed-table layout (:func:`build_state_bucketed`,
+:func:`fold_state_bucketed`, probed by :func:`probe_batch_bucketed`)
+is the shuffle-free form of the probe joins
+(tests/test_bucketed_layout.py pins the zero-Exchange plan); no
+ingest path reads it yet.
 """
 
 from __future__ import annotations
@@ -34,7 +40,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
-    incremental_lsh_candidates,
     incremental_near_dup_ids,
     lsh_band_keys,
     minhash_signatures,
@@ -67,6 +72,20 @@ class LshParams:
     shingle_n: int = 3
     n_hashes: int = 8
     rows_per_band: int = 2
+
+    def __post_init__(self) -> None:
+        # lsh_band_keys bands by seed // rows_per_band: a remainder
+        # would write a short extra band that n_bands and s50 never
+        # count, and rows_per_band=0 divides by zero
+        for name in ("shingle_n", "n_hashes", "rows_per_band"):
+            v = getattr(self, name)
+            if not (isinstance(v, int) and v > 0):
+                raise ValueError(f"LshParams.{name} must be a positive int, got {v!r}")
+        if self.n_hashes % self.rows_per_band:
+            raise ValueError(
+                f"LshParams.n_hashes ({self.n_hashes}) must be a multiple of "
+                f"rows_per_band ({self.rows_per_band})"
+            )
 
     @property
     def n_bands(self) -> int:
@@ -175,7 +194,18 @@ def build_state(
     """Materialize the persisted dedup state for a stored corpus:
     ``state_dir/doc_hashes`` and ``state_dir/band_store`` parquet,
     plus ``lsh_params.json`` recording the parameterization so every
-    later probe/transition rebuilds bands identically."""
+    later probe/transition rebuilds bands identically.
+
+    The sidecar is written FIRST: :func:`ingest_increment` treats an
+    existing ``band_store`` as a built store, so a crash after the
+    legs but before the sidecar would leave a custom-param store that
+    :func:`load_params` reads as the defaults — every later probe
+    would band differently than the store and admit near-dups as new.
+    A crash before the legs leaves no ``band_store``, and the next
+    call rebuilds (and rewrites the sidecar)."""
+    os.makedirs(state_dir, exist_ok=True)
+    with open(_params_path(state_dir), "w") as f:
+        json.dump(asdict(params), f)
     _run_concurrently(
         lambda: content_hashes(docs)
         .write.mode("overwrite")
@@ -184,24 +214,9 @@ def build_state(
         .write.mode("overwrite")
         .parquet(f"{state_dir}/band_store"),
     )
-    with open(_params_path(state_dir), "w") as f:
-        json.dump(asdict(params), f)
 
 
 _TBLPROP_KEY = "welearn.lsh_params"
-
-
-def _persist_table_params(
-    spark: SparkSession, table_prefix: str, params: LshParams
-) -> None:
-    """Stamp the LSH parameterization onto the bucketed band-store
-    table as a TBLPROPERTY — the metastore twin of the path store's
-    ``lsh_params.json`` sidecar, so a probe can never silently run
-    with bands built differently than the store holds."""
-    spark.sql(
-        f"ALTER TABLE {table_prefix}_band_store "
-        f"SET TBLPROPERTIES ('{_TBLPROP_KEY}' = '{json.dumps(asdict(params))}')"
-    )
 
 
 def load_table_params(spark: SparkSession, table_prefix: str) -> LshParams | None:
@@ -214,58 +229,76 @@ def load_table_params(spark: SparkSession, table_prefix: str) -> LshParams | Non
     return None
 
 
+def _write_bucketed(
+    hashes: DataFrame,
+    bands: DataFrame,
+    table_prefix: str,
+    n_buckets: int,
+    params: LshParams,
+) -> None:
+    """The one writer of the bucketed layout: ``{prefix}_doc_hashes``
+    bucketed by content_hash, ``{prefix}_band_store`` by (band,
+    band_key), and the LSH parameterization stamped onto the band
+    store as a TBLPROPERTY — the metastore twin of the path store's
+    ``lsh_params.json`` sidecar, read back by
+    :func:`probe_batch_bucketed`."""
+    spark = hashes.sparkSession
+    for leg, frame, keys in (
+        ("doc_hashes", hashes, ("content_hash",)),
+        ("band_store", bands, ("band", "band_key")),
+    ):
+        table = f"{table_prefix}_{leg}"
+        _drop_table_and_orphan(spark, table)
+        (
+            frame.write.format("parquet")
+            .bucketBy(n_buckets, *keys)
+            .sortBy(*keys)
+            .mode("overwrite")
+            .saveAsTable(table)
+        )
+    spark.sql(
+        f"ALTER TABLE {table_prefix}_band_store "
+        f"SET TBLPROPERTIES ('{_TBLPROP_KEY}' = '{json.dumps(asdict(params))}')"
+    )
+
+
 def build_state_bucketed(
     docs: DataFrame,
     table_prefix: str,
     n_buckets: int = 8,
     params: LshParams = _DEFAULT_PARAMS,
 ) -> None:
-    """The production layout for the state store: BUCKETED tables
-    (``{prefix}_doc_hashes`` by content_hash, ``{prefix}_band_store``
-    by (band, band_key)), so the per-batch probe joins satisfy their
-    ClusteredDistribution straight from the scan — the corpus side of
-    every probe join carries ZERO Exchange; only the (small) batch
-    side shuffles, into the bucket count. This is the demonstrated
-    form of the docstring's 100 TB claim — parity and the exchange
-    delta vs the path-based store are pinned in
-    tests/test_bucketed_layout.py."""
-    spark = docs.sparkSession
-    _drop_table_and_orphan(spark, f"{table_prefix}_doc_hashes")
-    (
-        content_hashes(docs)
-        .write.format("parquet")
-        .bucketBy(n_buckets, "content_hash")
-        .sortBy("content_hash")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_doc_hashes")
+    """The state store as BUCKETED tables (``{prefix}_doc_hashes`` by
+    content_hash, ``{prefix}_band_store`` by (band, band_key)), so the
+    per-batch probe joins satisfy their ClusteredDistribution straight
+    from the scan — the corpus side of every probe join carries ZERO
+    Exchange; only the (small) batch side shuffles, into the bucket
+    count. Parity and the exchange delta vs the path-based store are
+    pinned in tests/test_bucketed_layout.py."""
+    _write_bucketed(
+        content_hashes(docs),
+        band_keys(docs, params=params),
+        table_prefix,
+        n_buckets,
+        params,
     )
-    _drop_table_and_orphan(spark, f"{table_prefix}_band_store")
-    (
-        band_keys(docs, params=params)
-        .write.format("parquet")
-        .bucketBy(n_buckets, "band", "band_key")
-        .sortBy("band", "band_key")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_band_store")
-    )
-    _persist_table_params(spark, table_prefix, params)
 
 
-def probe_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    state_dir: str,
-    count_candidates: bool = False,
-    batch_hashes: DataFrame | None = None,
-    batch_bands: DataFrame | None = None,
-) -> DataFrame:
+def _stored(spark: SparkSession, state_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The path store's two legs: (doc_hashes, band_store)."""
+    return (
+        spark.read.parquet(f"{state_dir}/doc_hashes"),
+        spark.read.parquet(f"{state_dir}/band_store"),
+    )
+
+
+def probe_batch(spark: SparkSession, batch: DataFrame, state_dir: str) -> DataFrame:
     """Per-incoming-document dedup decision against the PERSISTED
-    state — the batch is hashed/shingled in-engine, the corpus side is
-    read from the state parquet (never recomputed), so probe cost is
-    O(|batch|) plus the bucket-local band join.
+    state — the batch is hashed/shingled in-engine with the store's
+    own params, the corpus side is read from the state parquet (never
+    recomputed), so probe cost is O(|batch|) plus the band join.
 
-    Default (decision-only) output (doc_id, exact_dup_of, near_dup,
-    state):
+    Output (doc_id, exact_dup_of, near_dup, state):
       - exact_dup_of: min stored doc id with identical content hash
         (NULL if none) → state 'exact_dup'
       - near_dup: TRUE iff the doc shares ≥1 LSH band with any stored
@@ -274,87 +307,49 @@ def probe_batch(
         'near_dup' when no exact hit
       - otherwise state 'new'.
 
-    ``count_candidates=True`` is the opt-in DIAGNOSTIC: it swaps the
-    near leg for the candidate-pair stream and reports
-    ``n_near_candidates`` (distinct stored partners per doc). Its
-    bytes grow with corpus collision density (4.72× per 3× corpus
-    step measured at sf30), so it is not the hot-loop default —
-    ``apply_transitions`` consumes only the state column, which is
-    identical between the modes (gated by ingest_decision_probe vs
-    ingest_increment_pipeline).
-
-    ``batch_hashes`` / ``batch_bands`` (optional): the batch's
-    content-hash / band-key frames if the caller already computed
-    them — a probe-then-transition cycle needs the SAME frames for
-    the state append, and the minhash band pipeline is the expensive
-    per-batch leg, so computing it once (pinned with a
-    localCheckpoint) and passing it to both probe and
-    apply_transitions halves the per-batch shingle/minhash work
-    (r15 opt; guide §7.2 duplicated subtrees). Must be built from
-    ``batch`` with this store's params — pass frames from
-    :func:`content_hashes` / :func:`band_keys` only."""
-    stored_hashes = spark.read.parquet(f"{state_dir}/doc_hashes")
-    stored_bands = spark.read.parquet(f"{state_dir}/band_store")
+    The frame is lazy over the state files; to admit the batch, use
+    :func:`ingest_batch`, which materializes the decisions before it
+    appends to those files."""
     return _probe(
         batch,
-        stored_hashes,
-        stored_bands,
-        load_params(state_dir),
-        count_candidates=count_candidates,
-        batch_hashes=batch_hashes,
-        batch_bands=batch_bands,
+        content_hashes(batch),
+        band_keys(batch, params=load_params(state_dir)),
+        *_stored(spark, state_dir),
     )
 
 
 def probe_batch_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    table_prefix: str,
-    params: LshParams | None = None,
-    count_candidates: bool = False,
+    spark: SparkSession, batch: DataFrame, table_prefix: str
 ) -> DataFrame:
     """:func:`probe_batch` against the bucketed-table state layout
     (:func:`build_state_bucketed`): identical decisions, but the
     corpus-side scans report HashPartitioning from the bucket spec so
     neither probe join shuffles stored data. The store's persisted
-    parameterization (band-store TBLPROPERTY, written by
-    :func:`build_state_bucketed` / :func:`fold_state_bucketed`)
-    always governs — passing ``params`` that CONFLICT with it raises
-    instead of silently probing with mismatched bands (which would
-    find zero candidates); tables from before the property existed
-    fall back to the explicit/default params."""
-    stored = load_table_params(spark, table_prefix)
-    if stored is not None and params is not None and stored != params:
-        raise ValueError(
-            f"LSH params mismatch: bucketed store {table_prefix!r} was "
-            f"built with {stored}, probe requested {params} — probing "
-            "with different bands than the store holds finds nothing. "
-            "Rebuild the store or drop the explicit params."
-        )
+    parameterization (band-store TBLPROPERTY) always governs, as
+    :func:`load_params` does for the path store; tables from before
+    the property existed were built at the defaults."""
+    params = load_table_params(spark, table_prefix) or _DEFAULT_PARAMS
     return _probe(
         batch,
+        content_hashes(batch),
+        band_keys(batch, params=params),
         spark.table(f"{table_prefix}_doc_hashes"),
         spark.table(f"{table_prefix}_band_store"),
-        stored or params or _DEFAULT_PARAMS,
-        count_candidates=count_candidates,
     )
 
 
 def _probe(
     batch: DataFrame,
+    hashes: DataFrame,
+    bands: DataFrame,
     stored_hashes: DataFrame,
     stored_bands: DataFrame,
-    params: LshParams = _DEFAULT_PARAMS,
-    count_candidates: bool = False,
-    batch_hashes: DataFrame | None = None,
-    batch_bands: DataFrame | None = None,
 ) -> DataFrame:
-    if batch_hashes is None:
-        batch_hashes = content_hashes(batch)
-    if batch_bands is None:
-        batch_bands = band_keys(batch, params=params)
+    """The decision plan: ``hashes`` / ``bands`` are the batch's
+    :func:`content_hashes` / :func:`band_keys` frames (at the store's
+    params), ``stored_*`` the store's two legs."""
     exact = (
-        batch_hashes
+        hashes
         .join(
             stored_hashes.select(
                 F.col("doc_id").alias("s_id"), "content_hash"
@@ -365,24 +360,7 @@ def _probe(
         .agg(F.min("s_id").alias("exact_dup_of"))
     )
     base = batch.select("doc_id").join(exact, on="doc_id", how="left")
-    if count_candidates:
-        near = (
-            incremental_lsh_candidates(stored_bands, batch_bands, "doc_id")
-            .groupBy(F.col("new_id").alias("doc_id"))
-            .agg(F.count(F.lit(1)).alias("n_near_candidates"))
-        )
-        return base.join(near, on="doc_id", how="left").select(
-            "doc_id",
-            "exact_dup_of",
-            F.coalesce("n_near_candidates", F.lit(0)).cast("long").alias(
-                "n_near_candidates"
-            ),
-            F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact_dup"))
-            .when(F.coalesce("n_near_candidates", F.lit(0)) > 0, F.lit("near_dup"))
-            .otherwise(F.lit("new"))
-            .alias("state"),
-        )
-    near_ids = incremental_near_dup_ids(stored_bands, batch_bands, "doc_id").select(
+    near_ids = incremental_near_dup_ids(stored_bands, bands, "doc_id").select(
         F.col("new_id").alias("doc_id"), F.lit(True).alias("near_dup")
     )
     return base.join(near_ids, on="doc_id", how="left").select(
@@ -396,76 +374,72 @@ def _probe(
     )
 
 
-def apply_transitions(
+def ingest_batch(
     spark: SparkSession,
     batch: DataFrame,
-    decisions: DataFrame,
     state_dir: str,
-    batch_hashes: DataFrame | None = None,
-    batch_bands: DataFrame | None = None,
-) -> int:
-    """State transition: documents judged NEW join the corpus — their
-    content hashes and band keys are APPENDED to the state store, so
-    the next ingest's probe sees them (idempotency: re-probing the
-    same batch then flags every doc an exact dup of itself-in-state).
-    Returns the number of admitted documents.
+    decisions_dir: str | None = None,
+) -> tuple[DataFrame, dict]:
+    """The one ingest step of the dedup state store: decide every
+    document of ``batch`` against the persisted state, then admit the
+    NEW ones — their content hashes and band keys are APPENDED, so the
+    next probe sees them (re-ingesting the same batch then flags every
+    former-new doc an exact dup of itself-in-state).
 
-    ``batch_hashes`` / ``batch_bands`` (optional, r15 opt): the whole
-    batch's content-hash / band-key frames when the caller already
-    computed them for the probe (see :func:`probe_batch`). The appends
-    then semi-join those frames to the admitted ids instead of
-    re-running the shingle/minhash pipeline on the admitted rows — the
-    band pipeline is the expensive per-batch leg, and without reuse it
-    ran twice per ingest cycle. The caller must have PINNED the band
-    frame (localCheckpoint) if it wants the recompute saved rather
-    than merely deduplicated lineage; the hash frame is one md5 per
-    row and may stay lazy. Both frames read only batch-source files,
-    never the state files being appended to, so the self-read hazard
-    the admitted checkpoint guards against does not arise on this
-    path — PROVIDED ``decisions`` is already materialized. Every
-    in-repo caller passes either a localCheckpoint of the probe result
-    or a read of the decision files it has just written
-    (:func:`ingest_increment` does one or the other;
-    ``streaming.state_machine.stream_ingest_probe`` the read). A
-    lazy decisions frame would re-read the state store through the
-    admitted-id semi-join exactly while the appends grow it, so the
-    precomputed path requires the same pin the default path performs
-    itself."""
-    new_ids = decisions.filter(F.col("state") == "new").select("doc_id")
-    if batch_hashes is not None and batch_bands is not None:
-        # the admitted count rides the (smaller) hash append as an
-        # Observation; the two appends still overlap (guide §2.6)
-        obs = Observation()
-        hashes_out = batch_hashes.join(new_ids, on="doc_id").observe(
-            obs, F.count(F.lit(1)).alias("c")
-        )
-        bands_out = batch_bands.join(new_ids, on="doc_id")
-        _run_concurrently(
-            lambda: hashes_out.write.mode("append").parquet(
-                f"{state_dir}/doc_hashes"
-            ),
-            lambda: bands_out.write.mode("append").parquet(
-                f"{state_dir}/band_store"
-            ),
-        )
-        return int(obs.get["c"])
-    admitted = batch.join(new_ids, on="doc_id")
-    # decisions derive from a lazy probe over the files being appended
-    # to — pin them before the writes (bounded: |batch| rows of ids);
-    # the admitted count rides the checkpoint job as an Observation so
-    # the return value costs no extra action
+    In order:
+      1. the store's own params (:func:`load_params`);
+      2. the batch's band frame, PINNED once (localCheckpoint) — it
+         feeds both the probe's near leg and the band append, and the
+         minhash pipeline is the expensive per-batch leg. The hash
+         frame is one md5 per row and stays lazy;
+      3. the probe (:func:`probe_batch`'s decisions);
+      4. ONE materialization of the decisions, before any append: the
+         probe reads the very state files the appends grow, so a lazy
+         frame would re-decide each admitted doc as an exact dup of
+         itself. With ``decisions_dir`` the decisions are written there
+         (overwrite — idempotent under replay) and read back with
+         their known schema; otherwise they are localCheckpointed;
+      5. the appends, skipped for an empty batch: the batch's hash
+         and (pinned) band frames semi-joined to the admitted ids, the two legs written
+         concurrently, the admitted count riding the hash append as
+         an Observation.
+
+    Returns (decisions, {"decided": n, "admitted": k}); the row count
+    rides step 4 as an Observation, so the counts cost no extra job."""
+    bands = band_keys(batch, params=load_params(state_dir)).localCheckpoint(eager=True)
+    hashes = content_hashes(batch)
     obs = Observation()
-    admitted = admitted.observe(obs, F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=True
+    decisions = _probe(batch, hashes, bands, *_stored(spark, state_dir)).observe(
+        obs, F.count(F.lit(1)).alias("c")
     )
-    params = load_params(state_dir)
+    if decisions_dir is None:
+        decisions = decisions.localCheckpoint(eager=True)
+    else:
+        decisions.write.mode("overwrite").parquet(decisions_dir)
+        decisions = spark.read.schema(decisions.schema).parquet(decisions_dir)
+    decided = int(obs.get["c"])
+    admitted = 0 if decided == 0 else _apply_transitions(hashes, bands, decisions, state_dir)
+    return decisions, {"decided": decided, "admitted": admitted}
+
+
+def _apply_transitions(
+    hashes: DataFrame, bands: DataFrame, decisions: DataFrame, state_dir: str
+) -> int:
+    """Append the admitted (state 'new') rows of the batch's hash and
+    band frames to the state store; returns the admitted count. Both
+    frames read only batch-source files and ``decisions`` is already
+    materialized, so nothing here re-reads the files being appended
+    to. The two appends touch disjoint directories and overlap
+    (guide §2.6)."""
+    new_ids = decisions.filter(F.col("state") == "new").select("doc_id")
+    obs = Observation()
+    hashes_out = hashes.join(new_ids, on="doc_id", how="left_semi").observe(
+        obs, F.count(F.lit(1)).alias("c")
+    )
+    bands_out = bands.join(new_ids, on="doc_id", how="left_semi")
     _run_concurrently(
-        lambda: content_hashes(admitted)
-        .write.mode("append")
-        .parquet(f"{state_dir}/doc_hashes"),
-        lambda: band_keys(admitted, params=params)
-        .write.mode("append")
-        .parquet(f"{state_dir}/band_store"),
+        lambda: hashes_out.write.mode("append").parquet(f"{state_dir}/doc_hashes"),
+        lambda: bands_out.write.mode("append").parquet(f"{state_dir}/band_store"),
     )
     return int(obs.get["c"])
 
@@ -480,9 +454,9 @@ def ingest_increment(
 ) -> DataFrame:
     """The composed job: mod-split ``docs`` into stored corpus and
     incoming batch, build the state store on first run (missing
-    ``state_dir``), probe the batch, apply state transitions, and
-    (optionally) write the per-document decisions. Returns the
-    decisions DataFrame (lazy read of ``out_dir`` when written).
+    ``band_store``), then :func:`ingest_batch` the batch, writing the
+    per-document decisions to ``out_dir`` when given. Returns the
+    materialized decisions.
 
     ``params`` applies only to a FIRST build; an existing store's
     persisted parameterization always wins (probing with different
@@ -490,19 +464,9 @@ def ingest_increment(
     batch_pred = F.col("doc_id") % batch_mod == 0
     if not os.path.exists(f"{state_dir}/band_store"):
         build_state(docs.filter(~batch_pred), state_dir, params=params)
-    decisions = probe_batch(spark, docs.filter(batch_pred), state_dir)
-    if out_dir is not None:
-        decisions.write.mode("overwrite").parquet(out_dir)
-        decisions = spark.read.parquet(out_dir)
-    else:
-        # the lazy decisions frame reads the very state files
-        # apply_transitions is about to append to — a relation refresh
-        # or recompute after the append would flip every admitted doc
-        # to exact_dup of itself. Pin the bounded (|batch|-row) result
-        # BEFORE the writes, the same convention as apply_transitions'
-        # own admitted pin and the streaming probe.
-        decisions = decisions.localCheckpoint(eager=True)
-    apply_transitions(spark, docs.filter(batch_pred), decisions, state_dir)
+    decisions, _ = ingest_batch(
+        spark, docs.filter(batch_pred), state_dir, decisions_dir=out_dir
+    )
     return decisions
 
 
@@ -562,31 +526,11 @@ def fold_state_bucketed(
 ) -> None:
     """Fold the path-based state store into the bucketed-table layout
     WITHOUT recomputing — a pure shuffle-on-key rewrite of the
-    persisted hashes/bands (the corpus is never re-shingled). This is
-    the scale maintenance cycle: ingest appends fragments to the path
-    store; on the maintenance schedule the fragments fold into the
-    bucketed snapshot, and subsequent probes
-    (:func:`probe_batch_bucketed`) read the corpus side with ZERO
-    Exchange. Decisions are identical across the fold (same rows,
-    different layout). The path store's ``lsh_params.json`` sidecar
-    travels with the fold (band-store TBLPROPERTY), so the folded
-    tables stay self-describing."""
-    _drop_table_and_orphan(spark, f"{table_prefix}_doc_hashes")
-    (
-        spark.read.parquet(f"{state_dir}/doc_hashes")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "content_hash")
-        .sortBy("content_hash")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_doc_hashes")
-    )
-    _drop_table_and_orphan(spark, f"{table_prefix}_band_store")
-    (
-        spark.read.parquet(f"{state_dir}/band_store")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "band", "band_key")
-        .sortBy("band", "band_key")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_band_store")
-    )
-    _persist_table_params(spark, table_prefix, load_params(state_dir))
+    persisted hashes/bands (the corpus is never re-shingled).
+    Subsequent :func:`probe_batch_bucketed` calls read the corpus
+    side with ZERO Exchange. Decisions are identical across the fold
+    (same rows, different layout). The path store's ``lsh_params.json``
+    sidecar travels with the fold (band-store TBLPROPERTY), so the
+    folded tables stay self-describing."""
+    hashes, bands = _stored(spark, state_dir)
+    _write_bucketed(hashes, bands, table_prefix, n_buckets, load_params(state_dir))

@@ -912,24 +912,43 @@ def lsh_recall_corpus_midband_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "store (never re-shingled), so probe cost scales with |batch|, "
     "not |corpus| — the plan-shape test pins that the probe reads "
     "the band_store files and scans the documents table exactly "
-    "once (tests/test_e2e_pipeline.py). At 100 TB the state store "
-    "is written bucketed by band_key / content_hash so the probe "
-    "joins are bucket-local with zero corpus-side exchange.",
+    "once (tests/test_e2e_pipeline.py). The state store here is the "
+    "plain-parquet path store; the probe joins scan its legs (broadcast "
+    "at toy SF, a corpus-side shuffle once they outgrow the threshold) — "
+    "the bucketed layout that elides that shuffle is gated by "
+    "tests/test_bucketed_layout.py, not read here.",
 )
 def ingest_increment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..pipeline.ingest_increment import build_state, probe_batch
+    from ..pipeline.ingest_increment import band_keys, build_state, probe_batch
     from .q_extra import _gate_scratch
 
     docs = _docs(spark, sf_dir)
     state_dir = _gate_scratch("ingest_incr", sf_dir) + "/state"
     build_state(docs.filter(F.col("doc_id") % 5 != 0), state_dir)
-    # the COUNTING diagnostic probe — partner multiplicity per doc;
-    # the production default (decision-only) is gated separately by
-    # ingest_decision_probe, whose state column this oracle constrains
-    # to be identical
-    return probe_batch(
-        spark, docs.filter(F.col("doc_id") % 5 == 0), state_dir,
-        count_candidates=True,
+    batch = docs.filter(F.col("doc_id") % 5 == 0)
+    # the COUNTING diagnostic: distinct stored partners per doc over the
+    # band collisions, joined onto the decision probe (gated separately
+    # by ingest_decision_probe) — the oracle constrains the state column
+    # to agree with the count. A left join streams the batch's bands,
+    # which arrive clustered on doc_id, so the count adds no shuffle
+    stored = spark.read.parquet(f"{state_dir}/band_store").select(
+        F.col("doc_id").alias("s_id"), "band", "band_key"
+    )
+    near = (
+        band_keys(batch)
+        .join(stored, on=["band", "band_key"], how="left")
+        .groupBy("doc_id")
+        .agg(
+            F.count_distinct(
+                F.when(F.col("s_id") != F.col("doc_id"), F.col("s_id"))
+            ).alias("n_near_candidates")
+        )
+    )
+    return probe_batch(spark, batch, state_dir).join(near, on="doc_id", how="left").select(
+        "doc_id",
+        "exact_dup_of",
+        F.coalesce("n_near_candidates", F.lit(0)).cast("long").alias("n_near_candidates"),
+        "state",
     )
 
 
@@ -981,10 +1000,10 @@ def ingest_increment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "step on the counting probe — the one super-linear byte object "
     "left in the production ingest loop before this). The oracle "
     "derives the same (exact_dup/near_dup/new) decisions with an "
-    "EXISTS over the band join; together with "
-    "ingest_increment_pipeline (the counting diagnostic, same split, "
-    "same state store) it pins that both probe modes yield IDENTICAL "
-    "state columns. The reference analogy: the dedup insert needs "
+    "EXISTS over the band join; ingest_increment_pipeline (the "
+    "counting diagnostic, same split, same state store) joins the "
+    "partner count onto this probe, and its oracle derives the state "
+    "from the count. The reference analogy: the dedup insert needs "
     "existence only (nodes_helpers/collect.py:24-30).",
 )
 def ingest_decision_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1591,10 +1610,10 @@ _TWO_PHASE_INGEST_ORACLE = (
     "checkpoint's exactly-once file tracking guarantees no document "
     "is re-decided. The oracle replays both phases declaratively: "
     "dec_a against the corpus (m∈{1,2,3}), dec_b against corpus ∪ "
-    "dec_a's state='new' rows. Per-trigger cost is O(|new files|) — "
-    "the corpus side is the persisted state store, bucketed at scale "
-    "(build_state_bucketed) so the probe joins carry zero corpus "
-    "exchange.",
+    "dec_a's state='new' rows. Each micro-batch is one "
+    "pipeline/ingest_increment.ingest_batch step against the "
+    "plain-parquet path store, so the probe joins scan the stored "
+    "legs (the bucketed layout is not read by the stream).",
 )
 def stream_ingest_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
@@ -1672,12 +1691,9 @@ def ingest_state_maintenance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
 
     from ..pipeline.ingest_increment import (
-        _run_concurrently,
-        apply_transitions,
-        band_keys,
         build_state,
         compact_state,
-        content_hashes,
+        ingest_batch,
         probe_batch,
     )
     from .q_extra import _gate_scratch
@@ -1686,25 +1702,9 @@ def ingest_state_maintenance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     m = F.col("doc_id") % 5
     state = f"{work}/state"
-    # phase A's band frame feeds both the probe and the transition
-    # append — pin it ONCE, and build it CONCURRENTLY with the state
-    # store (independent lineage/directories, guide §2.6), so the
-    # batch-side minhash hides under the corpus-side build entirely
-    # (r15 opt; default LSH params on both sides by construction)
-    batch_a = docs.filter(m == 4)
-    _, bands_a = _run_concurrently(
-        lambda: build_state(docs.filter(m.isin(1, 2, 3)), state),
-        lambda: band_keys(batch_a).localCheckpoint(eager=True),
-    )
-    hashes_a = content_hashes(batch_a)
-
+    build_state(docs.filter(m.isin(1, 2, 3)), state)
     # phase A: ingest the %5==4 batch — admissions APPEND fragments
-    dec_a = probe_batch(
-        spark, batch_a, state, batch_hashes=hashes_a, batch_bands=bands_a
-    ).localCheckpoint(eager=True)
-    apply_transitions(
-        spark, batch_a, dec_a, state, batch_hashes=hashes_a, batch_bands=bands_a
-    )
+    dec_a, _ = ingest_batch(spark, docs.filter(m == 4), state)
 
     def n_files() -> int:
         return len(glob.glob(f"{state}/band_store/part-*.parquet"))

@@ -336,6 +336,10 @@ def stream_ingest_probe(
     checkpoint makes ingestion restart-driven: invoking the stream
     again after new files land processes ONLY the new files.
 
+    Each micro-batch is one ``pipeline/ingest_increment.ingest_batch``
+    step: one band pin, one decision write to ``out_dir/batch_id=N``
+    (read back for the appends), and two concurrent state appends.
+
     Delivery semantics, precisely: exactly-once applies to SOURCE
     FILE TRACKING (the checkpoint never feeds a consumed file to a
     second batch); the foreachBatch body itself is at-least-once, so
@@ -345,32 +349,28 @@ def stream_ingest_probe(
     and the checkpoint commit re-writes the same directory instead of
     appending duplicate rows. The state transition is self-healing:
     a replayed batch whose admissions already committed re-probes as
-    exact_dup (of itself, now in state), so apply_transitions admits
-    nothing twice and the state store never double-appends. The one
-    replay-visible artifact is that such a batch's re-written
-    decisions record exact_dup-of-self instead of the original 'new'
-    — the admission is still attributable (exact_dup_of points at the
-    admitted row), and state remains exactly correct. Decisions are
-    written BEFORE the state transition, so in the no-failure path
-    each document's decision reflects the state at its own arrival.
-    An empty batch is detected only after its (data-free) decision
-    write, which is then removed; a crash between that write and the
-    removal leaves a transient empty ``batch_id=N`` directory in the
-    decision log. Readers see no rows from it, and because the
-    checkpoint has not committed the batch, the replay writes and
-    removes it again.
+    exact_dup (of itself, now in state), so it admits nothing twice
+    and the state store never double-appends. The one replay-visible
+    artifact is that such a batch's re-written decisions record
+    exact_dup-of-self instead of the original 'new' — the admission
+    is still attributable (exact_dup_of points at the admitted row),
+    and state remains exactly correct. Decisions are written BEFORE
+    the state transition, so in the no-failure path each document's
+    decision reflects the state at its own arrival. An empty batch is
+    detected only after its (data-free) decision write, which is then
+    removed; a crash between that write and the removal leaves a
+    transient empty ``batch_id=N`` directory in the decision log.
+    Readers see no rows from it, and because the checkpoint has not
+    committed the batch, the replay writes and removes it again.
 
-    At 100 TB the state store is the bucketed-table layout
-    (``pipeline/ingest_increment.build_state_bucketed``): the probe
-    joins inside every micro-batch read the corpus side shuffle-free,
-    so per-trigger cost is O(|new files|), never O(|corpus|)."""
-    from ..pipeline.ingest_increment import (
-        apply_transitions,
-        band_keys,
-        content_hashes,
-        load_params,
-        probe_batch,
-    )
+    The probe reads the PATH store (``state_dir`` parquet): each of
+    its two joins scans the stored leg, which broadcasts while small
+    and shuffles once it is not. The bucketed-table layout that makes
+    the corpus side shuffle-free (``build_state_bucketed``) is not
+    read by the stream."""
+    import shutil
+
+    from ..pipeline.ingest_increment import ingest_batch
 
     _check_decision_log_layout(out_dir)
 
@@ -382,58 +382,11 @@ def stream_ingest_probe(
         schema = spark.read.parquet(docs_path).schema
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # the decisions derive from a lazy probe over the very state
-        # files apply_transitions appends to, so they are materialized
-        # (by the decision write below) before the appends.
-        # |decisions| == |batch| by construction (one decision per
-        # incoming doc), so the emptiness test rides that write as an
-        # Observation instead of a separate isEmpty job per batch: an
-        # empty batch is written, then its directory removed again
-        from pyspark.sql import Observation
-
-        # the batch's band frame feeds BOTH the probe's near leg and
-        # the state-transition append — pin it once so the minhash
-        # pipeline (the expensive per-batch leg) runs once per batch
-        # instead of twice (r15 opt; |batch|·n_bands narrow rows at
-        # any scale). The hash frame is one md5 per row — lazy is fine.
-        bands = band_keys(batch_df, params=load_params(state_dir)).localCheckpoint(
-            eager=True
-        )
-        hashes = content_hashes(batch_df)
-        obs = Observation()
-        decisions = probe_batch(
-            spark, batch_df, state_dir, batch_hashes=hashes, batch_bands=bands
-        ).observe(obs, F.count(F.lit(1)).alias("c"))
-        # per-batch overwrite, not append: foreachBatch replays on
-        # crash-restart, and the deterministic directory makes the
-        # decision log idempotent under replay (see docstring). The
-        # WRITE is the decisions' one materialization (r16 opt: it
-        # replaced a localCheckpoint job the write then merely read
-        # back) — the probe still runs strictly before the state
-        # appends below, because apply_transitions consumes the
-        # WRITTEN decision files, not the live probe plan over the
-        # state files it appends to (same pin-before-write hazard,
-        # same fix, one job cheaper per batch). The Observation rides
-        # the write; an empty replay batch removes its (empty, data-
-        # free) directory again so the decision log still gains
-        # nothing.
         dec_dir = f"{out_dir}/batch_id={batch_id}"
-        decisions.write.mode("overwrite").parquet(dec_dir)
-        if obs.get["c"] == 0:
-            import shutil
-
+        _, counts = ingest_batch(spark, batch_df, state_dir, decisions_dir=dec_dir)
+        if counts["decided"] == 0:
+            # an empty micro-batch: the decision log gains nothing
             shutil.rmtree(dec_dir, ignore_errors=True)
-            return
-        apply_transitions(
-            spark,
-            batch_df,
-            # explicit schema: the written files carry decisions' own
-            # schema by construction — skip the footer-sampling pass
-            spark.read.schema(decisions.schema).parquet(dec_dir),
-            state_dir,
-            batch_hashes=hashes,
-            batch_bands=bands,
-        )
 
     q = (
         spark.readStream.schema(schema)
