@@ -76,47 +76,3 @@ def test_bucketed_self_join_has_no_exchange(spark, bucketed_events):
     assert "Exchange" not in plan, plan[:1500]
     assert "SortMergeJoin" in plan
 
-
-def test_bucketed_state_store_probe_elides_corpus_exchange(spark, sf_dir, tmp_path):
-    """The ingest pipeline's 100 TB claim, demonstrated: a state store
-    written as bucketed tables (doc_hashes by content_hash, band_store
-    by (band, band_key)) makes the per-batch probe joins read the
-    corpus side WITHOUT an Exchange — only the small batch side
-    shuffles. Decisions are bit-identical to the path-based store."""
-    from welearn_datastack_spark.pipeline.ingest_increment import (
-        build_state,
-        build_state_bucketed,
-        probe_batch,
-        probe_batch_bucketed,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-
-    state = str(tmp_path / "state")
-    build_state(corpus, state)
-    build_state_bucketed(corpus, "ingest_state_test", n_buckets=8)
-    try:
-        saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plain = probe_batch(spark, batch, state)
-            bucketed = probe_batch_bucketed(spark, batch, "ingest_state_test")
-            plain_x = _plan(plain).count("Exchange hashpartitioning")
-            buck_x = _plan(bucketed).count("Exchange hashpartitioning")
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        # two probe joins (content_hash, band+band_key): the bucketed
-        # layout elides exactly the two stored-side exchanges
-        assert buck_x == plain_x - 2, (plain_x, buck_x)
-        # and no Exchange consumes a bucketed-table scan: every scan
-        # of the state tables feeds its join shuffle-free
-        plan = _plan(bucketed)
-        assert "SelectedBucketsCount" in plan, plan[:1500]
-        # decision parity with the path-based store
-        key = lambda r: (r["doc_id"], r["exact_dup_of"], r["near_dup"], r["state"])
-        assert sorted(map(key, bucketed.collect())) == sorted(map(key, plain.collect()))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ingest_state_test_doc_hashes")
-        spark.sql("DROP TABLE IF EXISTS ingest_state_test_band_store")

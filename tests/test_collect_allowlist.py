@@ -54,20 +54,14 @@ ALLOWED = {
         "limit+raise) + k-row centroid seeds + k x dim Lloyd partials "
         "(k bounded by stride_centroid_params)",
     ),
-    "pipeline/ingest_increment.py": (
-        1,
-        "SHOW TBLPROPERTIES fetch of the band-store LSH-params property "
-        "— bounded by the metastore (1 key row), never table data",
-    ),
     "plans/oracle_check.py": (
         1,
         "the DuckDB comparator itself materializes both sides at check SF "
         "by design — test harness, not a query plan",
     ),
     "plans/q_extra.py": (
-        2,
-        "bounded streamed-window pin (closed windows of a toy-SF gate "
-        "stream) + 1-row min/max ts bounds for gap-fill range generation",
+        1,
+        "1-row min/max ts bounds for gap-fill range generation",
     ),
     "plans/q_ml.py": (
         3,

@@ -296,21 +296,17 @@ def test_stream_ingest_probe_exactly_once(spark, sf_dir, tmp_path):
 
 
 def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
-    """The full maintenance cycle: ingest appends fragments -> compact
-    folds them -> fold_state_bucketed rewrites into bucketed tables.
-    Decisions must be IDENTICAL at every layout stage, the fold must
-    actually shrink the file count, and the bucketed re-fold must
-    probe the corpus side with zero corpus Exchange — the same
+    """The maintenance cycle: ingest appends fragments -> compact
+    folds them. Decisions must be IDENTICAL before and after the fold,
+    and the fold must actually shrink the file count — the same
     discipline snapshot_tail_read proved for the state log, applied
     to the dedup state store."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
         build_state,
         compact_state,
-        fold_state_bucketed,
         ingest_batch,
         load_params,
         probe_batch,
-        probe_batch_bucketed,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -334,30 +330,6 @@ def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
 
     after = sorted(map(key, probe_batch(spark, batch_b, state).collect()))
     assert after == before
-
-    # bucketed re-fold from the PERSISTED state (no recompute) probes
-    # shuffle-free on the corpus side and decides identically
-    fold_state_bucketed(spark, state, "maint_fold_test", n_buckets=8)
-    try:
-        saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            bucketed = probe_batch_bucketed(spark, batch_b, "maint_fold_test")
-            plan = bucketed._jdf.queryExecution().executedPlan().toString()
-            path_x = probe_batch(spark, batch_b, state)
-            path_plan = path_x._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        assert "SelectedBucketsCount" in plan
-        # the two stored-side exchanges disappear relative to the path store
-        assert (
-            plan.count("Exchange hashpartitioning")
-            == path_plan.count("Exchange hashpartitioning") - 2
-        )
-        assert sorted(map(key, bucketed.collect())) == before
-    finally:
-        spark.sql("DROP TABLE IF EXISTS maint_fold_test_doc_hashes")
-        spark.sql("DROP TABLE IF EXISTS maint_fold_test_band_store")
 
 
 @pytest.mark.parametrize("to_dir", [False, True], ids=["checkpoint", "decisions_dir"])

@@ -1,6 +1,6 @@
 """The ingest dedup state: the streaming decision log's layout and
-schema checks, the LSH parameters a state store persists (bucketed and
-folded stores) and the banding they refuse, banding sized from a similarity target, and the plans
+schema checks, the banding a state store refuses, banding sized from
+a similarity target, the band-store files one batch appends, and the plans
 of the decision-only probe in batch and streaming form."""
 
 from __future__ import annotations
@@ -89,63 +89,6 @@ def test_decision_log_partial_migration_raises(spark, tmp_path):
     shutil.rmtree(out / "batch_id=1")
     current.coalesce(1).write.parquet(str(out / "batch_id=1"))
     _check_decision_log_layout(str(out))
-
-
-def test_bucketed_store_params_roundtrip(spark, sf_dir):
-    """The bucketed store is self-describing: build persists the LSH
-    params as a band-store TBLPROPERTY and the probe reads them back
-    (it takes no params of its own)."""
-    from welearn_datastack_spark.pipeline.ingest_increment import (
-        LshParams,
-        build_state_bucketed,
-        load_table_params,
-        probe_batch_bucketed,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("doc_id") < 200
-    )
-    params = LshParams(shingle_n=2, n_hashes=12, rows_per_band=3)
-    prefix = "params_roundtrip_test"
-    build_state_bucketed(docs.filter(F.col("doc_id") % 5 != 0), prefix, params=params)
-    try:
-        assert load_table_params(spark, prefix) == params
-        batch = docs.filter(F.col("doc_id") % 5 == 0)
-        dec = probe_batch_bucketed(spark, batch, prefix)
-        # the persisted 12-hash parameterization governs the band leg
-        plan = dec._jdf.queryExecution().analyzed().toString()
-        assert "_mh11" in plan and "_mh12" not in plan, plan[:3000]
-        assert dec.count() == batch.count()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
-
-
-def test_fold_state_bucketed_carries_params(spark, sf_dir, tmp_path):
-    """fold_state_bucketed moves the path store's lsh_params.json
-    sidecar into the folded tables' TBLPROPERTY, so a later
-    probe_batch_bucketed can never default-mismatch a non-default
-    store (the exact failure the sidecar exists to prevent)."""
-    from welearn_datastack_spark.pipeline.ingest_increment import (
-        LshParams,
-        build_state,
-        fold_state_bucketed,
-        load_table_params,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("doc_id") < 100
-    )
-    params = LshParams(shingle_n=3, n_hashes=16, rows_per_band=4)
-    state = str(tmp_path / "state")
-    build_state(docs, state, params=params)
-    prefix = "params_fold_test"
-    fold_state_bucketed(spark, state, prefix)
-    try:
-        assert load_table_params(spark, prefix) == params
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
 
 
 @pytest.mark.parametrize(
@@ -347,6 +290,43 @@ def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
     assert "LeftSemi" in captured["plan"], captured["plan"][:1500]
     assert "n_near_candidates" not in captured["plan"]
 
+
+
+@pytest.mark.parametrize("to_dir", [False, True], ids=["checkpoint", "decisions_dir"])
+def test_ingest_batch_band_append_adds_no_more_files_than_hashes(
+    spark, sf_dir, tmp_path, to_dir
+):
+    """One ingest_batch of a one-file batch grows band_store by no more
+    part files than doc_hashes: the pinned band frame keeps
+    word_shingles' defaultParallelism partitions, and appending it as
+    is would leave one band_store fragment per core for the probe to
+    open until the next compaction."""
+    import glob
+
+    from welearn_datastack_spark.pipeline.ingest_increment import (
+        build_state,
+        ingest_batch,
+    )
+    from welearn_datastack_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    m = F.col("doc_id") % 5
+    state = str(tmp_path / "state")
+    build_state(docs.filter(m.isin(1, 2, 3)), state)
+    docs.filter(m == 4).coalesce(1).write.parquet(str(tmp_path / "batch"))
+    batch = spark.read.parquet(str(tmp_path / "batch"))
+
+    def n_files(leg):
+        return len(glob.glob(f"{state}/{leg}/part-*.parquet"))
+
+    bands0, hashes0 = n_files("band_store"), n_files("doc_hashes")
+    _, counts = ingest_batch(
+        spark, batch, state, decisions_dir=str(tmp_path / "dec") if to_dir else None
+    )
+    assert counts["admitted"] > 0
+    grown_bands = n_files("band_store") - bands0
+    grown_hashes = n_files("doc_hashes") - hashes0
+    assert 0 < grown_bands <= grown_hashes, (grown_bands, grown_hashes)
 
 # --- streaming-probe first-rung plan transition ---------------------
 # SCALE.md §22.5 explains the stream probe's steep sf1→sf3 byte rung

@@ -228,6 +228,40 @@ def test_stream_session_counts_merges_across_micro_batches(spark, tmp_path):
     assert got == want
 
 
+def _gate(spark, sf_dir, name):
+    from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
+
+    _load_groups()
+    return REGISTRY[name].build(spark, sf_dir)
+
+
+def test_stream_gate_builds_leave_no_tempdir(spark, sf_dir):
+    """Repeated builds of a stream gate reuse its per-query scratch:
+    two builds of stream_latest_state add no welearn_stream_* directory
+    under the tempdir (a mkdtemp per build would leak the events copy,
+    the checkpoint and the sink)."""
+    import glob
+    import os
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "welearn_stream_*")
+    before = set(glob.glob(pattern))
+    for _ in range(2):
+        assert _gate(spark, sf_dir, "stream_latest_state").count() > 0
+    assert set(glob.glob(pattern)) == before
+
+
+def test_stream_windowed_counts_gate_scans_parquet(spark, sf_dir):
+    """The stream_windowed_counts gate returns a lazy read of the
+    stream's parquet sink, not a driver-collected frame: a Python-RDD
+    scan (ExistingRDD) would start Python workers on every read."""
+    df = _gate(spark, sf_dir, "stream_windowed_counts")
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan, plan[:1500]
+    assert "ExistingRDD" not in plan, plan[:1500]
+
+
 def test_multimodal_narrow_column_seams_equivalent(spark):
     """r15 opt (guide §4): decode_media(keep_payload=False) must drop
     ONLY the payload column, and resize_media(checksum_col=...) — the

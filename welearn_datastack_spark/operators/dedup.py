@@ -852,8 +852,8 @@ def incremental_lsh_candidates(
 ) -> DataFrame:
     """Incremental dedup: candidate pairs between a NEW batch and the
     EXISTING corpus — the production shape where the corpus band table
-    is persisted (bucketed by band_key) and each ingest batch probes
-    it, instead of re-pairing the whole corpus. Output
+    is persisted and each ingest batch probes it, instead of
+    re-pairing the whole corpus. Output
     (new_id, existing_id); pairs within the new batch itself come from
     ``lsh_candidates(new_bands)`` separately."""
     new = new_bands.select(F.col(id_col).alias("new_id"), "band", "band_key")

@@ -20,13 +20,9 @@ admitted rows. The stream (``streaming.state_machine.
 stream_ingest_probe``), the ``jobs ingest-increment`` CLI
 (:func:`ingest_increment`) and the maintenance gate all call it.
 
-The path store written here is plain parquet; batches append new
-state in the arriving partitioning and :func:`compact_state` bin-packs
-the fragments. The bucketed-table layout (:func:`build_state_bucketed`,
-:func:`fold_state_bucketed`, probed by :func:`probe_batch_bucketed`)
-is the shuffle-free form of the probe joins
-(tests/test_bucketed_layout.py pins the zero-Exchange plan); no
-ingest path reads it yet.
+The state store is plain parquet under one directory, with its LSH
+parameterization in the ``lsh_params.json`` sidecar; batches append
+new state and :func:`compact_state` bin-packs the fragments.
 """
 
 from __future__ import annotations
@@ -216,82 +212,6 @@ def build_state(
     )
 
 
-_TBLPROP_KEY = "welearn.lsh_params"
-
-
-def load_table_params(spark: SparkSession, table_prefix: str) -> LshParams | None:
-    """The bucketed store's own parameterization, or None for tables
-    written before the property existed (all built at the defaults)."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table_prefix}_band_store").collect()
-    for r in rows:
-        if r["key"] == _TBLPROP_KEY:
-            return LshParams(**json.loads(r["value"]))
-    return None
-
-
-def _write_bucketed(
-    hashes: DataFrame,
-    bands: DataFrame,
-    table_prefix: str,
-    n_buckets: int,
-    params: LshParams,
-) -> None:
-    """The one writer of the bucketed layout: ``{prefix}_doc_hashes``
-    bucketed by content_hash, ``{prefix}_band_store`` by (band,
-    band_key), and the LSH parameterization stamped onto the band
-    store as a TBLPROPERTY — the metastore twin of the path store's
-    ``lsh_params.json`` sidecar, read back by
-    :func:`probe_batch_bucketed`."""
-    spark = hashes.sparkSession
-    for leg, frame, keys in (
-        ("doc_hashes", hashes, ("content_hash",)),
-        ("band_store", bands, ("band", "band_key")),
-    ):
-        table = f"{table_prefix}_{leg}"
-        _drop_table_and_orphan(spark, table)
-        (
-            frame.write.format("parquet")
-            .bucketBy(n_buckets, *keys)
-            .sortBy(*keys)
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-    spark.sql(
-        f"ALTER TABLE {table_prefix}_band_store "
-        f"SET TBLPROPERTIES ('{_TBLPROP_KEY}' = '{json.dumps(asdict(params))}')"
-    )
-
-
-def build_state_bucketed(
-    docs: DataFrame,
-    table_prefix: str,
-    n_buckets: int = 8,
-    params: LshParams = _DEFAULT_PARAMS,
-) -> None:
-    """The state store as BUCKETED tables (``{prefix}_doc_hashes`` by
-    content_hash, ``{prefix}_band_store`` by (band, band_key)), so the
-    per-batch probe joins satisfy their ClusteredDistribution straight
-    from the scan — the corpus side of every probe join carries ZERO
-    Exchange; only the (small) batch side shuffles, into the bucket
-    count. Parity and the exchange delta vs the path-based store are
-    pinned in tests/test_bucketed_layout.py."""
-    _write_bucketed(
-        content_hashes(docs),
-        band_keys(docs, params=params),
-        table_prefix,
-        n_buckets,
-        params,
-    )
-
-
-def _stored(spark: SparkSession, state_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The path store's two legs: (doc_hashes, band_store)."""
-    return (
-        spark.read.parquet(f"{state_dir}/doc_hashes"),
-        spark.read.parquet(f"{state_dir}/band_store"),
-    )
-
-
 def probe_batch(spark: SparkSession, batch: DataFrame, state_dir: str) -> DataFrame:
     """Per-incoming-document dedup decision against the PERSISTED
     state — the batch is hashed/shingled in-engine with the store's
@@ -311,43 +231,26 @@ def probe_batch(spark: SparkSession, batch: DataFrame, state_dir: str) -> DataFr
     :func:`ingest_batch`, which materializes the decisions before it
     appends to those files."""
     return _probe(
+        spark,
         batch,
+        state_dir,
         content_hashes(batch),
         band_keys(batch, params=load_params(state_dir)),
-        *_stored(spark, state_dir),
-    )
-
-
-def probe_batch_bucketed(
-    spark: SparkSession, batch: DataFrame, table_prefix: str
-) -> DataFrame:
-    """:func:`probe_batch` against the bucketed-table state layout
-    (:func:`build_state_bucketed`): identical decisions, but the
-    corpus-side scans report HashPartitioning from the bucket spec so
-    neither probe join shuffles stored data. The store's persisted
-    parameterization (band-store TBLPROPERTY) always governs, as
-    :func:`load_params` does for the path store; tables from before
-    the property existed were built at the defaults."""
-    params = load_table_params(spark, table_prefix) or _DEFAULT_PARAMS
-    return _probe(
-        batch,
-        content_hashes(batch),
-        band_keys(batch, params=params),
-        spark.table(f"{table_prefix}_doc_hashes"),
-        spark.table(f"{table_prefix}_band_store"),
     )
 
 
 def _probe(
+    spark: SparkSession,
     batch: DataFrame,
+    state_dir: str,
     hashes: DataFrame,
     bands: DataFrame,
-    stored_hashes: DataFrame,
-    stored_bands: DataFrame,
 ) -> DataFrame:
     """The decision plan: ``hashes`` / ``bands`` are the batch's
     :func:`content_hashes` / :func:`band_keys` frames (at the store's
-    params), ``stored_*`` the store's two legs."""
+    params), probed against the store's two legs under ``state_dir``."""
+    stored_hashes = spark.read.parquet(f"{state_dir}/doc_hashes")
+    stored_bands = spark.read.parquet(f"{state_dir}/band_store")
     exact = (
         hashes
         .join(
@@ -409,7 +312,7 @@ def ingest_batch(
     bands = band_keys(batch, params=load_params(state_dir)).localCheckpoint(eager=True)
     hashes = content_hashes(batch)
     obs = Observation()
-    decisions = _probe(batch, hashes, bands, *_stored(spark, state_dir)).observe(
+    decisions = _probe(spark, batch, state_dir, hashes, bands).observe(
         obs, F.count(F.lit(1)).alias("c")
     )
     if decisions_dir is None:
@@ -430,13 +333,23 @@ def _apply_transitions(
     frames read only batch-source files and ``decisions`` is already
     materialized, so nothing here re-reads the files being appended
     to. The two appends touch disjoint directories and overlap
-    (guide §2.6)."""
+    (guide §2.6).
+
+    The band append is coalesced to the decisions' partition count,
+    which the probe sized from the batch: the pinned band frame keeps
+    ``word_shingles``' defaultParallelism repartition, so a one-file
+    batch would otherwise add one ``band_store`` fragment per core
+    while ``doc_hashes`` gains one. The decisions are materialized,
+    so reading their count runs no job (the lazy hash frame's count
+    would run one for a batch that shuffles)."""
     new_ids = decisions.filter(F.col("state") == "new").select("doc_id")
     obs = Observation()
     hashes_out = hashes.join(new_ids, on="doc_id", how="left_semi").observe(
         obs, F.count(F.lit(1)).alias("c")
     )
-    bands_out = bands.join(new_ids, on="doc_id", how="left_semi")
+    bands_out = bands.join(new_ids, on="doc_id", how="left_semi").coalesce(
+        decisions.rdd.getNumPartitions()
+    )
     _run_concurrently(
         lambda: hashes_out.write.mode("append").parquet(f"{state_dir}/doc_hashes"),
         lambda: bands_out.write.mode("append").parquet(f"{state_dir}/band_store"),
@@ -503,34 +416,3 @@ def compact_state(
     )
     return {"doc_hashes": hashes_stats, "band_store": band_stats}
 
-
-def _drop_table_and_orphan(spark: SparkSession, table: str) -> None:
-    """DROP TABLE IF EXISTS, then purge an ORPHANED managed location: a
-    killed earlier run can leave the warehouse directory on disk with no
-    catalog entry, and ``saveAsTable`` then refuses with
-    LOCATION_ALREADY_EXISTS. Only removes a local-filesystem path, and
-    only after verifying the catalog really has no such table."""
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if spark.catalog.tableExists(table):
-        return
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", ""))
-    if wh.scheme in ("", "file") and wh.path:
-        shutil.rmtree(os.path.join(wh.path, table.lower()), ignore_errors=True)
-
-
-def fold_state_bucketed(
-    spark: SparkSession, state_dir: str, table_prefix: str, n_buckets: int = 8
-) -> None:
-    """Fold the path-based state store into the bucketed-table layout
-    WITHOUT recomputing — a pure shuffle-on-key rewrite of the
-    persisted hashes/bands (the corpus is never re-shingled).
-    Subsequent :func:`probe_batch_bucketed` calls read the corpus
-    side with ZERO Exchange. Decisions are identical across the fold
-    (same rows, different layout). The path store's ``lsh_params.json``
-    sidecar travels with the fold (band-store TBLPROPERTY), so the
-    folded tables stay self-describing."""
-    hashes, bands = _stored(spark, state_dir)
-    _write_bucketed(hashes, bands, table_prefix, n_buckets, load_params(state_dir))

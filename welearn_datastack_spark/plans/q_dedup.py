@@ -435,9 +435,9 @@ _register_minhash(
     """,
     doc="Incremental dedup probe (operators/dedup.py "
     "incremental_lsh_candidates) — the PRODUCTION ingest shape: the "
-    "corpus band table is persisted (bucketed on band_key at scale) "
-    "and each new batch probes it with one equi-join, instead of "
-    "re-pairing the whole corpus per ingest. The gate splits "
+    "corpus band table is persisted and each new batch probes it "
+    "with one equi-join, instead of re-pairing the whole corpus per "
+    "ingest. The gate splits "
     "documents deterministically (mod-5 = the incoming batch, rest = "
     "the stored corpus), computes band keys for both sides with the "
     "standard minhash pipeline, and hash-checks the probe result "
@@ -912,11 +912,9 @@ def lsh_recall_corpus_midband_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "store (never re-shingled), so probe cost scales with |batch|, "
     "not |corpus| — the plan-shape test pins that the probe reads "
     "the band_store files and scans the documents table exactly "
-    "once (tests/test_e2e_pipeline.py). The state store here is the "
-    "plain-parquet path store; the probe joins scan its legs (broadcast "
-    "at toy SF, a corpus-side shuffle once they outgrow the threshold) — "
-    "the bucketed layout that elides that shuffle is gated by "
-    "tests/test_bucketed_layout.py, not read here.",
+    "once (tests/test_e2e_pipeline.py). The state store is plain "
+    "parquet; the probe joins scan its legs (broadcast at toy SF, a "
+    "corpus-side shuffle once they outgrow the threshold).",
 )
 def ingest_increment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.ingest_increment import band_keys, build_state, probe_batch
@@ -1612,8 +1610,8 @@ _TWO_PHASE_INGEST_ORACLE = (
     "dec_a against the corpus (m∈{1,2,3}), dec_b against corpus ∪ "
     "dec_a's state='new' rows. Each micro-batch is one "
     "pipeline/ingest_increment.ingest_batch step against the "
-    "plain-parquet path store, so the probe joins scan the stored "
-    "legs (the bucketed layout is not read by the stream).",
+    "plain-parquet state store, so the probe joins scan the stored "
+    "legs.",
 )
 def stream_ingest_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob

@@ -375,21 +375,9 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final state must equal the batch arg-max, which is the oracle",
 )
 def stream_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..streaming.state_machine import stream_latest_state
 
-    work = tempfile.mkdtemp(prefix="welearn_stream_")
-    events_dir = f"{work}/events"
-    out_dir = f"{work}/out"
-    ckpt = f"{work}/ckpt"
-    import os
-
-    os.makedirs(events_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{events_dir}/part-000.parquet")
-    stream_latest_state(spark, events_dir, ckpt, out_dir)
-    out = spark.read.parquet(out_dir)
+    out = _gate_stream(spark, "stream_ls", sf_dir, stream_latest_state)
     w = Window.partitionBy("user_id").orderBy(F.desc("last_event_id"))
     return (
         out.withColumn("rn", F.row_number().over(w))
@@ -907,6 +895,28 @@ def _gate_scratch(name: str, sf_dir: str) -> str:
     return path
 
 
+def _gate_stream(
+    spark: SparkSession, name: str, sf_dir: str, stream, **kwargs
+) -> DataFrame:
+    """The one staging path of the stream gate adapters: copy
+    ``events.parquet`` into the query's :func:`_gate_scratch` dir as
+    the stream's one source file, drain ``stream`` (a
+    streaming/state_machine operator, called as ``stream(spark,
+    events_dir, checkpoint_dir, out_dir, **kwargs)``) with its
+    checkpoint and sink beside it, and return the LAZY parquet read of
+    the sink. Nothing is collected to the driver, and the next build
+    of the same query wipes all three directories."""
+    import os
+    import shutil
+
+    work = _gate_scratch(name, sf_dir)
+    events_dir = f"{work}/events"
+    os.makedirs(events_dir)
+    shutil.copy(f"{sf_dir}/events.parquet", f"{events_dir}/part-000.parquet")
+    stream(spark, events_dir, f"{work}/ckpt", f"{work}/out", **kwargs)
+    return spark.read.parquet(f"{work}/out")
+
+
 @register(
     "stream_windowed_counts",
     """
@@ -928,33 +938,17 @@ def _gate_scratch(name: str, sf_dir: str) -> str:
     "semantics without running the stream.",
 )
 def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.state_machine import stream_windowed_counts
 
-    work = tempfile.mkdtemp(prefix="welearn_stream_wc_")
-    try:
-        events_dir = f"{work}/events"
-        os.makedirs(events_dir)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{events_dir}/part-000.parquet")
-        stream_windowed_counts(
-            spark, events_dir, f"{work}/ckpt", f"{work}/out",
-            window="1 day", watermark="0 seconds",
-        )
-        out = spark.read.parquet(f"{work}/out")
-        # append mode emits each closed window exactly once; the re-agg
-        # is a cheap idempotence guard over the tiny emitted frame
-        agg = out.groupBy(
-            F.col("window_start").alias("day_start"), "event_type"
-        ).agg(F.sum("n").alias("n"))
-        # the emitted frame is bounded (|days|·|event types|); pin it
-        # into a local frame so the scratch dir can be removed instead
-        # of leaking one mkdtemp per build() call
-        return spark.createDataFrame(agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    out = _gate_stream(
+        spark, "stream_wc", sf_dir, stream_windowed_counts,
+        window="1 day", watermark="0 seconds",
+    )
+    # append mode emits each closed window exactly once; the re-agg
+    # is a cheap idempotence guard over the tiny emitted frame
+    return out.groupBy(
+        F.col("window_start").alias("day_start"), "event_type"
+    ).agg(F.sum("n").alias("n"))
 
 
 @register(
@@ -972,22 +966,10 @@ def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(pipeline/url_ingest.py twin).",
 )
 def stream_dedup_urls_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..streaming.state_machine import stream_dedup_urls
 
-    # the emitted key set is |users|·|event types| — |users| GROWS with
-    # SF, so (unlike the genuinely bounded |days|·|event types| frame
-    # in stream_windowed_counts) it must never be collect()ed to the
-    # driver: write into the stable per-query scratch and return a
-    # LAZY read, exactly like stream_enrich_join below
-    work = _gate_scratch("stream_dd", sf_dir)
-    events_dir = f"{work}/events"
-    os.makedirs(events_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{events_dir}/part-000.parquet")
-    stream_dedup_urls(spark, events_dir, f"{work}/ckpt", f"{work}/out")
-    return spark.read.parquet(f"{work}/out").select("user_id", "event_type")
+    out = _gate_stream(spark, "stream_dd", sf_dir, stream_dedup_urls)
+    return out.select("user_id", "event_type")
 
 
 @register(
@@ -1008,23 +990,10 @@ def stream_dedup_urls_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deterministic, so this is a full hash gate, not rows-only.",
 )
 def stream_enrich_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..streaming.state_machine import stream_enrich_join
 
-    # the enriched sink is |events|-sized — the one gate output that
-    # SCALES with SF — so unlike the bounded-frame adapters above it
-    # must never be collect()ed to the driver: the stream writes into
-    # a stable scratch dir and the gate returns a LAZY parquet read
-    work = _gate_scratch("stream_ej", sf_dir)
-    events_dir = f"{work}/events"
-    os.makedirs(events_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{events_dir}/part-000.parquet")
-    stream_enrich_join(spark, events_dir, f"{work}/ckpt", f"{work}/out")
-    return spark.read.parquet(f"{work}/out").select(
-        "event_id", "user_id", "event_type", "channel"
-    )
+    out = _gate_stream(spark, "stream_ej", sf_dir, stream_enrich_join)
+    return out.select("event_id", "user_id", "event_type", "channel")
 
 
 @register(
@@ -1997,20 +1966,10 @@ def uved_extraction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window scan per cadence tick.",
 )
 def stream_session_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..streaming.state_machine import stream_session_counts
 
-    # one row per (user, closed session) — sub-linear in events but
-    # still SF-scaling, so use the stable-scratch + lazy-read pattern
-    # (see _gate_scratch) instead of collecting to the driver
-    work = _gate_scratch("stream_sc", sf_dir)
-    events_dir = f"{work}/events"
-    os.makedirs(events_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{events_dir}/part-000.parquet")
-    stream_session_counts(spark, events_dir, f"{work}/ckpt", f"{work}/out")
-    return spark.read.parquet(f"{work}/out").select("session_start", "user_id", "n")
+    out = _gate_stream(spark, "stream_sc", sf_dir, stream_session_counts)
+    return out.select("session_start", "user_id", "n")
 
 
 @register(

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.tables import normalize_ts
@@ -60,6 +61,29 @@ def _read_event_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return normalize_ts(reader.parquet(events_path))
+
+
+def _parquet_sink(frame: DataFrame, out_dir: str) -> DataStreamWriter:
+    """An append-mode parquet file sink at ``out_dir``."""
+    return (
+        frame.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append")
+    )
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """The trigger policy of every stream here: one ``AvailableNow``
+    drain of whatever accumulated since the checkpoint, then stop —
+    the reference's cron cadence (SURVEY.md §2.10 R1), one invocation
+    per tick. Returns the finished StreamingQuery."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
 
 
 def _update_latest(
@@ -110,15 +134,10 @@ def stream_latest_state(
     def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream.writeStream.foreachBatch(write_batch).outputMode("update"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
 
 
 def stream_windowed_counts(
@@ -139,16 +158,7 @@ def stream_windowed_counts(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(_parquet_sink(agg, out_dir), checkpoint_dir)
 
 
 def latest_state_batch_equivalent(spark: SparkSession, events_path: str) -> DataFrame:
@@ -185,16 +195,7 @@ def stream_dedup_urls(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("event_id", "ts", "user_id", "event_type")
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(_parquet_sink(deduped, out_dir), checkpoint_dir)
 
 
 def stream_enrich_join(
@@ -218,16 +219,7 @@ def stream_enrich_join(
     enriched = events.join(F.broadcast(dim), on="event_type", how="left").select(
         "event_id", "user_id", "event_type", F.coalesce("channel", F.lit("other")).alias("channel")
     )
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(_parquet_sink(enriched, out_dir), checkpoint_dir)
 
 
 def stream_session_counts(
@@ -253,16 +245,7 @@ def stream_session_counts(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("session_start"), "user_id", "n")
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(_parquet_sink(agg, out_dir), checkpoint_dir)
 
 
 def _check_decision_log_layout(out_dir: str) -> None:
@@ -363,11 +346,9 @@ def stream_ingest_probe(
     Readers see no rows from it, and because the checkpoint has not
     committed the batch, the replay writes and removes it again.
 
-    The probe reads the PATH store (``state_dir`` parquet): each of
+    The probe reads the state store (``state_dir`` parquet): each of
     its two joins scans the stored leg, which broadcasts while small
-    and shuffles once it is not. The bucketed-table layout that makes
-    the corpus side shuffle-free (``build_state_bucketed``) is not
-    read by the stream."""
+    and shuffles once it is not."""
     import shutil
 
     from ..pipeline.ingest_increment import ingest_batch
@@ -388,13 +369,5 @@ def stream_ingest_probe(
             # an empty micro-batch: the decision log gains nothing
             shutil.rmtree(dec_dir, ignore_errors=True)
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(docs_path)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    docs = spark.readStream.schema(schema).parquet(docs_path)
+    return _drain(docs.writeStream.foreachBatch(handle), checkpoint_dir)
