@@ -12,7 +12,9 @@ bytes, task counts, errors — is written to the artifact file under
 bench_runs/.
 
 Each query is forced end-to-end with a noop sink (full
-materialization, no driver collect).
+materialization, no driver collect). SPARK_GRAFT_BENCH_QUERIES runs a
+comma-separated subset, SPARK_GRAFT_BENCH_RUNS sets the pass count
+(default 5) and SPARK_GRAFT_BENCH_ARTIFACT redirects the artifact.
 """
 
 from __future__ import annotations
@@ -248,56 +250,6 @@ def post_query_hygiene(spark) -> dict[str, int] | None:
     return rec
 
 
-def _quiet_gate(full_run: bool, getloadavg=os.getloadavg, sleep=time.sleep) -> dict:
-    """Bounded pre-flight wait for a quiet box (round-13 judge item 2:
-    the r12 sf3 canonical started at loadavg 15.9 and was useless as a
-    cross-round comparator; the driver's own r12 bench started at 8.65
-    and read +19% on code that isolated controls showed ≤1.0x).
-
-    Waits up to SPARK_GRAFT_BENCH_QUIET_WAIT seconds (default 600) for
-    the 1-minute loadavg to drop below SPARK_GRAFT_BENCH_QUIET_LOADAVG
-    (default 4.0), then proceeds either way — the artifact records the
-    invoke/start loadavgs, the wait, and whether the gate gave up
-    (``overridden``), so a noisy stamp is LABELED, never blocked
-    forever. Applies to FULL-headline runs (the canonical stamps) by
-    default; subset runs (targeted families, A/B pairs) skip it unless
-    SPARK_GRAFT_BENCH_QUIET=1 forces it — a short targeted run must
-    not stall ten minutes behind a marathon on the same box.
-    SPARK_GRAFT_BENCH_QUIET=0 disables the gate entirely."""
-    force = os.environ.get("SPARK_GRAFT_BENCH_QUIET", "")
-    thr = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_LOADAVG", "4"))
-    max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_WAIT", "600"))
-    invoke_load = getloadavg()[0]
-    rec = {
-        "threshold": thr,
-        "max_wait_sec": max_wait,
-        "loadavg_at_invoke": round(invoke_load, 2),
-        "waited_sec": 0.0,
-        "overridden": False,
-    }
-    enabled = force == "1" or (force != "0" and full_run)
-    rec["enabled"] = enabled
-    if not enabled or invoke_load < thr:
-        rec["loadavg_at_start"] = rec["loadavg_at_invoke"]
-        return rec
-    t0 = time.time()
-    load = invoke_load
-    while load >= thr and time.time() - t0 < max_wait:
-        sleep(min(15.0, max_wait / 4))
-        load = getloadavg()[0]
-    rec["waited_sec"] = round(time.time() - t0, 1)
-    rec["loadavg_at_start"] = round(load, 2)
-    rec["overridden"] = load >= thr
-    if rec["waited_sec"]:
-        print(
-            f"[quiet-gate] waited {rec['waited_sec']}s for loadavg "
-            f"{invoke_load:.1f} -> {load:.1f} (threshold {thr}"
-            f"{', OVERRIDDEN' if rec['overridden'] else ''})",
-            flush=True,
-        )
-    return rec
-
-
 def _git_rev() -> str | None:
     """Short rev (+ -dirty) of the MEASURED CODE. The -dirty suffix is
     computed over the measured code only (welearn_datastack_spark/ +
@@ -370,10 +322,6 @@ def _calibration(spark, rows: int = 20_000_000) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf, corpus = _parse_sf_dir(sf_dir)
-    # quiet-box gate BEFORE the session spins up (its own JVM adds load)
-    quiet_gate = _quiet_gate(
-        full_run=not os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "").strip()
-    )
     _load_groups()
     spark = get_spark("welearn-bench")
     # warm the JVM + parquet footers so per-query times measure the
@@ -385,13 +333,10 @@ def main() -> None:
             break
     # box-speed calibration BEFORE and AFTER the timing loop (subset
     # runs too — they are the adjudication controls, exactly where a
-    # calibrated ratio is needed); SPARK_GRAFT_BENCH_CALIB=0 disables
+    # calibrated ratio is needed)
     git_rev = _git_rev()
-    calib: dict = {}
-    calib_on = os.environ.get("SPARK_GRAFT_BENCH_CALIB", "1") != "0"
-    if calib_on:
-        calib["pre"] = _calibration(spark)
-        print(f"[calib] pre {calib['pre']}", flush=True)
+    calib = {"pre": _calibration(spark)}
+    print(f"[calib] pre {calib['pre']}", flush=True)
 
     # VARIANCE PROTOCOL (round 6 — cross-round deltas were noise-
     # polluted two rounds running, with untouched queries drifting
@@ -507,15 +452,14 @@ def main() -> None:
             "shuffle_write_mb": wr,
             "cold_total_sec": round(cold_total, 3),
             "loadavg_1m": [round(load_before, 2), round(os.getloadavg()[0], 2)],
-            "quiet_gate": quiet_gate,
             "git_rev": git_rev,
-        }
-        if calib:
-            spark_secs = [c["spark_sec"] for c in calib.values()]
-            detail["calibration"] = {
+            "calibration": {
                 **calib,
-                "spark_mean_sec": round(sum(spark_secs) / len(spark_secs), 3),
-            }
+                "spark_mean_sec": round(
+                    statistics.mean(c["spark_sec"] for c in calib.values()), 3
+                ),
+            },
+        }
         if errors:
             detail["errors"] = errors
         if guard_exits:
@@ -595,9 +539,8 @@ def main() -> None:
         # with nothing on disk — never again). The final write below
         # overwrites this with passes_done == runs.
         _write_artifact(passes_done=run_i + 1)
-    if calib_on:
-        calib["post"] = _calibration(spark)
-        print(f"[calib] post {calib['post']}", flush=True)
+    calib["post"] = _calibration(spark)
+    print(f"[calib] post {calib['post']}", flush=True)
     detail = _write_artifact(passes_done=n_runs)
     total = detail["value"]
     shuffle_read_mb = detail["shuffle_read_mb"]
@@ -620,7 +563,7 @@ def main() -> None:
         "shuffle_read_mb": shuffle_read_mb,
         "shuffle_write_mb": shuffle_write_mb,
         "loadavg_1m": detail["loadavg_1m"],
-        "calib_sec": detail.get("calibration", {}).get("spark_mean_sec"),
+        "calib_sec": detail["calibration"]["spark_mean_sec"],
         "artifact": (
             str(artifact.relative_to(artifact_dir.parent))
             if artifact.is_relative_to(artifact_dir.parent)

@@ -1,8 +1,7 @@
-"""bench.py, the headline benchmark: its quiet-box gate, box-speed
-calibration, cache hygiene between queries (guard persists, catalog
-cache, orphaned checkpoints), storage accounting, rev stamping (None
-outside a git checkout) and data-dir parsing, and the compact final
-line it prints."""
+"""bench.py, the headline benchmark: its box-speed calibration, cache
+hygiene between queries (guard persists, catalog cache, orphaned
+checkpoints), storage accounting, rev stamping (None outside a git
+checkout) and data-dir parsing, and the compact final line it prints."""
 
 from __future__ import annotations
 
@@ -27,62 +26,6 @@ def bench():
     import bench
 
     return bench
-
-
-def test_bench_quiet_gate_waits_records_and_overrides(monkeypatch):
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_LOADAVG", "4")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_WAIT", "600")
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_QUIET", raising=False)
-
-    # busy box that quiets down after two polls → gate waits, records
-    loads = iter([9.0, 7.0, 1.5])
-    slept = []
-    rec = bench._quiet_gate(
-        full_run=True,
-        getloadavg=lambda: (next(loads), 0, 0),
-        sleep=lambda s: slept.append(s),
-    )
-    assert rec["enabled"] and len(slept) == 2
-    assert rec["loadavg_at_invoke"] == 9.0 and rec["loadavg_at_start"] == 1.5
-    assert not rec["overridden"]
-
-    # box never quiets within the budget → proceed, LABELED overridden
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_WAIT", "0")
-    rec = bench._quiet_gate(
-        full_run=True, getloadavg=lambda: (9.0, 0, 0), sleep=lambda s: None
-    )
-    assert rec["overridden"] and rec["loadavg_at_start"] == 9.0
-
-    # already quiet → no wait at all
-    rec = bench._quiet_gate(
-        full_run=True,
-        getloadavg=lambda: (0.5, 0, 0),
-        sleep=lambda s: (_ for _ in ()).throw(AssertionError("slept")),
-    )
-    assert rec["waited_sec"] == 0.0 and not rec["overridden"]
-
-    # subset runs skip the gate (adjudication re-runs must not stall
-    # behind the marathon they adjudicate) unless QUIET=1 forces it
-    rec = bench._quiet_gate(
-        full_run=False,
-        getloadavg=lambda: (9.0, 0, 0),
-        sleep=lambda s: (_ for _ in ()).throw(AssertionError("slept")),
-    )
-    assert not rec["enabled"]
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET", "1")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET_WAIT", "0")
-    rec = bench._quiet_gate(
-        full_run=False, getloadavg=lambda: (9.0, 0, 0), sleep=lambda s: None
-    )
-    assert rec["enabled"] and rec["overridden"]
-    # and QUIET=0 disables even full runs
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUIET", "0")
-    rec = bench._quiet_gate(
-        full_run=True, getloadavg=lambda: (9.0, 0, 0), sleep=lambda s: None
-    )
-    assert not rec["enabled"]
 
 
 def test_bench_calibration_measures_both_legs(spark):
@@ -246,8 +189,6 @@ def test_bench_final_line_contract(sf_dir, tmp_path):
         SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_BENCH_QUERIES="tpch_q6_forecast_revenue,latest_event",
         SPARK_GRAFT_BENCH_RUNS="2",
-        SPARK_GRAFT_BENCH_QUIET="0",
-        SPARK_GRAFT_BENCH_CALIB="0",
         SPARK_GRAFT_BENCH_ARTIFACT=str(artifact),
     )
     proc = subprocess.run(
@@ -262,8 +203,11 @@ def test_bench_final_line_contract(sf_dir, tmp_path):
     assert summary["metric"] == "headline_queries_total"
     assert summary["n_queries"] == 2
     assert summary["errors_n"] == 0
+    # calibration always runs, before and after the timing loop
+    assert isinstance(summary["calib_sec"], float) and summary["calib_sec"] > 0
     assert artifact.exists()
-    assert json.loads(artifact.read_text())["queries"].keys() == {
-        "tpch_q6_forecast_revenue", "latest_event"
-    }
+    detail = json.loads(artifact.read_text())
+    assert detail["queries"].keys() == {"tpch_q6_forecast_revenue", "latest_event"}
+    assert {"pre", "post"} <= detail["calibration"].keys()
+    assert "quiet_gate" not in detail
     assert runs_digest() == before

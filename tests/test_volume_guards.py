@@ -153,6 +153,30 @@ def test_pair_guard_mode_off_and_conf_resolution(spark):
         pair_volume_guard(df, ["band", "band_key"], "doc_id", mode="explode")
 
 
+def test_pair_guard_budget_measures_spark_local_dirs(spark, monkeypatch, tmp_path):
+    """With no explicit or conf budget, the guard measures the volume
+    Spark spills to: SPARK_LOCAL_DIRS wins over spark.local.dir, as in
+    Spark's own local-dir resolution."""
+    import shutil
+    from collections import namedtuple
+
+    from welearn_datastack_spark.operators import dedup
+
+    spill = tmp_path / "spill"
+    spill.mkdir()
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{spill},{tmp_path / 'second'}")
+    seen = []
+    usage = namedtuple("usage", "total used free")
+
+    def fake_disk_usage(path):
+        seen.append(str(path))
+        return usage(100 << 30, 0, 100 << 30)
+
+    monkeypatch.setattr(shutil, "disk_usage", fake_disk_usage)
+    assert dedup._pair_guard_budget(spark, None) == 50 << 30
+    assert seen == [str(spill)]
+
+
 # --- guarded registry queries and operators ---------------------------
 
 

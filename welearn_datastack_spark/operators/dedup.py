@@ -359,8 +359,11 @@ def _pair_guard_mode(spark, mode: str | None) -> str:
 def _pair_guard_budget(spark, budget_bytes: int | None) -> int:
     """Disk budget for materialized pair output: explicit arg, else
     session conf (size strings: '40g'), else HALF the free space on
-    the shuffle-spill volume (spark.local.dir) — the shuffle write is
-    what actually fills the disk."""
+    the shuffle-spill volume — the shuffle write is what actually
+    fills the disk. The spill volume is found in Spark's own order:
+    the ``SPARK_LOCAL_DIRS`` environment variable overrides
+    ``spark.local.dir``, which falls back to /tmp."""
+    import os
     import shutil
 
     from ..sources.tables import _size_to_bytes
@@ -370,7 +373,9 @@ def _pair_guard_budget(spark, budget_bytes: int | None) -> int:
     conf = spark.conf.get("spark.welearn.pairGuard.budget", "")
     if conf:
         return _size_to_bytes(conf)
-    local_dir = spark.sparkContext.getConf().get("spark.local.dir", "/tmp")
+    local_dir = os.environ.get("SPARK_LOCAL_DIRS") or (
+        spark.sparkContext.getConf().get("spark.local.dir", "/tmp")
+    )
     local_dir = local_dir.split(",")[0]
     try:
         free = shutil.disk_usage(local_dir).free
@@ -556,8 +561,7 @@ PAIR_GUARD_BYTES_PER_PAIR = 12
 REPL_GUARD_BYTES_PER_ROW = 13
 
 # jaccard's 4-long pair rows (a_id, b_id, sa, sb): ~2x the 2-long
-# minhash stream's measured 9.7 B/pair compressed footprint. Shared
-# with tools/guard_projections.py.
+# minhash stream's measured 9.7 B/pair compressed footprint.
 JACCARD_GUARD_BYTES_PER_PAIR = 24
 
 
@@ -1030,29 +1034,6 @@ def bucket_pairs(
     return joined.select(*out)
 
 
-def simhash_band_frame(
-    fingerprints: DataFrame, id_col: str, bits: int = 16, n_bands: int = 4
-) -> DataFrame:
-    """The banded simhash frame exactly as :func:`simhash_near_pairs`
-    builds it before its guard — (id_col, simhash, band, band_key),
-    one row per (doc, band), band_key = that band's bit slice. Shared
-    with tools/guard_projections.py so the projection tool measures
-    the SAME bucket frame the guard gates (the drift hazard
-    minhash_band_frame closes for the minhash row)."""
-    width = bits // n_bands
-    mask = (1 << width) - 1
-    return fingerprints.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    ).withColumn(
-        # F.shiftright only takes a literal shift — the per-row band
-        # offset needs the SQL form
-        "band_key",
-        F.expr(f"shiftright(simhash, band * {width})").bitwiseAND(F.lit(mask)),
-    )
-
-
 def simhash_near_pairs(
     fingerprints: DataFrame,
     id_col: str,
@@ -1085,7 +1066,17 @@ def simhash_near_pairs(
     assert chunk_target >= 1, "chunk_target must be a positive chunk size"
     width = bits // n_bands
     mask = (1 << width) - 1
-    banded = simhash_band_frame(fingerprints, id_col, bits=bits, n_bands=n_bands)
+    # one row per (doc, band), band_key = that band's bit slice
+    banded = fingerprints.select(
+        F.col(id_col),
+        F.col("simhash"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
+    ).withColumn(
+        # F.shiftright only takes a literal shift — the per-row band
+        # offset needs the SQL form
+        "band_key",
+        F.expr(f"shiftright(simhash, band * {width})").bitwiseAND(F.lit(mask)),
+    )
     # Pre-flight disk gate with the CHUNK-SPLIT cost model (NOT the
     # quadratic pair model): simhash pairs are generated in-task after
     # the shuffle and deduped by first-band emission, so the disk

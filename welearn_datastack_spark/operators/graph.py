@@ -151,7 +151,7 @@ def connected_components_star(
     dst: str = "dst",
     max_iters: int = 50,
     stats: dict | None = None,
-    local_finish_edges: int | None = None,
+    local_finish_edges: int = 65536,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., *Connected Components in MapReduce
@@ -200,9 +200,8 @@ def connected_components_star(
     ``local_finish_edges`` the loop collects the remaining edges —
     a BOUNDED driver fetch, the kmeans-centroid discipline — and
     finishes with :func:`_union_find_min_labels` instead of paying
-    O(log remaining) more rounds. Default cutoff: conf
-    ``spark.welearn.cc.localFinishEdges`` (65536; ≈1-8 MB of id
-    pairs); pass ``0`` to disable (the property tests pin the
+    O(log remaining) more rounds. Default cutoff: 65536 edges (≈1-8 MB
+    of id pairs); pass ``0`` to disable (the property tests pin the
     distributed path this way). At 100 TB scale the early rounds run
     distributed exactly as before and the switch only replaces the
     contraction TAIL, where per-round overhead dominates shrinking
@@ -221,10 +220,6 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    if local_finish_edges is None:
-        local_finish_edges = int(
-            spark.conf.get("spark.welearn.cc.localFinishEdges", "65536")
-        )
 
     def _finish_local(edge_df: DataFrame) -> DataFrame:
         """Union-find the remaining (count-certified <= cutoff) edges

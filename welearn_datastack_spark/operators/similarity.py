@@ -391,17 +391,6 @@ def blas_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     return top_k_by(cand, ["q_id"], order, k=k)
 
 
-def sqdist(a: Column, b: Column) -> Column:
-    """Sequential-order squared Euclidean distance between two float
-    arrays (per-element double cast, same precision contract as
-    ``dot`` so a SQL oracle reproduces it bit-for-bit pre-round)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (_d(x) - _d(y)) * (_d(x) - _d(y))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 _SIMPLE_DOUBLE = __import__("re").compile(r"^-?\d+\.\d+$")
 
 
@@ -428,72 +417,48 @@ def baked_centroid_scores(vec_col, cent_rows, kind, round_digits=6, norm_col=Non
     smallest cent_id). Tie fields are longs so a surfaced cluster id
     keeps the id column's type.
 
-    ``vec_col`` / ``norm_col`` may be SQL fragments (strings) or
-    Columns. PREFER STRINGS: the expression is then assembled as ONE
-    SQL text and parsed in a single py4j round trip — building the
-    same k·dim tree through the Column DSL costs ~3,700 py4j calls
-    per invocation (~0.9 s of pure driver chatter measured at k=8,
-    dim=64; r15 opt), which dominated every iterative builder that
-    re-bakes centroids per round. The parsed tree is identical to the
-    DSL-built one (same functions, same casts, same field order), so
-    results are bit-for-bit unchanged.
+    ``vec_col`` / ``norm_col`` are SQL fragments (strings): the
+    expression is assembled as ONE SQL text and parsed in a single
+    py4j round trip — building the same k·dim tree through the Column
+    DSL cost ~3,700 py4j calls per invocation (~0.9 s of pure driver
+    chatter measured at k=8, dim=64; r15 opt), which dominated every
+    iterative builder that re-bakes centroids per round.
 
-    For the cosine kind, pass ``norm_col`` — a pre-projected
-    ``l2_norm(vec_col)`` column — so the row's norm folds once
-    instead of once per centroid; each CENTROID's norm is a driver
-    constant computed with the same sequential left-fold + sqrt the
-    Spark expression uses (Python float IS an IEEE double), so the
+    For the cosine kind, pass ``norm_col`` — the name of a
+    pre-projected ``l2_norm(vec_col)`` column — so the row's norm
+    folds once instead of once per centroid; each CENTROID's norm is
+    a driver constant computed with the same sequential left-fold +
+    sqrt the Spark expression uses (Python float IS an IEEE double), so the
     scores are bit-identical to ``cosine(vec_col, lit)``."""
     import math
 
-    if isinstance(vec_col, str):
-        if norm_col is not None and not isinstance(norm_col, str):
-            raise TypeError("pass norm_col as a SQL fragment with a str vec_col")
-        if kind == "cosine":
-            norm_sql = norm_col or (
-                f"sqrt(aggregate(transform({vec_col}, x -> CAST(x AS DOUBLE) * "
-                f"CAST(x AS DOUBLE)), 0.0D, (acc, x) -> acc + x))"
-            )
-        structs_sql = []
-        for cid, vec in sorted(cent_rows):
-            arr = "array(" + ",".join(_sql_double(x) for x in vec) + ")"
-            if kind == "cosine":
-                lit_norm = math.sqrt(sum(float(x) * float(x) for x in vec))
-                s = (
-                    f"round(aggregate(zip_with({vec_col}, {arr}, (x, y) -> "
-                    f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
-                    f"(acc, x) -> acc + x) / ({norm_sql} * {_sql_double(lit_norm)}), "
-                    f"{round_digits})"
-                )
-                t = f"CAST({-int(cid)} AS BIGINT)"
-            else:
-                s = (
-                    f"round(aggregate(zip_with({vec_col}, {arr}, (x, y) -> "
-                    f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-                    f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0.0D, "
-                    f"(acc, x) -> acc + x), {round_digits})"
-                )
-                t = f"CAST({int(cid)} AS BIGINT)"
-            structs_sql.append(f"struct({s} AS s, {t} AS t)")
-        return F.expr("array(" + ",".join(structs_sql) + ")")
-
-    # legacy Column path — identical expressions through the DSL
-    structs = []
+    if kind == "cosine":
+        norm_sql = norm_col or (
+            f"sqrt(aggregate(transform({vec_col}, x -> CAST(x AS DOUBLE) * "
+            f"CAST(x AS DOUBLE)), 0.0D, (acc, x) -> acc + x))"
+        )
+    structs_sql = []
     for cid, vec in sorted(cent_rows):
-        lit = F.array(*[F.lit(float(x)) for x in vec])
+        arr = "array(" + ",".join(_sql_double(x) for x in vec) + ")"
         if kind == "cosine":
-            nv = norm_col if norm_col is not None else l2_norm(vec_col)
             lit_norm = math.sqrt(sum(float(x) * float(x) for x in vec))
-            sc = F.round(dot(vec_col, lit) / (nv * F.lit(lit_norm)), round_digits)
-            structs.append(
-                F.struct(sc.alias("s"), F.lit(-int(cid)).cast("long").alias("t"))
+            s = (
+                f"round(aggregate(zip_with({vec_col}, {arr}, (x, y) -> "
+                f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
+                f"(acc, x) -> acc + x) / ({norm_sql} * {_sql_double(lit_norm)}), "
+                f"{round_digits})"
             )
+            t = f"CAST({-int(cid)} AS BIGINT)"
         else:
-            sc = F.round(sqdist(vec_col, lit), round_digits)
-            structs.append(
-                F.struct(sc.alias("s"), F.lit(int(cid)).cast("long").alias("t"))
+            s = (
+                f"round(aggregate(zip_with({vec_col}, {arr}, (x, y) -> "
+                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
+                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0.0D, "
+                f"(acc, x) -> acc + x), {round_digits})"
             )
-    return F.array(*structs)
+            t = f"CAST({int(cid)} AS BIGINT)"
+        structs_sql.append(f"struct({s} AS s, {t} AS t)")
+    return F.expr("array(" + ",".join(structs_sql) + ")")
 
 
 def kmeans_fixed(
@@ -534,12 +499,10 @@ def kmeans_fixed(
     until centroid drift < ε with the same body. A cluster that
     loses every member drops out (no re-seeding), same as the SQL
     twin. Returns the FINAL assignment (id, cluster, d2); with
-    ``with_centroids`` also the final (cent_id, ce) centroid table —
-    the learned coarse quantizer an IVF index build feeds on
-    (``with_centroids="rows"`` returns the same quantizer as the
-    driver-side row list the loop already holds, skipping the
-    createDataFrame→collect round trip a baked-literal consumer
-    would otherwise pay).
+    ``with_centroids`` also the final centroids as (cent_id, ce) rows
+    sorted by cent_id — the learned coarse quantizer an IVF index
+    build feeds on, handed over as the driver-side row list the loop
+    already holds.
     """
     assert n_iter >= 1, "n_iter must be >= 1"
     assert len(init_ids) >= 1, "init_ids must seed at least one centroid"
@@ -604,16 +567,9 @@ def kmeans_fixed(
     out = assign.select(vid, "cluster", "d2")
     if not with_centroids:
         return out
-    if with_centroids == "rows":
-        # the quantizer already lives on the driver as cent_rows (the
-        # bounded k·dim collect IS the iteration mechanism) — hand the
-        # rows straight to an index-build caller instead of round-
-        # tripping them through createDataFrame + collect, which cost
-        # a defaultParallelism-task no-op job per build (r15 opt).
-        # Sorted by cent_id, the same order the frame form persists.
-        return (out, [(int(cid), list(vec)) for cid, vec in sorted(cent_rows)])
-    cents = vectors.sparkSession.createDataFrame(
-        [(int(cid), list(vec)) for cid, vec in sorted(cent_rows)],
-        schema="cent_id long, ce array<double>",
-    )
-    return (out, cents)
+    # the quantizer already lives on the driver as cent_rows (the
+    # bounded k·dim collect IS the iteration mechanism) — hand the
+    # rows straight to the index-build caller instead of round-
+    # tripping them through createDataFrame + collect, which cost a
+    # defaultParallelism-task no-op job per build (r15 opt)
+    return (out, [(int(cid), list(vec)) for cid, vec in sorted(cent_rows)])

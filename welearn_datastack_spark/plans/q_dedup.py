@@ -25,28 +25,6 @@ from ..sources.tables import fan_out_for_compute, load_table
 from .registry import register
 
 
-def minhash_band_frame(
-    docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2
-) -> DataFrame:
-    """The gated narrow-key minhash pipeline — trigram shingles →
-    cross-engine hashed keys → minhash signatures → long band keys —
-    exactly as `minhash_lsh_candidates_hashed` / `_sampled` run it.
-    Shared with tools/guard_projections.py so its minhash row measures
-    the SAME pipeline the queries gate (round-12 ADVICE: a tool that
-    re-derived it with its own defaults would silently diverge if the
-    shingle width or banding parameters here moved)."""
-    sh = hashed_shingles(
-        word_shingles(docs, "doc_id", "text", n=3), "doc_id", cross_engine=True
-    )
-    sigs = minhash_signatures(
-        sh, "doc_id", n_hashes=n_bands * rows_per_band, prehashed=True
-    )
-    return lsh_band_keys(
-        sigs, "doc_id", rows_per_band=rows_per_band, long_keys=True,
-        cross_engine=True,
-    )
-
-
 def _minhash_worst_case_pairs(docs: DataFrame, n_bands: int) -> int:
     """Free upper bound for pair_volume_guard: every doc in one bucket
     per band → n_bands · C(n, 2). One COUNT(*) scalar (the same
@@ -323,15 +301,24 @@ def _register_minhash(
 ) -> None:
     """Register one MinHash (8 perms) + LSH (4 bands × 2 rows)
     candidate-pair query. ``narrow_keys`` takes the gated 8-byte-key
-    pipeline (:func:`minhash_band_frame`) instead of string shingles
-    and md5 band keys; ``sampled`` runs the pair-volume guard in
+    pipeline (cross-engine hashed trigram shingles → prehashed minhash
+    signatures → long band keys) instead of string shingles and md5
+    band keys; ``sampled`` runs the pair-volume guard in
     mode='sample' under a fixed tiny budget instead of the full-set
     mode='fail' with its free worst-case hint."""
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _docs(spark, sf_dir)
         if narrow_keys:
-            bands = minhash_band_frame(docs, n_bands=4, rows_per_band=2)
+            sh = hashed_shingles(
+                word_shingles(docs, "doc_id", "text", n=3), "doc_id",
+                cross_engine=True,
+            )
+            sigs = minhash_signatures(sh, "doc_id", n_hashes=8, prehashed=True)
+            bands = lsh_band_keys(
+                sigs, "doc_id", rows_per_band=2, long_keys=True,
+                cross_engine=True,
+            )
         else:
             sh = word_shingles(docs, "doc_id", "text", n=3)
             sigs = minhash_signatures(sh, "doc_id", n_hashes=8)

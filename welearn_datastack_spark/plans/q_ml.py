@@ -775,24 +775,53 @@ FROM assign a LEFT JOIN dup d ON d.vec_id = a.vec_id
 )
 
 
-def semantic_assignment_frames(
-    emb: DataFrame, n: int
-) -> tuple[DataFrame, DataFrame]:
-    """(tagged, assign) exactly as semantic_dedup_flags builds them —
-    the corpus-sized quantizer (stride centroids + sign-bucket-pruned
-    assignment, seed 211) with self-assigned singletons. Shared with
-    tools/guard_projections.py so the projection tool probes the SAME
-    cluster frame the guard gates (the drift hazard minhash_band_frame
-    closes for the minhash row)."""
+@register(
+    "semantic_dedup_flags",
+    _SEMDEDUP_ORACLE,
+    doc="Semantic dedup (SemDeDup-style; Abbas et al. 2023), "
+    "CORPUS-SCALED end to end: the coarse quantizer has k ~ "
+    "max(8, n/64) centroids picked by a deterministic id stride "
+    "(operators/similarity.stride_centroid_params), so per-cluster "
+    "membership — and the |cluster|² cosine work inside it — stays "
+    "constant while cluster count (= shuffle keys = parallelism) "
+    "grows with the corpus. Assignment is BUCKET-PRUNED: brute "
+    "nearest-centroid scoring is n·k ≈ n²/64 dots (the quadratic "
+    "merely moved up a stage — measured 102 of 116 s at sf1), so "
+    "each vector scores only the ~4 centroids sharing its "
+    "deterministic sign-bucket (sem_assign_bits planes, seed 211) — "
+    "the IVF-probe pruning with an exact SQL twin; bucketless "
+    "vectors self-assign as singletons. Every sizing formula is "
+    "computed from COUNT(*) identically in both engines, so the "
+    "full hash gate holds. Near-duplicates are flagged by pairwise "
+    "cosine >= tau within a cluster only; pairs come from the "
+    "bucket self-pair kernel (operators/dedup.bucket_pairs) "
+    "so a dense cluster can never serialize onto one task; the "
+    "min-id member of each semantic-dup group is kept.",
+)
+def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import (
         bucket_key_col,
         bucket_pruned_assign,
         derive_planes,
+        dot,
         l2_norm,
         sem_assign_bits,
         stride_centroid_params,
     )
 
+    par = spark.sparkContext.defaultParallelism
+    # repartition BEFORE the fold-heavy map stages: a small parquet
+    # file arrives as 1-2 scan splits, which would serialize the
+    # per-vector bucket/norm folds onto two cores (measured 15x at
+    # sf1); at 100 TB the scan has thousands of splits and this is
+    # noise
+    base = load_table(spark, sf_dir, "embeddings")
+    emb = base.repartition(par)
+    # sizing count on the BARE scan (footer-metadata count) —
+    # counting the repartitioned frame would pay its exchange
+    n = base.count()
+    # the corpus-sized quantizer: stride centroids (seed-211 sign
+    # buckets) with self-assigned singletons
     stride, off = stride_centroid_params(n)
     planes = derive_planes(seed=211, n_bits=sem_assign_bits(n), dims=64)
     # bucket-pruned assignment (the IVF-probe pruning, deterministic):
@@ -801,10 +830,10 @@ def semantic_assignment_frames(
     # vector scores ONLY the ~4 centroids sharing its sign-bucket;
     # bucketless vectors self-assign as singleton clusters.
     # pin the fold products ONCE (r15 opt): tagged is referenced by
-    # the centroid leg, the assignment probe, and every caller's
-    # member join — un-pinned, the per-vector bucket/norm folds (the
-    # widest expressions in the plan) are REPLICATED into each
-    # consumer subtree, which both re-executes them and bloats the
+    # the centroid leg, the assignment probe, and the member join —
+    # un-pinned, the per-vector bucket/norm folds (the widest
+    # expressions in the plan) are REPLICATED into each consumer
+    # subtree, which both re-executes them and bloats the
     # logical plan Catalyst re-optimizes on every sink (measured
     # ~1.3 s/opt pass on semantic_dedup_flags at sf0.1)
     tagged = emb.select(
@@ -834,48 +863,6 @@ def semantic_assignment_frames(
         # runs once per build
         .localCheckpoint(eager=True)
     )
-    return tagged, assign
-
-
-
-@register(
-    "semantic_dedup_flags",
-    _SEMDEDUP_ORACLE,
-    doc="Semantic dedup (SemDeDup-style; Abbas et al. 2023), "
-    "CORPUS-SCALED end to end: the coarse quantizer has k ~ "
-    "max(8, n/64) centroids picked by a deterministic id stride "
-    "(operators/similarity.stride_centroid_params), so per-cluster "
-    "membership — and the |cluster|² cosine work inside it — stays "
-    "constant while cluster count (= shuffle keys = parallelism) "
-    "grows with the corpus. Assignment is BUCKET-PRUNED: brute "
-    "nearest-centroid scoring is n·k ≈ n²/64 dots (the quadratic "
-    "merely moved up a stage — measured 102 of 116 s at sf1), so "
-    "each vector scores only the ~4 centroids sharing its "
-    "deterministic sign-bucket (sem_assign_bits planes, seed 211) — "
-    "the IVF-probe pruning with an exact SQL twin; bucketless "
-    "vectors self-assign as singletons. Every sizing formula is "
-    "computed from COUNT(*) identically in both engines, so the "
-    "full hash gate holds. Near-duplicates are flagged by pairwise "
-    "cosine >= tau within a cluster only; pairs come from the "
-    "bucket self-pair kernel (operators/dedup.bucket_pairs) "
-    "so a dense cluster can never serialize onto one task; the "
-    "min-id member of each semantic-dup group is kept.",
-)
-def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import dot
-
-    par = spark.sparkContext.defaultParallelism
-    # repartition BEFORE the fold-heavy map stages: a small parquet
-    # file arrives as 1-2 scan splits, which would serialize the
-    # per-vector bucket/norm folds onto two cores (measured 15x at
-    # sf1); at 100 TB the scan has thousands of splits and this is
-    # noise
-    base = load_table(spark, sf_dir, "embeddings")
-    emb = base.repartition(par)
-    # sizing count on the BARE scan (footer-metadata count) —
-    # counting the repartitioned frame would pay its exchange
-    n = base.count()
-    tagged, assign = semantic_assignment_frames(emb, n)
     # norms are computed ONCE per vector (tagged), not per pair — the
     # pair stage is the quadratic part (|cluster|² dots), so pushing
     # the two 64-element norm folds out of it cuts per-pair work ~3x
@@ -1057,7 +1044,7 @@ def incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_stored = base.filter(stored_ids).count()
     stride, off = stride_centroid_params(n_stored)
     planes = derive_planes(seed=211, n_bits=sem_assign_bits(n_stored), dims=64)
-    # pinned for the same reason as semantic_assignment_frames (r15
+    # pinned for the same reason as semantic_dedup_flags' tagged (r15
     # opt): tag_s/tag_i/cents and both assignment probes all re-embed
     # the bucket/norm fold subtree otherwise
     tagged = emb.select(
@@ -1258,7 +1245,7 @@ def ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeping the corpus embedding column out of every serve shuffle
     # (same audit finding as ivf_ann_topk)
     _, cent_rows = kmeans_fixed(
-        emb, _CENTROID_IDS, n_iter=3, with_centroids="rows"
+        emb, _CENTROID_IDS, n_iter=3, with_centroids=True
     )
     from ..operators.similarity import baked_centroid_scores
 

@@ -4,8 +4,11 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the
 same config block is what we would ship to a 1000-executor cluster —
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 Arrow for every pandas-UDF boundary, and a shuffle-partition count
-that the caller overrides per deployment (32 locally; on a real
+that the caller passes per deployment (32 by default; on a real
 cluster AQE's coalescing makes the initial number less critical).
+The deployment settings read from the environment are
+``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_DRIVER_MEM``,
+``SPARK_GRAFT_WAREHOUSE`` and ``SPARK_GRAFT_UI``.
 """
 
 from __future__ import annotations
@@ -64,10 +67,8 @@ def ensure_self_on_executors(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
-def get_spark(app_name: str = "welearn-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "welearn-spark", shuffle_partitions: int = 32) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -98,10 +99,7 @@ def get_spark(app_name: str = "welearn-spark", shuffle_partitions: int | None = 
         # tail the driver captures (BENCH_r11.json's 2000-char tail was
         # carriage-return progress frames); bench.py prints its own
         # compact per-query lines instead
-        .config(
-            "spark.ui.showConsoleProgress",
-            os.environ.get("SPARK_GRAFT_CONSOLE_PROGRESS", "false"),
-        )
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.retainedStages", "500000")
         .config("spark.ui.retainedJobs", "500000")
         # static conf; default 100 entries. bench.py interleaves ~90
@@ -118,14 +116,8 @@ def get_spark(app_name: str = "welearn-spark", shuffle_partitions: int | None = 
         # their pure-driver build time (open_alex roundtrip: 2.9 s of
         # a 4.7 s build across 306 wrapped calls). Debug provenance
         # for failed queries is not worth 2x build latency on every
-        # query on any deployment, local or cluster. Env-overridable
-        # (it is a STATIC conf, so a session cannot flip it later):
-        # SPARK_GRAFT_DF_DEBUG=true restores the provenance wrapper
-        # for interactive debugging / A-B evidence.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
-        )
+        # query on any deployment, local or cluster.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     # spark.sql.codegen.cache.maxEntries is a STATIC conf: getOrCreate()
