@@ -36,10 +36,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 # already pinned it)
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
-from welearn_datastack_spark.operators.dedup import (
-    PairVolumeExceeded,
-    release_guard_caches,
-)
+from welearn_datastack_spark.operators.dedup import PairVolumeExceeded
 from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
 from welearn_datastack_spark.session import get_spark
 
@@ -205,17 +202,17 @@ def _storage_info(spark) -> dict[str, int] | None:
 
 def post_query_hygiene(spark) -> dict[str, int] | None:
     """Cache hygiene between bench queries (round-14 verdict item 1):
-    sample what the query just left in the block manager, and if it
-    left ANYTHING, release the session-lifetime guard persists and
-    clear the catalog cache so the NEXT query starts from a clean
-    JVM. Returns the pre-clear storage record (None/zeroes = the query
-    was already clean, nothing was cleared).
+    sample what the query just left in the block manager, clear the
+    catalog cache, and if the query left ANY blocks, unpersist them so
+    the NEXT query starts from a clean JVM. Returns the pre-clear
+    storage record (None/zeroes = the query was already clean, nothing
+    was cleared).
 
-    Rationale: only the persist_on_probe dedup queries deliberately
-    cache across their own sink (2 of 91 headline queries); their
-    cross-pass cache reuse was never part of the measured contract,
-    while the memory pressure and GC their lingering blocks impose on
-    every LATER query in the pass is exactly the flap the per-round
+    Rationale: the builders' pins (localCheckpoint frames, the volume
+    guards' probe pins among them) are per-build scaffolding, but the
+    ContextCleaner frees their blocks only after a JVM GC collects
+    the dropped frame — until then they hold memory and add GC work to
+    every LATER query in the pass, exactly the flap the per-round
     adjudications kept acquitting as 'session-state'. Clean state per
     query makes every wall self-contained: each warm pass re-runs the
     guard probes and sizing counts its builders take, as a one-build
@@ -226,9 +223,8 @@ def post_query_hygiene(spark) -> dict[str, int] | None:
     # block lands reads rdds==0 here, yet its lazy CacheManager entry
     # would materialize inside a LATER query sharing the plan fragment
     # — the exact cross-query attribution flap this hook exists to
-    # prevent (round-15 self-review). On a clean session these calls
-    # are a few no-op py4j round-trips outside the timed window.
-    release_guard_caches()
+    # prevent (round-15 self-review). On a clean session this is a
+    # no-op py4j round-trip outside the timed window.
     try:
         spark.catalog.clearCache()
     except Exception:  # noqa: BLE001
@@ -236,7 +232,8 @@ def post_query_hygiene(spark) -> dict[str, int] | None:
     if rec and rec["rdds"]:
         # catalog.clearCache() reaches only CacheManager entries; the
         # localCheckpoint RDDs the iterative builders leave behind
-        # (BPE vocab rounds, BFS frontiers, ingest decision pins —
+        # (BPE vocab rounds, BFS frontiers, ingest decision pins,
+        # volume-guard probe pins —
         # all per-build scaffolding, orphaned once the sink finished)
         # live in the block manager as raw persisted RDDs and survive
         # it. Drop them too, or every later query's storage record

@@ -1,5 +1,5 @@
 """bench.py, the headline benchmark: its box-speed calibration, cache
-hygiene between queries (guard persists, catalog cache, orphaned
+hygiene between queries (persisted frames, catalog cache, orphaned
 checkpoints), storage accounting, rev stamping (None outside a git
 checkout) and data-dir parsing, and the compact final line it prints."""
 
@@ -9,12 +9,6 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
-
-from welearn_datastack_spark.operators.dedup import (
-    _GUARD_PERSISTS,
-    pair_volume_guard,
-    release_guard_caches,
-)
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -40,22 +34,17 @@ def test_bench_calibration_measures_both_legs(spark):
 
 def test_post_query_hygiene_clears_guard_persists(spark, bench):
     """The pin for 'cache-clean state between bench families': a query
-    that left a persist_on_probe cache behind is detected (nonzero
-    storage record) and the session is returned to a clean block
-    manager + empty guard registry before the next query runs."""
-    release_guard_caches()
+    that left a persisted frame behind is detected (nonzero storage
+    record) and the session is returned to a clean block manager
+    before the next query runs."""
     spark.catalog.clearCache()
+    bench.post_query_hygiene(spark)
     df = spark.createDataFrame([(i, "a") for i in range(50)], ["doc_id", "bk"])
-    guarded = pair_volume_guard(
-        df, ["bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    guarded.count()  # materialize the persist (what a bench sink does)
-    assert len(_GUARD_PERSISTS) == 1
+    df.persist().count()  # materialize the persist (what a bench sink does)
     rec = bench.post_query_hygiene(spark)
     assert rec is not None and rec["rdds"] >= 1
     assert rec["mem_bytes"] + rec["disk_bytes"] > 0
     # post-state: clean JVM for the next query
-    assert len(_GUARD_PERSISTS) == 0
     after = bench._storage_info(spark)
     assert after is not None and after["rdds"] == 0
     # idempotent: a clean session records clean and clears nothing

@@ -13,6 +13,12 @@ Every environment variable or ``spark.welearn.*`` conf read by the
 package, ``bench.py`` or ``tools/`` is a knob someone must know to
 set. The knob census pins that set too: a knob needs one line saying
 why it must be settable, and a value nobody sets is a constant.
+
+The package pins frames one way: ``localCheckpoint``, whose blocks
+the ContextCleaner frees with the frame that holds them. A
+``.persist(`` or ``.cache()`` registers state that outlives the
+build and must be released by someone outside the engine, so the pin
+census allows none.
 """
 
 from __future__ import annotations
@@ -125,6 +131,22 @@ def test_allowlist_has_no_stale_entries():
     census = _census()
     stale = [f for f in ALLOWED if f not in census]
     assert not stale, f"allowlist entries with no remaining collect site: {stale}"
+
+
+_PIN_PAT = re.compile(r"\.(persist\(|cache\(\))")
+
+
+def test_no_persist_or_cache_sites():
+    sites = [
+        f"{f.relative_to(PKG)}:{i}"
+        for f in sorted(PKG.rglob("*.py"))
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if _PIN_PAT.search(line)
+    ]
+    assert not sites, (
+        f".persist( / .cache() in the package: {sites} — pin per build "
+        "with localCheckpoint instead"
+    )
 
 
 ROOT = PKG.parent

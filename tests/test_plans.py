@@ -173,15 +173,10 @@ _EXCHANGE_BUDGET = {
     # chunked_self_pairs so no task materializes a mega-bucket's pair
     # array) + pair dedup
     "minhash_lsh_candidates": 7,
-    # same plan, 8-byte keys. TIGHT budget, asserted on a COLD guard
-    # cache (the test releases live guard persists first — round-13
-    # ADVICE: the loosened 9 absorbed the cached-plan variant and let
-    # a genuine +2-exchange regression pass). When the session already
-    # ran minhash_lsh_candidates_sampled, its persist_on_probe cache
-    # makes this plan read through an InMemoryRelation boundary, which
-    # drops the doc_id-clustering elision and re-adds two NARROW
-    # band-row exchanges (deliberate: −35% family win at sf3, SCALE.md
-    # §24.2) — test_sampled_cache_feeds_sibling_plan pins that variant.
+    # same plan, 8-byte keys. TIGHT budget (round-13 ADVICE: a
+    # loosened 9 let a genuine +2-exchange regression pass). No guard
+    # state outlives a build, so this plan no longer depends on which
+    # query the session ran before it.
     "minhash_lsh_candidates_hashed": 7,
     # round-13 rewrite: shingle agg + the chunk-split's pinned bucket
     # and 2 chunk-pair repartitions (off the collect_list OOM-bomb
@@ -280,13 +275,8 @@ _EXCHANGE_BUDGET = {
 
 
 def test_dedup_lsh_exchange_budgets(spark, sf_dir):
-    # cold guard cache: another test (or registry order) may have left
-    # minhash_lsh_candidates_sampled's persist_on_probe cache live,
-    # which legitimately adds 2 exchanges to the hashed sibling's plan
-    # — release so the TIGHT budgets keep their teeth (round-13 ADVICE)
-    from welearn_datastack_spark.operators.dedup import release_guard_caches
-
-    release_guard_caches()
+    # every build plans cold: no guard cache is left by an earlier
+    # query for a later plan to read through
     for name, budget in _EXCHANGE_BUDGET.items():
         plan = _plan(spark, sf_dir, name)
         got = plan.count("Exchange hashpartitioning")

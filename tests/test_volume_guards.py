@@ -3,8 +3,8 @@ pair guard's fail, sample and pass branches, its probe-skip fast path
 and mode/budget resolution; the guarded minhash, simhash, jaccard and
 semantic-dedup paths; adaptive chunking from the probe's max-bucket
 certificate; guard-mode pins for oracle parity; a probe on every
-build (no verdict outlives its build); and persist-on-probe caching
-with its bulk release."""
+build (no verdict outlives its build); and the pin a probe fills,
+which lives no longer than the frame it returns."""
 
 from __future__ import annotations
 
@@ -22,7 +22,6 @@ from welearn_datastack_spark.operators.dedup import (
     hexint,
     jaccard_pairs,
     pair_volume_guard,
-    release_guard_caches,
     replicated_volume_guard,
     word_shingles,
 )
@@ -544,118 +543,76 @@ def test_rewritten_input_gets_fresh_guard_verdict(spark, tmp_path):
         )
 
 
-# --- persist-on-probe caches ----------------------------------------
+# --- the probe's pin -----------------------------------------------
 
 
-def test_persist_on_probe_caches_and_fail_branch_releases(spark):
+def _drop_persisted_rdds(spark):
+    """Start from an empty block manager: pins other tests left behind
+    would count in the storage checks below."""
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist()
+
+
+def test_probe_pins_and_fail_branch_frees_pin(spark):
+    """The probe pins what it measures: the pass branch returns a frame
+    whose count recomputes nothing upstream of the pin, and the pin of
+    a fail branch is freed once its frame is gone."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    evals = sc.accumulator(0)
+
+    def tick(x):
+        evals.add(1)
+        return x
+
+    tick_udf = F.udf(tick, "long")
     df = spark.range(50).select(
-        F.col("id").alias("doc_id"), F.lit(0).alias("b"), F.lit("k").alias("bk")
+        tick_udf(F.col("id")).alias("doc_id"), F.lit(0).alias("b"),
+        F.lit("k").alias("bk"),
     )
-    # passthrough: probe ran (no worst-case hint), frame left persisted
-    out = replicated_volume_guard(
-        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    assert out.storageLevel.useMemory
-    out.unpersist()
-    # fail: the persist must be RELEASED before the raise (a guarded
-    # query that declines to run must not leak executor storage)
+    # pass: the probe ran (no worst-case hint) and filled the pin
+    out = replicated_volume_guard(df, ["b", "bk"], "doc_id", budget_bytes=1 << 30)
+    assert evals.value == 50
+    assert out.count() == 50
+    assert evals.value == 50  # the count read the pin
+    del out
+
+    # fail: the probe's pin holds blocks until its frame is dropped
+    _drop_persisted_rdds(spark)
     with pytest.raises(PairVolumeExceeded):
         replicated_volume_guard(
-            df, ["b", "bk"], "doc_id", budget_bytes=10,
-            chunk_target=128, persist_on_probe=True,
+            df, ["b", "bk"], "doc_id", budget_bytes=10, chunk_target=128
         )
-    assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
-    # and a later guarded run is unaffected by the released cache
-    out2 = replicated_volume_guard(
-        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    assert out2.count() == 50
-    out2.unpersist()
-
-
-def test_guard_caches_bulk_release(spark):
-    release_guard_caches()
-    df = spark.range(40).select(
-        F.col("id").alias("doc_id"), F.lit(0).alias("b"), F.lit("k").alias("bk")
-    )
-    out = replicated_volume_guard(
-        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    assert release_guard_caches() >= 1
-    assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
-
-
-def test_rebuild_repersists_idempotently(spark):
-    """A caller that unpersisted after its sink must still get
-    probe/run sharing on LATER builds — every build persists the frame
-    before its probe, whatever an earlier build's cache became."""
-    release_guard_caches()
-    df = spark.range(30).select(
-        F.col("id").alias("doc_id"), F.lit(1).alias("b"), F.lit("m").alias("bk")
-    )
-    out1 = replicated_volume_guard(
-        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    assert out1.storageLevel.useMemory
-    out1.unpersist()  # the docstring's 'after their sink' advice
-    out2 = replicated_volume_guard(
-        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    assert out2.storageLevel.useMemory  # persisted again
-    release_guard_caches()
-
-
-def test_sampled_cache_feeds_sibling_plan(spark, sf_dir):
-    """Pin of the claimed sibling-query cache hit: after
-    minhash_lsh_candidates_sampled's persist_on_probe
-    caches the shared band frame, the hashed sibling's physical plan
-    reads through the InMemoryRelation; releasing the guard caches
-    restores the cold plan within the tight exchange budget."""
-    from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
-
-    _load_groups()
-    release_guard_caches()
-    REGISTRY["minhash_lsh_candidates_sampled"].build(spark, sf_dir).count()
-    warm = (
-        REGISTRY["minhash_lsh_candidates_hashed"]
-        .build(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "InMemoryTableScan" in warm
-    release_guard_caches()
-    cold = (
-        REGISTRY["minhash_lsh_candidates_hashed"]
-        .build(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "InMemoryTableScan" not in cold
-    assert cold.count("Exchange hashpartitioning") <= 7
+    infos = sc._jsc.sc().getRDDStorageInfo
+    assert len(infos()) == 1
+    # py4j releases its JVM handles from a finalizer thread, so one GC
+    # on each side may run before the handle is gone: repeat both until
+    # the ContextCleaner has freed the blocks, bounded
+    deadline = time.monotonic() + 30
+    while len(infos()) and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert len(infos()) == 0
 
 
 def test_gen_sf_regen_releases_live_guard_caches(spark):
-    from welearn_datastack_spark.operators import dedup
-
+    """A frame cached over the old corpus does not outlive its
+    regeneration: the regen hook clears the session's caches."""
     sys.path.insert(0, str(REPO / "tools"))
     try:
         import gen_sf
     finally:
         sys.path.pop(0)
 
-    # start from an empty block manager: pins other tests left behind
-    # (localCheckpoint frames, not guard caches) would count below
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist()
+    _drop_persisted_rdds(spark)
     df = spark.range(50).selectExpr("id")
     df.persist().count()
-    dedup._GUARD_PERSISTS["__t__"] = df
     try:
+        assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 1
         gen_sf._release_session_caches()
-        assert "__t__" not in dedup._GUARD_PERSISTS
         assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
     finally:
-        dedup._GUARD_PERSISTS.pop("__t__", None)
         df.unpersist()

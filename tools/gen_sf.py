@@ -142,19 +142,14 @@ def _ts_col(us: np.ndarray) -> pa.Array:
 def _release_session_caches() -> None:
     """Corpora-regen hook: if this generator runs INSIDE a session that
     already cached frames over the output dir (service-style callers,
-    test fixtures), release the live guard persists and the catalog
-    cache — Spark would otherwise serve later queries over the
-    rewritten files from caches built over the old ones. No-op when
-    the engine package or a session is unavailable (the normal
-    standalone-CLI case: a fresh process holds no caches)."""
+    test fixtures), clear the catalog cache — Spark would otherwise
+    serve later queries over the rewritten files from caches built
+    over the old ones. No-op when pyspark or a session is unavailable
+    (the normal standalone-CLI case: a fresh process holds no
+    caches)."""
     try:
         from pyspark.sql import SparkSession
 
-        from welearn_datastack_spark.operators.dedup import release_guard_caches
-
-        released = release_guard_caches()
-        if released:
-            print(f"  (released {released} live guard cache(s) after regen)")
         active = SparkSession.getActiveSession()
         if active is not None:
             active.catalog.clearCache()

@@ -83,19 +83,12 @@ def sentence_count(col: Column) -> Column:
     return F.greatest(F.lit(1), n)
 
 
-def avg_sentence_length(col: Column) -> Column:
-    """Words per sentence with 0-div guard (reference F11,
-    computed_metadata.py:100–112)."""
-    return lexicon_count(col) / sentence_count(col)
-
-
 def syllable_count_approx(col: Column) -> Column:
     """Vowel-group syllable approximation. The reference counts
     hyphenation points with Pyphen (F12, computed_metadata.py:115–135)
     — a dictionary lookup that cannot be a Catalyst expression; this
     vowel-group heuristic is the JVM-side stand-in used by the
-    oracle-checkable readability query (the Pyphen-faithful version is
-    a pandas UDF in udfs.py)."""
+    oracle-checkable readability query."""
     return F.size(F.regexp_extract_all(F.lower(col), F.lit(r"[aeiouy]+"), 0))
 
 
@@ -103,12 +96,6 @@ def word_count_simple(col: Column) -> Column:
     """``\\w+`` token count used by predict_duration (reference F14,
     computed_metadata.py:183–198)."""
     return F.size(F.regexp_extract_all(col, F.lit(r"\w+"), 0))
-
-
-def extract_json_field(col: Column, field: str) -> Column:
-    """JSON field access over a string column (reference F5's
-    ``details ->> 'doi'`` pattern, update_doi_from_details.sql)."""
-    return F.get_json_object(col, f"$.{field}")
 
 
 def inverted_abstract_to_text(map_col: Column) -> Column:

@@ -88,15 +88,6 @@ def nfc_normalize(s: pd.Series) -> pd.Series:
     return s.map(norm)
 
 
-@F.pandas_udf(T.IntegerType())
-def syllable_count_en(s: pd.Series) -> pd.Series:
-    """F12: syllable count. Reference uses Pyphen hyphenation points
-    (computed_metadata.py:115–135). STUB: pyphen is absent here, so we
-    count vowel groups — same UDF shape, swap the body when pyphen is
-    installable."""
-    return s.map(lambda x: len(re.findall(r"[aeiouy]+", x.lower())) if x is not None else None)
-
-
 # ---------------------------------------------------------------------------
 # F15 / M6 — language identification
 # ---------------------------------------------------------------------------

@@ -179,10 +179,11 @@ def jaccard_pairs(
     bucket exceeds ``chunk_target``. A skipped probe or the sample
     branch leaves no certificate, and the pair join chunk-splits.
 
-    NOT pinned (r15, measured): localCheckpointing the sized shingle
-    frame halves the sink's compute, but the checkpoint job lost on
-    wall to the plan whose duplicated subtrees run concurrently on
-    idle cores (control 1.15×)."""
+    The guard's probe pins the pre-window shingle frame as it
+    measures it (:func:`_volume_guard`), so the pair join reads that
+    pin. No separate checkpoint job is added: r15 measured one (of
+    the sized frame) and it lost on wall to the plan whose duplicated
+    subtrees run concurrently on idle cores (control 1.15×)."""
     # guard BEFORE the size window (bucket counts don't need sizes, so
     # the probe plan is the bare shingle pipeline — measured ~0.55 s vs
     # ~1.1 s for the window-carrying plan at sf0.1; the sample branch
@@ -384,27 +385,12 @@ def _pair_guard_budget(spark, budget_bytes: int | None) -> int:
     return free // 2
 
 
-# live persist_on_probe caches, keyed by frame object id, so caches
-# that deliberately outlive their query can be released in bulk
-# (release_guard_caches).
-_GUARD_PERSISTS: dict[object, DataFrame] = {}
-
-
 def release_guard_caches() -> int:
-    """Unpersist every live guard cache and clear the registry —
-    the bulk release hook for bench family boundaries / long-lived
-    sessions (round-13 ADVICE: the session-lifetime caches had no
-    release surface beyond per-frame unpersist). Returns the count
-    released."""
-    n = 0
-    for df in _GUARD_PERSISTS.values():
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # noqa: BLE001 — a dead session must not block release
-            pass
-    _GUARD_PERSISTS.clear()
-    return n
+    """No-op kept only because perfbench's ``QueryShort._clean``
+    imports and calls it; the guard keeps no state past its build, so
+    there is nothing to release. Delete it together with that call.
+    Returns 0."""
+    return 0
 
 
 class GuardStats:
@@ -453,7 +439,6 @@ def _volume_guard(
     worst_case_units: int | None = None,
     budget_bytes: int | None = None,
     mode: str | None = None,
-    persist_on_probe: bool = False,
 ) -> tuple[DataFrame, GuardStats]:
     """Shared scaffolding for the two pre-flight disk-budget guards —
     mode/budget resolution, the worst-case probe skip, the per-bucket
@@ -469,29 +454,26 @@ def _volume_guard(
     to a 1-row fetch — allowlisted in tests/test_collect_allowlist.py)
     at DataFrame-BUILD time, so a guarded builder is not plan-only
     (anything that builds plans, e.g. the plan tests, executes these
-    probes). ``persist_on_probe=True`` persists the bucketed input
-    (MEMORY_AND_DISK) before probing so the probe pass materializes
-    the same computation the real run then reuses — the guarded
-    pipeline is computed ONCE, not twice; on the fail branch the
-    persist is released before raising. On the pass/sample branches
-    the cache deliberately OUTLIVES the query: later builds of the
-    same plan and sibling queries sharing the frame (e.g. the hashed
-    minhash query after the sampled one) resolve to it via Spark's
-    CacheManager, which is where the measured −35% family win at sf3
-    comes from; the footprint is the linear bucketed input (never
-    pairs) and MEMORY_AND_DISK evicts LRU under pressure. Callers
-    wanting a strictly transient cache can ``unpersist()`` the
-    returned frame after their sink, or release every live guard
-    cache with :func:`release_guard_caches`.
+    probes). The probe reads a ``localCheckpoint`` of the bucketed
+    input, and the probe's own job materializes that pin: the
+    upstream is computed ONCE, and the pass branch returns the pin
+    (the sample branch returns the pin's member filter), so the real
+    run reads it instead of recomputing. ``localCheckpoint(eager=
+    False)`` adds no job of its own — the probe pass is the one that
+    fills it. The pin lives as long as the returned frame: Spark's
+    ContextCleaner frees its blocks once the frame is dropped (on the
+    fail branch, as soon as the raise unwinds).
 
-    No verdict is kept across builds: every rebuild of a plan runs
-    its probe again (a scheduled job builds each plan once per
-    process).
+    No verdict and no cache is kept across builds: every rebuild of a
+    plan runs its probe again (a scheduled job builds each plan once
+    per process).
 
     Returns ``(frame, GuardStats)`` — the public wrappers unwrap to
     the frame alone unless called with ``with_stats=True``. The probe
     also measures the MAX bucket count (same aggregation job), which
-    ``GuardStats.max_bucket`` surfaces for adaptive plan choices."""
+    ``GuardStats.max_bucket`` surfaces for adaptive plan choices; a
+    non-None ``certified_max_bucket`` also tells the caller the frame
+    it got back is a pin."""
     spark = bucketed.sparkSession
     mode = _pair_guard_mode(spark, mode)
     if mode == "off":
@@ -502,13 +484,9 @@ def _volume_guard(
             mode=mode, skipped="worst_case",
             projected=worst_case_units * unit_bytes, budget=budget,
         )
-    if persist_on_probe:
-        from pyspark import StorageLevel
-
-        bucketed = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
-        _GUARD_PERSISTS[id(bucketed)] = bucketed
+    pinned = bucketed.localCheckpoint(eager=False)
     row = (
-        bucketed.groupBy(*bucket_cols)
+        pinned.groupBy(*bucket_cols)
         .agg(F.count(F.lit(1)).alias("__c"))
         .agg(probe_expr.alias("__units"), F.max("__c").alias("__maxc"))
         .first()
@@ -521,11 +499,8 @@ def _volume_guard(
         projected=projected, budget=budget,
     )
     if projected <= budget:
-        return bucketed, stats
+        return pinned, stats
     if mode == "fail":
-        if persist_on_probe:
-            bucketed.unpersist()
-            _GUARD_PERSISTS.pop(id(bucketed), None)
         raise PairVolumeExceeded(
             fail_msg(units, projected, budget), units, projected, budget
         )
@@ -542,7 +517,7 @@ def _volume_guard(
     stats.sampled = True
     stats.keep = keep
     return (
-        bucketed.filter(hexint(F.col(id_col).cast("string")) % keep == 0),
+        pinned.filter(hexint(F.col(id_col).cast("string")) % keep == 0),
         stats,
     )
 
@@ -574,7 +549,6 @@ def pair_volume_guard(
     worst_case_pairs: int | None = None,
     budget_bytes: int | None = None,
     mode: str | None = None,
-    persist_on_probe: bool = False,
     with_stats: bool = False,
 ) -> DataFrame:
     """Pre-flight output-volume gate for bucketed self-pairing ops.
@@ -588,7 +562,8 @@ def pair_volume_guard(
     sum), so running it FIRST costs one cheap pass and makes the
     decision exact:
 
-    - projected bytes ≤ budget → return the input unchanged (no-op);
+    - projected bytes ≤ budget → return the input, pinned by the
+      probe (same rows, computed once);
     - mode='fail' (default) → raise :class:`PairVolumeExceeded` with
       the measured projection in the message;
     - mode='sample' → row-budget doctrine: deterministically keep
@@ -608,8 +583,8 @@ def pair_volume_guard(
     correctness gates and the sf0.1 bench pay nothing. ``bytes_per_pair``
     defaults to 12 — the measured sf100 shuffle write was ~9.7 B/pair
     (50 GB / 5.14 B pairs) plus dedup-stage headroom. See
-    :func:`_volume_guard` for the eager-build / persist_on_probe
-    semantics shared with :func:`replicated_volume_guard`."""
+    :func:`_volume_guard` for the eager-build semantics and the pin a
+    probing guard returns, shared with :func:`replicated_volume_guard`."""
     def msg(pairs: int, projected: int, budget: int) -> str:
         return (
             f"pair_volume_guard: projected {pairs:,} candidate-pair rows "
@@ -640,7 +615,6 @@ def pair_volume_guard(
         worst_case_units=worst_case_pairs,
         budget_bytes=budget_bytes,
         mode=mode,
-        persist_on_probe=persist_on_probe,
     )
     return out if with_stats else out[0]
 
@@ -655,7 +629,6 @@ def replicated_volume_guard(
     worst_case_rows: int | None = None,
     budget_bytes: int | None = None,
     mode: str | None = None,
-    persist_on_probe: bool = False,
     with_stats: bool = False,
 ) -> DataFrame:
     """Pre-flight disk gate for CHUNK-SPLIT self-joins (simhash's
@@ -694,8 +667,8 @@ def replicated_volume_guard(
     member's replication factor shrinks with its bucket, making 1/keep
     conservative), so the sample branch uses keep = den, not
     ceil(sqrt(den)) as the quadratic pair guard does. See
-    :func:`_volume_guard` for the eager-build / persist_on_probe
-    semantics."""
+    :func:`_volume_guard` for the eager-build semantics and the pin a
+    probing guard returns."""
     def msg(rows: int, projected: int, budget: int) -> str:
         return (
             f"replicated_volume_guard: projected {rows:,} replicated "
@@ -724,32 +697,13 @@ def replicated_volume_guard(
         worst_case_units=worst_case_rows,
         budget_bytes=budget_bytes,
         mode=mode,
-        persist_on_probe=persist_on_probe,
     )
     return out if with_stats else out[0]
 
 
-def _pin_unless_cached(df: DataFrame) -> DataFrame:
-    """localCheckpoint ``df`` unless it is already persisted — the r15
-    pin in front of the chunk-split pair join. The split's two sides
-    diverge at their explodes, so exchange reuse cannot unify them,
-    and when the planner broadcasts one side the measured sink plan
-    carried the caller's whole upstream pipeline (shingle→minhash→band,
-    tokenize→per-bit agg→fingerprint→band) TWICE. The pin is linear in
-    the bucketed rows at any scale. An input a guard already persisted
-    (persist_on_probe — CacheManager matches the plan even on a
-    sibling query's fresh build) is NOT re-pinned: both sides read the
-    InMemoryRelation directly, which already dedups the upstream
-    compute and keeps the round-13 sibling-cache-hit plan shape
-    (test_sampled_cache_feeds_sibling_plan) intact. Jaccard does not
-    pin (see :func:`jaccard_pairs`)."""
-    sl = df.storageLevel
-    if sl.useMemory or sl.useDisk:
-        return df
-    return df.localCheckpoint(eager=True)
-
-
-def lsh_candidates(band_keys: DataFrame, id_col: str) -> DataFrame:
+def lsh_candidates(
+    band_keys: DataFrame, id_col: str, pinned: bool = False
+) -> DataFrame:
     """Distinct candidate pairs sharing any band key. Output
     (a_id, b_id), a_id < b_id.
 
@@ -763,11 +717,18 @@ def lsh_candidates(band_keys: DataFrame, id_col: str) -> DataFrame:
     sub-split, per-task pair generation is ≤ ~chunk_target² regardless
     of bucket size; pairs sharing several bands are deduplicated. The
     oracle gates (`minhash_lsh_candidates(_hashed)`,
-    `lsh_dedup_recall`) verify the pair set. The band frame is pinned
-    first (:func:`_pin_unless_cached`)."""
-    pairs = bucket_pairs(
-        _pin_unless_cached(band_keys), ["band", "band_key"], id_col, []
-    )
+    `lsh_dedup_recall`) verify the pair set.
+
+    The band frame is pinned first (r15): the split's two sides
+    diverge at their explodes, so exchange reuse cannot unify them,
+    and when the planner broadcasts one side the measured sink plan
+    carried the whole shingle→minhash→band upstream TWICE. The pin is
+    linear in the band rows at any scale. ``pinned=True`` says the
+    frame already is one (a volume guard that probed and passed
+    returns its pin, see :func:`_volume_guard`), and skips it."""
+    if not pinned:
+        band_keys = band_keys.localCheckpoint(eager=True)
+    pairs = bucket_pairs(band_keys, ["band", "band_key"], id_col, [])
     return pairs.select("a_id", "b_id").dropDuplicates(["a_id", "b_id"])
 
 
@@ -1085,7 +1046,7 @@ def simhash_near_pairs(
     # quadratic pair probe overstates it by the chunk factor and
     # (measured, round 12) wrongly benched this query off at sf3,
     # which the prior round completed in ~100 s. Below budget the
-    # guard is a structural no-op; when the caller supplies n_docs the
+    # guard passes the rows through; when the caller supplies n_docs the
     # everyone-in-one-bucket worst case — c = n per (band, value),
     # rows = n_bands·n·(ceil(n/T)+1) — lets small corpora skip even
     # the probe.
@@ -1100,15 +1061,15 @@ def simhash_near_pairs(
         id_col,
         chunk_target=chunk_target,
         worst_case_rows=worst_rows,
-        # when the probe executes (it doesn't below ~sf3: the worst-case
-        # hint fits the budget), the banded frame is persisted so the
-        # probe pass and the real run share one fingerprint→banding
-        # computation (round-12 ADVICE; see _volume_guard's eager-build
-        # note — guarded builders launch the probe job at build time)
-        persist_on_probe=True,
         mode=guard_mode,
         with_stats=True,
     )
+    # pin the banded frame in front of the chunk-split join (r15, same
+    # reason as lsh_candidates: the split's two sides would otherwise
+    # each carry the tokenize→per-bit agg→fingerprint→band upstream),
+    # unless the guard's probe passed and returned its own pin
+    if gstats.certified_max_bucket is None:
+        banded = banded.localCheckpoint(eager=True)
 
     def keep(x, y):
         xor = x("simhash").bitwiseXOR(y("simhash"))
@@ -1122,7 +1083,7 @@ def simhash_near_pairs(
         return near
 
     pairs = bucket_pairs(
-        _pin_unless_cached(banded),
+        banded,
         ["band", "band_key"],
         id_col,
         ["simhash"],

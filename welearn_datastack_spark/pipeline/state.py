@@ -60,8 +60,3 @@ def make_transitions(ids: DataFrame, id_col: str, step: str, base_order: int) ->
     return ids.select(F.col(id_col).alias("document_id")).withColumn(
         "operation_order", order
     ).withColumn("title", F.lit(step))
-
-
-def append_transitions(log: DataFrame, transitions: DataFrame) -> DataFrame:
-    """Append-only union (the log is immutable; R2)."""
-    return log.unionByName(transitions, allowMissingColumns=True)

@@ -324,13 +324,10 @@ def _register_minhash(
             sigs = minhash_signatures(sh, "doc_id", n_hashes=8)
             bands = lsh_band_keys(sigs, "doc_id", rows_per_band=2)
         if sampled:
-            guard = dict(
-                budget_bytes=_SAMPLED_PAIR_BUDGET_BYTES, mode="sample",
-                # the probe ALWAYS executes here (600 B budget) — persist
-                # the band frame across probe + real run so the minhash
-                # pipeline is computed once, not twice (round-12 ADVICE)
-                persist_on_probe=True,
-            )
+            # the probe ALWAYS executes here (600 B budget); it pins
+            # the band frame it measures, so the minhash pipeline is
+            # computed once, not twice (round-12 ADVICE)
+            guard = dict(budget_bytes=_SAMPLED_PAIR_BUDGET_BYTES, mode="sample")
         else:
             guard = dict(
                 worst_case_pairs=_minhash_worst_case_pairs(docs, n_bands=4),
@@ -339,8 +336,14 @@ def _register_minhash(
                 # parity (the sampled doctrine lives in the _sampled row)
                 mode="fail",
             )
-        bands = pair_volume_guard(bands, ["band", "band_key"], "doc_id", **guard)
-        return lsh_candidates(bands, "doc_id")
+        bands, gstats = pair_volume_guard(
+            bands, ["band", "band_key"], "doc_id", with_stats=True, **guard
+        )
+        # a probe that passed returned its pin; any other branch leaves
+        # lsh_candidates to pin
+        return lsh_candidates(
+            bands, "doc_id", pinned=gstats.certified_max_bucket is not None
+        )
 
     build.__name__ = f"{name}_q"
     register(name, sql, doc=doc)(build)

@@ -1385,7 +1385,6 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         worst_case_rows=n * (-(-n // 256) + 1),
         # pinned: the oracle does not model member sampling
         mode="fail",
-        persist_on_probe=True,
         with_stats=True,
     )
     pairs = bucket_pairs(

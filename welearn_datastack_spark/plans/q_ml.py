@@ -895,12 +895,10 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         bytes_per_row=320,
         worst_case_rows=n * (-(-n // 256) + 1),
         # pinned: this query's oracle does not model member sampling
-        # (round-13 ADVICE), and when the probe DOES execute (worst-case
-        # hint missed the budget) the persisted frame is the linear mem
-        # frame — probe and real run then share one quantizer/assignment
-        # computation instead of computing it twice
+        # (round-13 ADVICE); when the probe DOES execute (worst-case
+        # hint missed the budget) it pins the linear mem frame, so
+        # probe and real run share one quantizer/assignment computation
         mode="fail",
-        persist_on_probe=True,
         with_stats=True,
     )
     pairs = bucket_pairs(

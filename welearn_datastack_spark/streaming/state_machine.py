@@ -326,22 +326,26 @@ def stream_ingest_probe(
     Delivery semantics, precisely: exactly-once applies to SOURCE
     FILE TRACKING (the checkpoint never feeds a consumed file to a
     second batch); the foreachBatch body itself is at-least-once, so
-    both side effects are built to converge under replay. The
-    decision write is idempotent per batch — a deterministic
+    its side effects see replays. The decision write is idempotent per batch — a deterministic
     ``batch_id=N`` directory overwrite, so a crash between the write
     and the checkpoint commit re-writes the same directory instead of
-    appending duplicate rows. The state transition is self-healing:
-    a replayed batch whose admissions already committed re-probes as
-    exact_dup (of itself, now in state), so it admits nothing twice
-    and the state store never double-appends. The one replay-visible
-    artifact is that such a batch's re-written decisions record
-    exact_dup-of-self instead of the original 'new' — the admission
-    is still attributable (exact_dup_of points at the admitted row),
-    and state remains exactly correct. Decisions are written BEFORE
-    the state transition, so in the no-failure path each document's
-    decision reflects the state at its own arrival. An empty batch is
-    detected only after its (data-free) decision write, which is then
-    removed; a crash between that write and the removal leaves a
+    appending duplicate rows. The state transition is NOT
+    exactly-once under replay. A replayed batch whose admissions
+    already committed re-probes as exact_dup (of itself, now in
+    state), so it admits nothing twice, but its re-written decisions
+    record exact_dup-of-self instead of the original 'new'. Known
+    hole: the two state appends commit separately, so a crash after
+    the ``doc_hashes`` append and before the ``band_store`` append
+    stores the batch's hashes without its bands; the replay decides
+    every document exact_dup of itself and appends nothing, so those
+    bands are lost for good and a later near-duplicate of such a
+    document probes as new. ROADMAP direction 2 (epoch-keyed appends,
+    probed strictly before their own epoch) closes it.
+
+    Decisions are written BEFORE the state transition, so in the
+    no-failure path each document's decision reflects the state at its
+    own arrival. An empty batch is detected only after its (data-free)
+    decision write, which is then removed; a crash between that write and the removal leaves a
     transient empty ``batch_id=N`` directory in the decision log.
     Readers see no rows from it, and because the checkpoint has not
     committed the batch, the replay writes and removes it again.
