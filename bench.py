@@ -339,7 +339,8 @@ def main() -> None:
     # polluted two rounds running, with untouched queries drifting
     # ±20-85% between rounds on the shared sandbox): 5 executions per
     # query. Run 0 pays one-time whole-stage-codegen compile + JIT for
-    # that plan shape (~0.5-1.7s, measured) and feeds only cold_total;
+    # that plan shape (~0.5-1.7s, measured) and feeds only the cold
+    # record (queries_cold, summed to cold_total_sec);
     # the 4 warm runs yield BOTH min (the steady-state floor a
     # 1000-executor job repeats — the headline stat, comparable to
     # prior rounds) and median (robust to one slow outlier), plus a
@@ -391,7 +392,7 @@ def main() -> None:
     errors: dict[str, str] = {}
     guard_exits: dict[str, str] = {}
     failed: set[str] = set()
-    cold_total = 0.0
+    cold_by_query: dict[str, float] = {}
     load_before = os.getloadavg()[0]
     for name in headline:
         if REGISTRY.get(name) is None:
@@ -447,7 +448,10 @@ def main() -> None:
             "queries_storage": storage_by_query,
             "shuffle_read_mb": rd,
             "shuffle_write_mb": wr,
-            "cold_total_sec": round(cold_total, 3),
+            "cold_total_sec": round(sum(cold_by_query.values()), 3),
+            # pass-0 seconds per query: the cold time of each plan
+            # shape, which the pass-0 order makes position-dependent
+            "queries_cold": {k: round(v, 3) for k, v in cold_by_query.items()},
             "loadavg_1m": [round(load_before, 2), round(os.getloadavg()[0], 2)],
             "git_rev": git_rev,
             "calibration": {
@@ -485,7 +489,7 @@ def main() -> None:
                 spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 dt = time.time() - t0
                 if run_i == 0:
-                    cold_total += dt
+                    cold_by_query[name] = dt
                 else:
                     warm_by_query.setdefault(name, []).append(dt)
                 positions.setdefault(name, []).append(pos)

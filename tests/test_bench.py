@@ -197,6 +197,11 @@ def test_bench_final_line_contract(sf_dir, tmp_path):
     assert artifact.exists()
     detail = json.loads(artifact.read_text())
     assert detail["queries"].keys() == {"tpch_q6_forecast_revenue", "latest_event"}
+    # each query's pass-0 time, summing to the cold total
+    assert detail["queries_cold"].keys() == detail["queries"].keys()
+    assert sum(detail["queries_cold"].values()) == pytest.approx(
+        detail["cold_total_sec"], abs=0.001 * len(detail["queries_cold"])
+    )
     assert {"pre", "post"} <= detail["calibration"].keys()
     assert "quiet_gate" not in detail
     assert runs_digest() == before

@@ -163,8 +163,6 @@ KNOBS = {
     "SPARK_GRAFT_BENCH_RUNS": "A/B recipe and scale rehearsals: pass count",
     "SPARK_GRAFT_BENCH_ARTIFACT": "A/B recipe and tests: keep each run's "
     "artifact out of the tracked bench_runs/ series",
-    "spark.welearn.pairGuard.mode": "the pair guard's error message names "
-    "mode=sample as the remedy for a corpus over budget",
     "spark.welearn.pairGuard.budget": "the pair guard's error message names "
     "it as the remedy; tests set tiny budgets to drive each branch",
 }

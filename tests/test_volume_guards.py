@@ -1,10 +1,11 @@
 """Pre-flight volume guards of the pair-materializing operators: the
 pair guard's fail, sample and pass branches, its probe-skip fast path
-and mode/budget resolution; the guarded minhash, simhash, jaccard and
-semantic-dedup paths; adaptive chunking from the probe's max-bucket
-certificate; guard-mode pins for oracle parity; a probe on every
-build (no verdict outlives its build); and the pin a probe fills,
-which lives no longer than the frame it returns."""
+and budget resolution; the guarded minhash, simhash, jaccard and
+semantic-dedup paths, which raise over budget and whose messages name
+only remedies that work; adaptive chunking from the probe's max-bucket
+certificate; a probe on every build (no verdict outlives its build);
+and the pin a probe fills, which lives no longer than the frame it
+returns."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from welearn_datastack_spark.operators.dedup import (
     PairVolumeExceeded,
     hexint,
+    bucket_pairs,
     jaccard_pairs,
     pair_volume_guard,
     replicated_volume_guard,
@@ -57,43 +59,49 @@ def _chunk_split_markers(plan: str) -> bool:
 
 def test_pair_guard_passthrough_under_budget(spark):
     """Projected volume within budget → the input comes back unchanged
-    (same rows, no sampling filter)."""
+    (same rows, no sampling filter), with the probe's max bucket."""
     df = _mega_bucket(spark, n=10)  # 45 pairs * 12 B well under 1 MB
-    out = pair_volume_guard(
-        df, ["band", "band_key"], "doc_id", budget_bytes=1 << 20, mode="fail"
+    out, max_bucket = pair_volume_guard(
+        df, ["band", "band_key"], "doc_id", budget_bytes=1 << 20
     )
     assert out.count() == 10
+    assert max_bucket == 10
 
 
 def test_pair_guard_fail_branch_measured_projection(spark):
-    """Over budget in fail mode → PairVolumeExceeded BEFORE any pair
-    row is built, carrying the exact Σ C(c,2) projection."""
+    """Over budget → PairVolumeExceeded BEFORE any pair row is built,
+    carrying the exact Σ C(c,2) projection."""
     df = _mega_bucket(spark, n=100)  # C(100,2) = 4950 pairs
     with pytest.raises(PairVolumeExceeded) as ei:
         pair_volume_guard(
             df, ["band", "band_key"], "doc_id",
-            bytes_per_pair=12, budget_bytes=1000, mode="fail",
+            bytes_per_pair=12, budget_bytes=1000,
         )
     e = ei.value
     assert e.projected_pairs == 4950
     assert e.projected_bytes == 4950 * 12
     assert e.budget_bytes == 1000
     # the message IS the verdict the bench artifact records — it must
-    # carry the numbers and the remediation paths
+    # carry the numbers and only remediation paths that work
     assert "4,950" in str(e)
-    assert "sample" in str(e) and "decision-only" in str(e)
+    assert "sample=True" in str(e) and "decision-only" in str(e)
+    assert "pairGuard.budget" in str(e)
+    assert "pairGuard.mode" not in str(e)
 
 
 def test_pair_guard_sample_branch_bounds_mega_bucket(spark):
-    """Over budget in sample mode → deterministic MEMBER sampling at
+    """Over budget with sample=True → deterministic MEMBER sampling at
     1/ceil(sqrt(den)) — the one construction that bounds a single
-    mega-bucket (bucket-level sampling could not)."""
+    mega-bucket (bucket-level sampling could not). A sample returns no
+    max-bucket certificate: the probe measured the PRE-sample buckets,
+    so a pair join over the sample must chunk-split."""
     df = _mega_bucket(spark, n=100)
     budget = 1000
-    out = pair_volume_guard(
+    out, max_bucket = pair_volume_guard(
         df, ["band", "band_key"], "doc_id",
-        bytes_per_pair=12, budget_bytes=budget, mode="sample",
+        bytes_per_pair=12, budget_bytes=budget, sample=True,
     )
+    assert max_bucket is None
     den = math.ceil(4950 * 12 / budget)  # 60
     keep = math.isqrt(den - 1) + 1  # ceil(sqrt(60)) = 8
     kept = sorted(r["doc_id"] for r in out.collect())
@@ -107,9 +115,9 @@ def test_pair_guard_sample_branch_bounds_mega_bucket(spark):
     assert kept == sorted(expected)
     assert 0 < len(kept) < 100
     # deterministic: same call → same sample
-    out2 = pair_volume_guard(
+    out2, _ = pair_volume_guard(
         df, ["band", "band_key"], "doc_id",
-        bytes_per_pair=12, budget_bytes=budget, mode="sample",
+        bytes_per_pair=12, budget_bytes=budget, sample=True,
     )
     assert sorted(r["doc_id"] for r in out2.collect()) == kept
 
@@ -123,33 +131,25 @@ def test_pair_guard_worst_case_hint_skips_probe_entirely(spark):
         F.lit(0).alias("band"),
         F.assert_true(F.lit(False)).alias("band_key"),  # evaluating = boom
     )
-    out = pair_volume_guard(
+    out, max_bucket = pair_volume_guard(
         df, ["band", "band_key"], "doc_id",
         worst_case_pairs=6, bytes_per_pair=12, budget_bytes=1 << 20,
     )
     assert out is df  # structurally untouched, no job ran
+    assert max_bucket is None
 
 
-def test_pair_guard_mode_off_and_conf_resolution(spark):
-    """mode='off' skips everything; session conf supplies mode and a
-    size-string budget when the call site passes neither."""
+def test_pair_guard_budget_from_session_conf(spark):
+    """The session conf supplies a size-string budget when the call
+    site passes none."""
     df = _mega_bucket(spark, n=100)
-    out = pair_volume_guard(
-        df, ["band", "band_key"], "doc_id", budget_bytes=1, mode="off"
-    )
-    assert out is df
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
     spark.conf.set("spark.welearn.pairGuard.budget", "1k")  # 1024 B
     try:
-        out = pair_volume_guard(
-            df, ["band", "band_key"], "doc_id", bytes_per_pair=12
-        )
-        assert 0 < out.count() < 100  # sampled, not raised
+        with pytest.raises(PairVolumeExceeded) as ei:
+            pair_volume_guard(df, ["band", "band_key"], "doc_id", bytes_per_pair=12)
     finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
         spark.conf.unset("spark.welearn.pairGuard.budget")
-    with pytest.raises(ValueError, match="unknown mode"):
-        pair_volume_guard(df, ["band", "band_key"], "doc_id", mode="explode")
+    assert ei.value.budget_bytes == 1024
 
 
 def test_pair_guard_budget_measures_spark_local_dirs(spark, monkeypatch, tmp_path):
@@ -298,36 +298,10 @@ def test_jaccard_guard_fail_branch(spark):
         spark.conf.unset("spark.welearn.pairGuard.budget")
 
 
-def test_jaccard_guard_sample_branch_bounds_and_subsets(spark):
-    sh = word_shingles(_docs(spark), "doc_id", "text", n=3)
-    full = {
-        (r["a_id"], r["b_id"])
-        for r in jaccard_pairs(sh, "doc_id", threshold=0.0).collect()
-    }
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
-    spark.conf.set("spark.welearn.pairGuard.budget", "2k")
-    try:
-        sampled = {
-            (r["a_id"], r["b_id"])
-            for r in jaccard_pairs(sh, "doc_id", threshold=0.0).collect()
-        }
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-    assert sampled and sampled < full  # engaged, never invents a pair
-    # member sampling keeps whole documents: jaccard values of kept
-    # pairs are the full run's (sizes computed per doc, not per sample)
-    full_j = {
-        (r["a_id"], r["b_id"]): r["jaccard"]
-        for r in jaccard_pairs(sh, "doc_id", threshold=0.0).collect()
-    }
-    assert all(full_j[p] == 1.0 for p in sampled)
-
-
 def test_jaccard_passthrough_and_chunk_invariance(spark):
-    """Under budget the guard is a no-op (same pairs as mode 'off'),
-    and the chunk sub-split never changes the pair set — the rewrite
-    off the collect_list idiom is output-invariant."""
+    """Under budget the guard passes every row, and the chunk
+    sub-split never changes the pair set — the rewrite off the
+    collect_list idiom is output-invariant."""
     docs = spark.createDataFrame(
         [(i, f"w{i % 5} common tail tokens here {i % 3}") for i in range(30)],
         ["doc_id", "text"],
@@ -340,9 +314,8 @@ def test_jaccard_passthrough_and_chunk_invariance(spark):
             for r in jaccard_pairs(sh, "doc_id", threshold=0.05, **kw).collect()
         )
 
-    base = pairs(guard_mode="off")
+    base = pairs()
     assert base
-    assert pairs() == base
     assert pairs(chunk_target=2) == base  # forced multi-chunk splits
     assert all(a < b for a, b, _ in base)
 
@@ -362,6 +335,8 @@ def test_semantic_dedup_guard_engages_on_tiny_budget(spark, sf_dir):
                 "noop"
             ).mode("overwrite").save()
         assert "replicated chunk-join input rows" in str(ei.value)
+        assert "pairGuard.budget" in str(ei.value)
+        assert "pairGuard.mode" not in str(ei.value)
     finally:
         spark.conf.unset("spark.welearn.pairGuard.budget")
 
@@ -389,72 +364,39 @@ def test_jaccard_adaptive_takes_direct_plan_when_buckets_small(spark):
     splan = split._jdf.queryExecution().executedPlan().toString()
     assert _chunk_split_markers(splan)
 
-    # unguarded calls have no certificate → always the safe sub-split
-    unguarded = jaccard_pairs(sh, "doc_id", threshold=0.05, guard_mode="off")
-    uplan = unguarded._jdf.queryExecution().executedPlan().toString()
-    assert _chunk_split_markers(uplan)
-
     key = lambda df: sorted(  # noqa: E731
         (r["a_id"], r["b_id"], r["jaccard"]) for r in df.collect()
     )
-    assert key(direct) == key(split) == key(unguarded)
+    assert key(direct) == key(split)
 
 
 def test_jaccard_sample_branch_never_takes_direct_plan(spark):
-    """The max-bucket certificate describes the PRE-sample frame, so
-    the sample branch must fall back to the chunk-split."""
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta") for i in range(24)],
-        ["doc_id", "text"],
+    """The max-bucket certificate describes the PRE-sample frame, so a
+    member-sampled shingle frame gets none and its pair join must fall
+    back to the chunk-split — even though every sampled bucket is far
+    under ``chunk_target``."""
+    sh = word_shingles(_docs(spark), "doc_id", "text", n=3)
+    sampled, max_bucket = pair_volume_guard(
+        sh, ["shingle"], "doc_id",
+        bytes_per_pair=12, budget_bytes=2048, sample=True,
     )
-    sh = word_shingles(docs, "doc_id", "text", n=3)
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
-    spark.conf.set("spark.welearn.pairGuard.budget", "2k")
-    try:
-        out = jaccard_pairs(sh, "doc_id", threshold=0.0)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert _chunk_split_markers(plan)
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
-        spark.conf.unset("spark.welearn.pairGuard.budget")
+    assert max_bucket is None
+    assert 0 < sampled.count() < sh.count()  # the sample engaged
+    out = bucket_pairs(sampled, ["shingle"], "doc_id", [], max_bucket=max_bucket)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert _chunk_split_markers(plan)
 
 
-# --- guard-mode pinning ---------------------------------------------
+# --- registered queries over budget --------------------------------
 
 
-def test_guard_mode_pin_overrides_session_sample_conf(spark):
-    """A registered non-sampled query's oracle does not model member
-    sampling — guard_mode='fail' must raise even when the session conf
-    asks for sample mode globally."""
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta") for i in range(24)],
-        ["doc_id", "text"],
-    )
-    sh = word_shingles(docs, "doc_id", "text", n=3)
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
-    spark.conf.set("spark.welearn.pairGuard.budget", "100")
-    try:
-        with pytest.raises(PairVolumeExceeded) as ei:
-            jaccard_pairs(sh, "doc_id", threshold=0.0, guard_mode="fail")
-        assert "oracle" in str(ei.value)  # the parity note ships in the msg
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-
-
-# --- registered-query wiring pins: the mode='fail' pin lives in the
-# QUERY registrations (q_dedup/q_ml), not just the operator — these
-# drive the registry builds under a hostile session conf. -------------
-
-
-def test_registered_minhash_queries_ignore_session_sample_conf(spark, sf_dir):
+def test_registered_minhash_queries_fail_over_budget(spark, sf_dir):
     """minhash_lsh_candidates(_hashed) gate against the FULL candidate
-    set — under a global sample conf and an impossible budget they must
-    refuse (pinned mode='fail'), never silently emit a subset."""
+    set — under an impossible budget they refuse, never emit a
+    subset."""
     from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
 
     _load_groups()
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
     spark.conf.set("spark.welearn.pairGuard.budget", "10")
     try:
         for name in ("minhash_lsh_candidates", "minhash_lsh_candidates_hashed"):
@@ -463,39 +405,7 @@ def test_registered_minhash_queries_ignore_session_sample_conf(spark, sf_dir):
                     "overwrite"
                 ).save()
     finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
         spark.conf.unset("spark.welearn.pairGuard.budget")
-
-
-def test_registered_semantic_dedup_ignores_session_sample_conf(spark, sf_dir):
-    from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
-
-    _load_groups()
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
-    spark.conf.set("spark.welearn.pairGuard.budget", "10")
-    try:
-        with pytest.raises(PairVolumeExceeded):
-            REGISTRY["semantic_dedup_flags"].build(spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-
-
-def test_sampled_variant_still_samples_under_its_own_mode(spark, sf_dir):
-    """The sanctioned sample path (minhash_lsh_candidates_sampled pins
-    mode='sample' itself) keeps working regardless of session conf —
-    the fail pins above must not have leaked into it."""
-    from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
-
-    _load_groups()
-    spark.conf.set("spark.welearn.pairGuard.mode", "fail")  # hostile the other way
-    try:
-        n = REGISTRY["minhash_lsh_candidates_sampled"].build(spark, sf_dir).count()
-        assert n >= 0  # built and ran; its 600 B budget guarantees sampling engaged
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
 
 
 # --- every build measures ------------------------------------------
@@ -530,7 +440,7 @@ def test_rewritten_input_gets_fresh_guard_verdict(spark, tmp_path):
     p = str(tmp_path / "docs.parquet")
     pq.write_table(pa.table({"doc_id": [1, 2], "bk": ["x", "y"]}), p)
     budget = 24 * 10  # fits the 2-row corpus (≤1 pair), not the big one
-    out = pair_volume_guard(
+    out, _ = pair_volume_guard(
         spark.read.parquet(p), ["bk"], "doc_id", budget_bytes=budget
     )
     assert out.count() == 2
@@ -573,7 +483,10 @@ def test_probe_pins_and_fail_branch_frees_pin(spark):
         F.lit("k").alias("bk"),
     )
     # pass: the probe ran (no worst-case hint) and filled the pin
-    out = replicated_volume_guard(df, ["b", "bk"], "doc_id", budget_bytes=1 << 30)
+    out, max_bucket = replicated_volume_guard(
+        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30
+    )
+    assert max_bucket == 50  # a certificate: the frame is the pin
     assert evals.value == 50
     assert out.count() == 50
     assert evals.value == 50  # the count read the pin

@@ -129,7 +129,6 @@ def jaccard_pairs(
     threshold: float,
     with_counts: bool = False,
     chunk_target: int = 256,
-    guard_mode: str | None = None,
 ) -> DataFrame:
     """All document pairs sharing ≥1 shingle, with Jaccard similarity
     ≥ threshold. Output (a_id, b_id, jaccard), a_id < b_id.
@@ -167,17 +166,14 @@ def jaccard_pairs(
     row-budget-sampled to ≤ _JACCARD_DOC_BUDGET documents
     (plans/q_dedup.py), which bounds the probe's own cost at roughly
     sf0.1 forever — that, not a worst-case formula, is their skip
-    argument.
-    ``guard_mode`` pins the guard's mode regardless of the session
-    conf — registered queries pass 'fail' because their DuckDB oracles
-    do not model member sampling (a global mode=sample would silently
-    break their hash parity; round-13 ADVICE); 'off' skips the probe.
+    argument. Over budget the guard raises: the exact pair set or a
+    measured refusal, never a sample (the registered queries' DuckDB
+    oracles model the full pair set).
 
     ADAPTIVE CHUNKING (round 14): the probe measures every bucket's
     count anyway, so its ``max_bucket`` is a free certificate that
     :func:`bucket_pairs` turns into the un-split join when no shingle
-    bucket exceeds ``chunk_target``. A skipped probe or the sample
-    branch leaves no certificate, and the pair join chunk-splits.
+    bucket exceeds ``chunk_target``.
 
     The guard's probe pins the pre-window shingle frame as it
     measures it (:func:`_volume_guard`), so the pair join reads that
@@ -186,16 +182,12 @@ def jaccard_pairs(
     subtrees run concurrently on idle cores (control 1.15×)."""
     # guard BEFORE the size window (bucket counts don't need sizes, so
     # the probe plan is the bare shingle pipeline — measured ~0.55 s vs
-    # ~1.1 s for the window-carrying plan at sf0.1; the sample branch
-    # keeps whole documents either way, so per-doc sizes computed
-    # after the filter are the kept docs' true sizes)
-    shingles, gstats = pair_volume_guard(
+    # ~1.1 s for the window-carrying plan at sf0.1)
+    shingles, max_bucket = pair_volume_guard(
         shingles,
         ["shingle"],
         id_col,
         bytes_per_pair=JACCARD_GUARD_BYTES_PER_PAIR,
-        mode=guard_mode,
-        with_stats=True,
     )
     sized = shingles.withColumn(
         "__sz", F.count(F.lit(1)).over(Window.partitionBy(id_col))
@@ -205,7 +197,7 @@ def jaccard_pairs(
         ["shingle"],
         id_col,
         ["__sz"],
-        max_bucket=gstats.certified_max_bucket,
+        max_bucket=max_bucket,
         chunk_target=chunk_target,
     )
     pairs = paired.select(
@@ -297,36 +289,21 @@ def lsh_band_keys(
     id_col: str,
     rows_per_band: int,
     long_keys: bool = False,
-    cross_engine: bool = False,
 ) -> DataFrame:
     """Group signature rows into bands; band key = md5 of the
     seed-ordered minhash values in the band (32-char string), or with
-    ``long_keys=True`` an 8-byte long — xxhash64 by default, or the
-    cross-engine :func:`hexint` with ``cross_engine=True`` (pairs
-    with ``hashed_shingles(cross_engine=True)`` so the whole
-    narrow-key pipeline stays SQL-reproducible). Either long key
-    keeps the band-bucket exchange narrow; candidate pairs depend
-    only on band-key EQUALITY, so any injective re-key yields the
-    same pair set. Output (id_col, band, band_key).
-
-    ``cross_engine`` only selects WHICH long key is used, so it is an
-    error to pass it without ``long_keys=True`` — the md5-string
-    default is already cross-engine reproducible on its own."""
-    if cross_engine and not long_keys:
-        raise ValueError(
-            "lsh_band_keys: cross_engine=True selects the hexint LONG key — "
-            "pass long_keys=True with it (md5 string keys are already "
-            "cross-engine reproducible)"
-        )
+    ``long_keys=True`` the 8-byte :func:`hexint` of the same string
+    (pairs with ``hashed_shingles(cross_engine=True)`` so the whole
+    narrow-key pipeline stays SQL-reproducible). The long key keeps
+    the band-bucket exchange narrow; candidate pairs depend only on
+    band-key EQUALITY, so any injective re-key yields the same pair
+    set. Output (id_col, band, band_key)."""
     banded = signatures.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
     ordered_mh = F.transform(
         F.array_sort(F.collect_list(F.struct("seed", "mh"))), lambda s: s["mh"].cast("string")
     )
     joined = F.concat_ws("-", ordered_mh)
-    if long_keys:
-        key = hexint(joined) if cross_engine else F.xxhash64(joined)
-    else:
-        key = F.md5(joined)
+    key = hexint(joined) if long_keys else F.md5(joined)
     return banded.groupBy(id_col, "band").agg(key.alias("band_key"))
 
 
@@ -343,18 +320,6 @@ class PairVolumeExceeded(RuntimeError):
         self.projected_pairs = projected_pairs
         self.projected_bytes = projected_bytes
         self.budget_bytes = budget_bytes
-
-
-def _pair_guard_mode(spark, mode: str | None) -> str:
-    """fail | sample | off — explicit arg, else session conf, else
-    'fail' (a diagnostic either produces the exact pair set or says
-    precisely why it will not)."""
-    if mode is None:
-        mode = spark.conf.get("spark.welearn.pairGuard.mode", "fail")
-    mode = (mode or "fail").lower()
-    if mode not in ("fail", "sample", "off"):
-        raise ValueError(f"pair_volume_guard: unknown mode {mode!r}")
-    return mode
 
 
 def _pair_guard_budget(spark, budget_bytes: int | None) -> int:
@@ -393,39 +358,6 @@ def release_guard_caches() -> int:
     return 0
 
 
-class GuardStats:
-    """What one volume-guard evaluation measured and decided — returned
-    alongside the frame with ``with_stats=True`` so callers can make
-    plan choices on the probe's evidence (e.g. :func:`bucket_pairs`
-    takes the un-split pair join when ``certified_max_bucket`` shows no
-    bucket exceeds its chunk target). ``max_bucket``/``units`` are
-    None when the probe never ran (mode='off', or the worst-case hint
-    fit the budget); ``sampled`` marks the member-sampling branch, in
-    which case ``max_bucket`` describes the PRE-sample buckets."""
-
-    __slots__ = ("mode", "skipped", "units", "max_bucket", "projected",
-                 "budget", "sampled", "keep")
-
-    def __init__(self, mode, skipped=None, units=None, max_bucket=None,
-                 projected=None, budget=None, sampled=False, keep=None):
-        self.mode = mode
-        self.skipped = skipped
-        self.units = units
-        self.max_bucket = max_bucket
-        self.projected = projected
-        self.budget = budget
-        self.sampled = sampled
-        self.keep = keep
-
-    @property
-    def certified_max_bucket(self) -> int | None:
-        """``max_bucket`` when it describes the frame the guard
-        returned — the certificate :func:`bucket_pairs` takes — else
-        None (probe skipped, or the sample branch filtered the frame
-        after measuring it)."""
-        return None if self.sampled else self.max_bucket
-
-
 def _volume_guard(
     bucketed: DataFrame,
     bucket_cols: list[str],
@@ -433,57 +365,53 @@ def _volume_guard(
     *,
     probe_expr: Column,
     unit_bytes: int,
-    keep_fn,
     fail_msg,
-    log_label: str,
     worst_case_units: int | None = None,
     budget_bytes: int | None = None,
-    mode: str | None = None,
-) -> tuple[DataFrame, GuardStats]:
+    sample_keep=None,
+) -> tuple[DataFrame, int | None]:
     """Shared scaffolding for the two pre-flight disk-budget guards —
-    mode/budget resolution, the worst-case probe skip, the per-bucket
-    count probe, and the fail/sample/off branching live HERE so the
-    two cost models (quadratic pairs vs replicated chunk rows) cannot
-    drift in their mode/budget/filter semantics (round-12 ADVICE).
-    The cost models differ only in ``probe_expr`` (an aggregate over
-    the per-bucket count column ``__c``), ``keep_fn`` (den → sampling
-    modulus), and the message.
+    budget resolution, the worst-case probe skip, the per-bucket count
+    probe and the verdict live HERE so the two cost models (quadratic
+    pairs vs replicated chunk rows) cannot drift in their budget/filter
+    semantics (round-12 ADVICE). The cost models differ only in
+    ``probe_expr`` (an aggregate over the per-bucket count column
+    ``__c``) and the message.
 
-    EAGER-BUILD NOTE: when neither the worst-case hint nor mode='off'
-    short-circuits, the probe runs a REAL Spark job (one aggregation
-    to a 1-row fetch — allowlisted in tests/test_collect_allowlist.py)
-    at DataFrame-BUILD time, so a guarded builder is not plan-only
-    (anything that builds plans, e.g. the plan tests, executes these
-    probes). The probe reads a ``localCheckpoint`` of the bucketed
-    input, and the probe's own job materializes that pin: the
-    upstream is computed ONCE, and the pass branch returns the pin
-    (the sample branch returns the pin's member filter), so the real
-    run reads it instead of recomputing. ``localCheckpoint(eager=
-    False)`` adds no job of its own — the probe pass is the one that
-    fills it. The pin lives as long as the returned frame: Spark's
-    ContextCleaner frees its blocks once the frame is dropped (on the
-    fail branch, as soon as the raise unwinds).
+    Over budget the guard raises :class:`PairVolumeExceeded` with
+    ``fail_msg``'s text — unless the caller passes ``sample_keep``
+    (den → sampling modulus), in which case it keeps the bucket members
+    with ``hexint(id) % keep == 0`` instead.
+
+    EAGER-BUILD NOTE: when the worst-case hint does not short-circuit,
+    the probe runs a REAL Spark job (one aggregation to a 1-row fetch —
+    allowlisted in tests/test_collect_allowlist.py) at DataFrame-BUILD
+    time, so a guarded builder is not plan-only (anything that builds
+    plans, e.g. the plan tests, executes these probes). The probe reads
+    a ``localCheckpoint`` of the bucketed input, and the probe's own
+    job materializes that pin: the upstream is computed ONCE, and the
+    pass branch returns the pin (the sample branch returns the pin's
+    member filter), so the real run reads it instead of recomputing.
+    ``localCheckpoint(eager=False)`` adds no job of its own — the probe
+    pass is the one that fills it. The pin lives as long as the
+    returned frame: Spark's ContextCleaner frees its blocks once the
+    frame is dropped (on the fail branch, as soon as the raise
+    unwinds).
 
     No verdict and no cache is kept across builds: every rebuild of a
     plan runs its probe again (a scheduled job builds each plan once
     per process).
 
-    Returns ``(frame, GuardStats)`` — the public wrappers unwrap to
-    the frame alone unless called with ``with_stats=True``. The probe
-    also measures the MAX bucket count (same aggregation job), which
-    ``GuardStats.max_bucket`` surfaces for adaptive plan choices; a
-    non-None ``certified_max_bucket`` also tells the caller the frame
-    it got back is a pin."""
+    Returns ``(frame, max_bucket)``. The probe also measures the MAX
+    bucket count (same aggregation job); ``max_bucket`` is that count
+    exactly when the frame is the probe's unfiltered pin — the
+    certificate :func:`bucket_pairs` takes, and the sign that the frame
+    is already pinned — and None otherwise (probe skipped, or members
+    sampled after the measurement)."""
     spark = bucketed.sparkSession
-    mode = _pair_guard_mode(spark, mode)
-    if mode == "off":
-        return bucketed, GuardStats(mode=mode, skipped="off")
     budget = _pair_guard_budget(spark, budget_bytes)
     if worst_case_units is not None and worst_case_units * unit_bytes <= budget:
-        return bucketed, GuardStats(
-            mode=mode, skipped="worst_case",
-            projected=worst_case_units * unit_bytes, budget=budget,
-        )
+        return bucketed, None
     pinned = bucketed.localCheckpoint(eager=False)
     row = (
         pinned.groupBy(*bucket_cols)
@@ -492,34 +420,24 @@ def _volume_guard(
         .first()
     )
     units = int(row["__units"] or 0)
-    max_bucket = int(row["__maxc"] or 0)
     projected = units * unit_bytes
-    stats = GuardStats(
-        mode=mode, units=units, max_bucket=max_bucket,
-        projected=projected, budget=budget,
-    )
     if projected <= budget:
-        return pinned, stats
-    if mode == "fail":
+        return pinned, int(row["__maxc"] or 0)
+    if sample_keep is None:
         raise PairVolumeExceeded(
             fail_msg(units, projected, budget), units, projected, budget
         )
-    # mode == 'sample': deterministic member sampling at 1/keep
+    # deterministic member sampling at 1/keep
     import logging
     import math
 
-    keep = keep_fn(math.ceil(projected / budget))
+    keep = sample_keep(math.ceil(projected / budget))
     logging.getLogger(__name__).warning(
-        "%s: projected %s units ≈ %.1f GB > budget %.1f GB; sampling "
-        "bucket members at 1/%d (hexint(%s) %% %d == 0)",
-        log_label, f"{units:,}", projected / 1e9, budget / 1e9, keep, id_col, keep,
+        "pair_volume_guard: projected %s units ≈ %.1f GB > budget %.1f GB; "
+        "sampling bucket members at 1/%d (hexint(%s) %% %d == 0)",
+        f"{units:,}", projected / 1e9, budget / 1e9, keep, id_col, keep,
     )
-    stats.sampled = True
-    stats.keep = keep
-    return (
-        pinned.filter(hexint(F.col(id_col).cast("string")) % keep == 0),
-        stats,
-    )
+    return pinned.filter(hexint(F.col(id_col).cast("string")) % keep == 0), None
 
 
 # default disk cost of one materialized candidate-pair row (2 longs,
@@ -548,9 +466,8 @@ def pair_volume_guard(
     bytes_per_pair: int = PAIR_GUARD_BYTES_PER_PAIR,
     worst_case_pairs: int | None = None,
     budget_bytes: int | None = None,
-    mode: str | None = None,
-    with_stats: bool = False,
-) -> DataFrame:
+    sample: bool = False,
+) -> tuple[DataFrame, int | None]:
     """Pre-flight output-volume gate for bucketed self-pairing ops.
 
     A pair-materializing diagnostic's output is Σ_buckets C(c, 2) rows
@@ -562,61 +479,59 @@ def pair_volume_guard(
     sum), so running it FIRST costs one cheap pass and makes the
     decision exact:
 
-    - projected bytes ≤ budget → return the input, pinned by the
-      probe (same rows, computed once);
-    - mode='fail' (default) → raise :class:`PairVolumeExceeded` with
-      the measured projection in the message;
-    - mode='sample' → row-budget doctrine: deterministically keep
-      bucket MEMBERS with ``hexint(id) % keep == 0`` where
+    - projected bytes ≤ budget → ``(pin, max_bucket)``: the input,
+      pinned by the probe (same rows, computed once), and the probe's
+      max-bucket certificate;
+    - over budget → raise :class:`PairVolumeExceeded` with the
+      measured projection in the message;
+    - over budget with ``sample=True`` → row-budget doctrine:
+      deterministically keep bucket MEMBERS with
+      ``hexint(id) % keep == 0`` where
       ``keep = ceil(sqrt(projected/budget))`` — pair volume scales as
       1/keep² ≤ budget/projected, which bounds even a single
       mega-bucket (bucket sampling could not: one boilerplate bucket
-      can exceed the budget alone). The keep formula and the 12 B/pair
-      default are REPLICATED as SQL literals in the sampled query's
-      DuckDB twin (plans/q_dedup._MINHASH_SAMPLED_ORACLE interpolates
-      them from the shared module constants) — change them together;
-    - mode='off' → return the input unchanged, probe skipped.
+      can exceed the budget alone). Returns ``(sampled frame, None)``:
+      the probe measured the pre-sample buckets. The keep formula
+      and the 12 B/pair default are REPLICATED as SQL literals in the
+      sampled query's DuckDB twin (plans/q_dedup._MINHASH_SAMPLED_ORACLE
+      interpolates them from the shared module constants) — change
+      them together.
 
     ``worst_case_pairs`` is a driver-side upper bound the CALLER can
     compute for free (e.g. n_bands · C(n_docs, 2)); when even the worst
-    case fits the budget the probe is skipped entirely, so small-SF
-    correctness gates and the sf0.1 bench pay nothing. ``bytes_per_pair``
-    defaults to 12 — the measured sf100 shuffle write was ~9.7 B/pair
-    (50 GB / 5.14 B pairs) plus dedup-stage headroom. See
-    :func:`_volume_guard` for the eager-build semantics and the pin a
-    probing guard returns, shared with :func:`replicated_volume_guard`."""
+    case fits the budget the probe is skipped entirely and the input
+    comes back as ``(input, None)``, so small-SF correctness gates and
+    the sf0.1 bench pay nothing. ``bytes_per_pair`` defaults to 12 —
+    the measured sf100 shuffle write was ~9.7 B/pair (50 GB / 5.14 B
+    pairs) plus dedup-stage headroom. See :func:`_volume_guard` for the
+    eager-build semantics and the pin a probing guard returns, shared
+    with :func:`replicated_volume_guard`."""
     def msg(pairs: int, projected: int, budget: int) -> str:
         return (
             f"pair_volume_guard: projected {pairs:,} candidate-pair rows "
             f"(Σ C(bucket,2) over {'/'.join(bucket_cols)}) ≈ "
             f"{projected / 1e9:.1f} GB at {bytes_per_pair} B/pair > budget "
             f"{budget / 1e9:.1f} GB. This op is output-bound on this corpus "
-            f"— run with spark.welearn.pairGuard.mode=sample (row-budget "
-            f"member sampling; NOTE: sampled output diverges from the "
-            f"registered DuckDB oracles — only minhash_lsh_candidates_sampled "
-            f"models the keep arithmetic in SQL, which is why the registered "
-            f"non-sampled queries pin mode='fail'), raise "
-            f"spark.welearn.pairGuard.budget, or use the decision-only probe "
-            f"(incremental_near_dup_ids)."
+            f"— raise spark.welearn.pairGuard.budget, member-sample with "
+            f"pair_volume_guard(sample=True) as minhash_lsh_candidates_sampled "
+            f"does (its output is a subset of the full pair set), or use the "
+            f"decision-only probe (incremental_near_dup_ids)."
         )
 
     import math
 
-    out = _volume_guard(
+    return _volume_guard(
         bucketed,
         bucket_cols,
         id_col,
         probe_expr=F.sum(F.col("__c") * (F.col("__c") - 1) / 2),
         unit_bytes=bytes_per_pair,
-        # pair volume ∝ 1/keep², so ceil(sqrt(den)) bounds it to ≤ budget
-        keep_fn=lambda den: math.isqrt(den - 1) + 1,
         fail_msg=msg,
-        log_label="pair_volume_guard",
         worst_case_units=worst_case_pairs,
         budget_bytes=budget_bytes,
-        mode=mode,
+        # pair volume ∝ 1/keep², so ceil(sqrt(den)) bounds it to ≤ budget
+        sample_keep=(lambda den: math.isqrt(den - 1) + 1) if sample else None,
     )
-    return out if with_stats else out[0]
 
 
 def replicated_volume_guard(
@@ -628,9 +543,7 @@ def replicated_volume_guard(
     bytes_per_row: int = REPL_GUARD_BYTES_PER_ROW,
     worst_case_rows: int | None = None,
     budget_bytes: int | None = None,
-    mode: str | None = None,
-    with_stats: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, int | None]:
     """Pre-flight disk gate for CHUNK-SPLIT self-joins (simhash's
     shape, and semantic dedup's) — the sibling of
     :func:`pair_volume_guard` with the correct cost model for ops
@@ -663,12 +576,10 @@ def replicated_volume_guard(
     exchange carries Σ_buckets c·(s+1) rows ≈ 2·ΣC(c,2)/chunk_target
     at the hot-bucket limit. The probe aggregates exactly that.
 
-    Sampling note: replicated volume is ~LINEAR in kept members (each
-    member's replication factor shrinks with its bucket, making 1/keep
-    conservative), so the sample branch uses keep = den, not
-    ceil(sqrt(den)) as the quadratic pair guard does. See
-    :func:`_volume_guard` for the eager-build semantics and the pin a
-    probing guard returns."""
+    Over budget it raises; it never samples (no caller's output may be
+    a subset). Returns ``(frame, max_bucket)`` as
+    :func:`pair_volume_guard` does; see :func:`_volume_guard` for the
+    eager-build semantics and the pin a probing guard returns."""
     def msg(rows: int, projected: int, budget: int) -> str:
         return (
             f"replicated_volume_guard: projected {rows:,} replicated "
@@ -676,14 +587,10 @@ def replicated_volume_guard(
             f"{'/'.join(bucket_cols)}) ≈ {projected / 1e9:.1f} GB at "
             f"{bytes_per_row} B/row > budget {budget / 1e9:.1f} GB. The "
             f"chunk-split exchange itself exceeds the disk budget on this "
-            f"corpus — run with spark.welearn.pairGuard.mode=sample "
-            f"(member sampling at 1/den, linear volume model; NOTE: sampled "
-            f"output diverges from the registered DuckDB oracles, which is "
-            f"why registered queries pin mode='fail') or raise "
-            f"spark.welearn.pairGuard.budget."
+            f"corpus — raise spark.welearn.pairGuard.budget."
         )
 
-    out = _volume_guard(
+    return _volume_guard(
         bucketed,
         bucket_cols,
         id_col,
@@ -691,14 +598,10 @@ def replicated_volume_guard(
             F.col("__c") * (F.ceil(F.col("__c") / chunk_target) + F.lit(1))
         ),
         unit_bytes=bytes_per_row,
-        keep_fn=lambda den: den,
         fail_msg=msg,
-        log_label="replicated_volume_guard",
         worst_case_units=worst_case_rows,
         budget_bytes=budget_bytes,
-        mode=mode,
     )
-    return out if with_stats else out[0]
 
 
 def lsh_candidates(
@@ -895,7 +798,7 @@ def bucket_pairs(
     Two plans, one contract:
 
     - ``max_bucket`` ≤ ``chunk_target`` — a volume guard's certificate
-      (:attr:`GuardStats.certified_max_bucket`) that no bucket is large
+      (the ``max_bucket`` a guard's probe returns) that no bucket is large
       enough to matter: the plain bucket self-join. No count window,
       no chunk explodes, no chunk-pair repartitions (round 14: the
       chunk split's +19–43% toy-SF cost, reclaimed whenever the probe
@@ -1003,7 +906,6 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     chunk_target: int = 256,
     n_docs: int | None = None,
-    guard_mode: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance ≤ max_hamming,
     found WITHOUT a quadratic comparison: split the fingerprint into
@@ -1021,7 +923,12 @@ def simhash_near_pairs(
     qualifying pair shares every band where its XOR's band value is
     zero; emitting it only from the first such band makes each pair
     globally unique by construction, so no dropDuplicates re-shuffle
-    of the (large, near-quadratic) pair stream is needed."""
+    of the (large, near-quadratic) pair stream is needed.
+
+    The replicated-row guard in front of the pairing raises
+    :class:`PairVolumeExceeded` when the chunk-split exchange would
+    exceed the disk budget; the pair set is exact or refused, never
+    sampled."""
     assert max_hamming < n_bands, "banding is only exact for max_hamming < n_bands"
     # checked before the guard, whose replicated-row model divides by it
     assert chunk_target >= 1, "chunk_target must be a positive chunk size"
@@ -1055,20 +962,18 @@ def simhash_near_pairs(
         if n_docs is None
         else n_bands * n_docs * (-(-n_docs // chunk_target) + 1)
     )
-    banded, gstats = replicated_volume_guard(
+    banded, max_bucket = replicated_volume_guard(
         banded,
         ["band", "band_key"],
         id_col,
         chunk_target=chunk_target,
         worst_case_rows=worst_rows,
-        mode=guard_mode,
-        with_stats=True,
     )
     # pin the banded frame in front of the chunk-split join (r15, same
     # reason as lsh_candidates: the split's two sides would otherwise
     # each carry the tokenize→per-bit agg→fingerprint→band upstream),
     # unless the guard's probe passed and returned its own pin
-    if gstats.certified_max_bucket is None:
+    if max_bucket is None:
         banded = banded.localCheckpoint(eager=True)
 
     def keep(x, y):
@@ -1088,7 +993,7 @@ def simhash_near_pairs(
         id_col,
         ["simhash"],
         keep=keep,
-        max_bucket=gstats.certified_max_bucket,
+        max_bucket=max_bucket,
         chunk_target=chunk_target,
     )
     return pairs.select(

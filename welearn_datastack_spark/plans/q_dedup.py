@@ -184,11 +184,9 @@ def _register_jaccard(name: str, hashed_keys: bool, doc: str) -> None:
         sh = word_shingles(docs, "doc_id", "text", n=3)
         if hashed_keys:
             sh = hashed_shingles(sh, "doc_id")
-        # guard_mode pinned: this query's oracle does not model member
-        # sampling, so a session-level mode=sample must not apply here
-        return jaccard_pairs(
-            sh, "doc_id", threshold=0.15, guard_mode="fail"
-        ).withColumn("sample_den", F.lit(den).cast("int"))
+        return jaccard_pairs(sh, "doc_id", threshold=0.15).withColumn(
+            "sample_den", F.lit(den).cast("int")
+        )
 
     build.__name__ = f"{name}_q"
     register(name, _JACCARD_ORACLE, doc=doc)(build)
@@ -303,9 +301,9 @@ def _register_minhash(
     candidate-pair query. ``narrow_keys`` takes the gated 8-byte-key
     pipeline (cross-engine hashed trigram shingles → prehashed minhash
     signatures → long band keys) instead of string shingles and md5
-    band keys; ``sampled`` runs the pair-volume guard in
-    mode='sample' under a fixed tiny budget instead of the full-set
-    mode='fail' with its free worst-case hint."""
+    band keys; ``sampled`` lets the pair-volume guard member-sample
+    under a fixed tiny budget instead of raising over budget with its
+    free worst-case hint."""
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _docs(spark, sf_dir)
@@ -315,10 +313,7 @@ def _register_minhash(
                 cross_engine=True,
             )
             sigs = minhash_signatures(sh, "doc_id", n_hashes=8, prehashed=True)
-            bands = lsh_band_keys(
-                sigs, "doc_id", rows_per_band=2, long_keys=True,
-                cross_engine=True,
-            )
+            bands = lsh_band_keys(sigs, "doc_id", rows_per_band=2, long_keys=True)
         else:
             sh = word_shingles(docs, "doc_id", "text", n=3)
             sigs = minhash_signatures(sh, "doc_id", n_hashes=8)
@@ -327,23 +322,15 @@ def _register_minhash(
             # the probe ALWAYS executes here (600 B budget); it pins
             # the band frame it measures, so the minhash pipeline is
             # computed once, not twice (round-12 ADVICE)
-            guard = dict(budget_bytes=_SAMPLED_PAIR_BUDGET_BYTES, mode="sample")
+            guard = dict(budget_bytes=_SAMPLED_PAIR_BUDGET_BYTES, sample=True)
         else:
-            guard = dict(
-                worst_case_pairs=_minhash_worst_case_pairs(docs, n_bands=4),
-                # pinned: this query's oracle is the FULL candidate set —
-                # a session-level mode=sample would silently break hash
-                # parity (the sampled doctrine lives in the _sampled row)
-                mode="fail",
-            )
-        bands, gstats = pair_volume_guard(
-            bands, ["band", "band_key"], "doc_id", with_stats=True, **guard
+            guard = dict(worst_case_pairs=_minhash_worst_case_pairs(docs, n_bands=4))
+        bands, max_bucket = pair_volume_guard(
+            bands, ["band", "band_key"], "doc_id", **guard
         )
         # a probe that passed returned its pin; any other branch leaves
         # lsh_candidates to pin
-        return lsh_candidates(
-            bands, "doc_id", pinned=gstats.certified_max_bucket is not None
-        )
+        return lsh_candidates(bands, "doc_id", pinned=max_bucket is not None)
 
     build.__name__ = f"{name}_q"
     register(name, sql, doc=doc)(build)
@@ -372,11 +359,8 @@ _register_minhash(
     "longs replace shingle strings before the signature aggregation "
     "AND 8-byte band keys replace 32-char md5 strings in the "
     "band-bucket exchange — the two dedup-pipeline shuffles at "
-    "100 TB. Keys here are the cross-engine hexint (md5-derived) so "
-    "the full hash gate applies; production would flip "
-    "cross_engine=False for builtin xxhash64 keys (same shape, same "
-    "widths, no md5 round — equivalence-tested against the string "
-    "path in tests).",
+    "100 TB. Keys are the cross-engine hexint (md5-derived), so the "
+    "full hash gate applies.",
 )
 
 _register_minhash(
@@ -387,8 +371,8 @@ _register_minhash(
     doc="The pair-volume guard's SAMPLE fallback as a first-class "
     "hash-gated query (round 12, closing the loop on the round-11 "
     "sf100 disk-death finding): the same minhash/banding pipeline as "
-    "minhash_lsh_candidates, but pair_volume_guard runs in "
-    "mode='sample' under a deliberately tiny fixed budget (600 B) so "
+    "minhash_lsh_candidates, but pair_volume_guard runs with "
+    "sample=True under a deliberately tiny fixed budget (600 B) so "
     "the row-budget member-sampling doctrine ENGAGES at every driver "
     "SF — bucket members are kept at hexint(doc_id) % keep == 0 with "
     "keep = ceil(sqrt(ceil(12·ΣC(c,2)/budget))), bounding materialized "
@@ -508,11 +492,7 @@ def _register_recall(name: str, n_hashes: int, rows_per_band: int, doc: str) -> 
         # plan (control 1.28–1.42×) — on the row-budget sample the
         # duplicate subtrees run concurrently on idle cores.
         sh = word_shingles(docs, "doc_id", "text", n=3)
-        # guard_mode pinned: the recall oracle models the full truth
-        # pair set, not a sampled one
-        pc = jaccard_pairs(
-            sh, "doc_id", threshold=0.0, with_counts=True, guard_mode="fail"
-        )
+        pc = jaccard_pairs(sh, "doc_id", threshold=0.0, with_counts=True)
         truth = pc.select(
             "a_id",
             "b_id",
@@ -1133,11 +1113,8 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     fp = simhash(docs, "doc_id", "text", bits=16)
-    # guard_mode pinned: the oracle is the full near-pair set — a
-    # session-level mode=sample must not silently subset it
     return simhash_near_pairs(
-        fp, "doc_id", bits=16, n_bands=4, max_hamming=3, n_docs=docs.count(),
-        guard_mode="fail",
+        fp, "doc_id", bits=16, n_bands=4, max_hamming=3, n_docs=docs.count()
     )
 
 

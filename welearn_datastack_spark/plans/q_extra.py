@@ -1376,16 +1376,13 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~320 B/row), and the everyone-in-one-bucket worst case
     # n·(ceil(n/256)+1) rows is free from the sizing count — so up
     # to sf0.1 at least the probe is skipped and costs nothing
-    tagged, gstats = replicated_volume_guard(
+    tagged, max_bucket = replicated_volume_guard(
         tagged,
         ["bucket"],
         "vec_id",
         chunk_target=256,
         bytes_per_row=320,
         worst_case_rows=n * (-(-n // 256) + 1),
-        # pinned: the oracle does not model member sampling
-        mode="fail",
-        with_stats=True,
     )
     pairs = bucket_pairs(
         tagged,
@@ -1394,7 +1391,7 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["embedding"],
         # symmetric: cosine's dot and norm product commute exactly
         keep=lambda x, y: F.round(cosine(x("embedding"), y("embedding")), 6) >= 0.30,
-        max_bucket=gstats.certified_max_bucket,
+        max_bucket=max_bucket,
         chunk_target=256,
     )
     return pairs.select(

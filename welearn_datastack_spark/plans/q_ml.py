@@ -886,20 +886,16 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows — at the driver SFs and sf0.1 that fits any real budget, so
     # the probe is skipped and the gates/bench pay nothing; on a
     # degenerate assignment at corpus scale the guard fails fast with
-    # the measured projection or member-samples under mode='sample'.
-    mem, gstats = replicated_volume_guard(
+    # the measured projection. When the probe DOES execute (worst-case
+    # hint missed the budget) it pins the linear mem frame, so probe
+    # and real run share one quantizer/assignment computation.
+    mem, max_bucket = replicated_volume_guard(
         mem,
         ["cent_id"],
         "vec_id",
         chunk_target=256,
         bytes_per_row=320,
         worst_case_rows=n * (-(-n // 256) + 1),
-        # pinned: this query's oracle does not model member sampling
-        # (round-13 ADVICE); when the probe DOES execute (worst-case
-        # hint missed the budget) it pins the linear mem frame, so
-        # probe and real run share one quantizer/assignment computation
-        mode="fail",
-        with_stats=True,
     )
     pairs = bucket_pairs(
         mem,
@@ -910,7 +906,7 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep=lambda x, y: F.round(
             dot(x("embedding"), y("embedding")) / (x("nrm") * y("nrm")), 6
         ) >= F.lit(_SEMDEDUP_TAU),
-        max_bucket=gstats.certified_max_bucket,
+        max_bucket=max_bucket,
         chunk_target=256,
     )
     dup = (
